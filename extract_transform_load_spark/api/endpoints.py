@@ -27,6 +27,7 @@ from ..functions.timewin import period_filter
 from ..operators.latest import latest_per_key
 from ..operators.pagination import keyset_page, paginate
 from ..schemas import AMOUNT
+from ..sources.tables import literal_row
 
 Tables = dict[str, DataFrame]
 SIGNED = "decimal(38,0)"
@@ -172,9 +173,11 @@ def earnings(tables: Tables, **_: Any) -> DataFrame:
 
 
 def _latest_snapshot(df: DataFrame, ts_col: str) -> DataFrame:
-    """All rows of the latest shared snapshot round (`ls_state.rs:200-221`)."""
-    mx = df.agg(F.max(ts_col).alias("__mx"))
-    return df.crossJoin(F.broadcast(mx)).filter(F.col(ts_col) == F.col("__mx")).drop("__mx")
+    """All rows of the latest shared snapshot round (`ls_state.rs:200-221`):
+    a filter against the scalar subquery ``max(ts)``, the reference's
+    ``WHERE ts = (SELECT MAX(ts) ...)``. The subquery runs once per
+    query and needs no join."""
+    return df.filter(F.col(ts_col) == df.select(F.max(ts_col)).scalar())
 
 
 @endpoint("metrics/tvl")
@@ -275,7 +278,8 @@ def realized_pnl_stats(tables: Tables, **_: Any) -> DataFrame:
     return lc.agg(
         n.alias("n_closed"),
         wins.alias("n_wins"),
-        (wins.cast("double") / n).alias("win_rate"),
+        # null, not DIVIDE_BY_ZERO, when nothing has closed
+        F.try_divide(wins.cast("double"), n).alias("win_rate"),
         F.max("LS_pnl").alias("best_pnl"),
         F.min("LS_pnl").alias("worst_pnl"),
     )
@@ -381,7 +385,8 @@ def lease_value_stats(tables: Tables, **_: Any) -> DataFrame:
     n = F.count(F.lit(1))
     return latest.agg(
         n.alias("n"),
-        (F.sum("LS_amnt_stable").cast("double") / n).alias("avg_value"),
+        # null, not DIVIDE_BY_ZERO, when no lease is open
+        F.try_divide(F.sum("LS_amnt_stable").cast("double"), n).alias("avg_value"),
         F.max("LS_amnt_stable").alias("max_value"),
         F.min("LS_amnt_stable").alias("min_value"),
     )
@@ -745,16 +750,21 @@ def historical_lenders(tables: Tables, **_: Any) -> DataFrame:
 
 @endpoint("misc/history-stats")
 def history_stats(tables: Tables, **_: Any) -> DataFrame:
-    """Cross-table activity summary (`misc.rs:202`)."""
-    spark = tables["LS_Opening"].sparkSession
-    counts = {
-        "n_leases": tables["LS_Opening"].count(),
-        "n_repayments": tables["LS_Repayment"].count(),
-        "n_liquidations": tables["LS_Liquidation"].count(),
-        "n_deposits": tables["LP_Deposit"].count(),
-        "n_withdrawals": tables["LP_Withdraw"].count(),
+    """Cross-table activity summary (`misc.rs:202`): the five row counts
+    as one lazy aggregate over a union of the tables, each row tagged
+    with the count it feeds (the scans read no columns)."""
+    sources = {
+        "n_leases": "LS_Opening",
+        "n_repayments": "LS_Repayment",
+        "n_liquidations": "LS_Liquidation",
+        "n_deposits": "LP_Deposit",
+        "n_withdrawals": "LP_Withdraw",
     }
-    return spark.createDataFrame([tuple(counts.values())], ", ".join(f"{k} long" for k in counts))
+    tagged = [tables[t].select(F.lit(k).alias("__src")) for k, t in sources.items()]
+    u = tagged[0]
+    for p in tagged[1:]:
+        u = u.unionByName(p)
+    return u.agg(*[F.count(F.when(F.col("__src") == k, 1)).alias(k) for k in sources])
 
 
 # ---------------------------------------------------------------------------
@@ -833,8 +843,10 @@ def test_push(
 
     ptype, body = test_push_data(push_type)
     s = tables["subscription"]
-    one = s.sparkSession.createDataFrame(
-        [(address, ptype, body)], "address string, push_type string, body string"
+    one = literal_row(
+        s.sparkSession,
+        "address string, push_type string, body string",
+        (address, ptype, body),
     )
     return notification_outbox(one, s)
 
@@ -848,21 +860,19 @@ def version(tables: Tables, **_: Any) -> DataFrame:
     remain serving/push concerns, out of engine scope per SURVEY)."""
     from importlib.metadata import PackageNotFoundError, version as _pkg_version
 
-    spark = next(iter(tables.values())).sparkSession if tables else None
+    from pyspark.sql import SparkSession
+
     try:
         eng = _pkg_version("extract-transform-load-spark")
     except PackageNotFoundError:
         eng = "0.dev"
-    rows = [(eng, spark.version if spark else "unknown")]
-    from pyspark.sql import SparkSession
-
-    s = spark or SparkSession.getActiveSession()
+    s = next(iter(tables.values())).sparkSession if tables else SparkSession.getActiveSession()
     if s is None:
-        # empty tables dict AND no active session: s.createDataFrame
+        # empty tables dict AND no active session: building the row
         # would be an opaque AttributeError (ADVICE r9) — name the
         # actual contract instead
         raise RuntimeError(
             "version endpoint needs a SparkSession: pass a non-empty "
             "tables dict or call inside an active session"
         )
-    return s.createDataFrame(rows, "version string, spark_version string")
+    return literal_row(s, "version string, spark_version string", (eng, s.version))

@@ -301,7 +301,20 @@ def score_hashed_from_state(
     triggering Spark's precision-loss scale reduction at 49), each
     product is exact, and the decimal sum is order-free. Docs with no
     feature rows (null text) are absent, exactly as the groupBy over
-    zero exploded rows leaves them absent."""
+    zero exploded rows leaves them absent.
+
+    ``weights`` must be dense: one row per bucket in [0, n_buckets), as
+    the learners return it. ``n_features`` counts every occurrence, while
+    the reference form's inner join counts only occurrences whose bucket
+    has a weight, so a filtered weights frame would make the two forms
+    disagree. Its row count is checked eagerly (one job) and a mismatch
+    raises ``ValueError``."""
+    n_weights = weights.count()
+    if n_weights != n_buckets:
+        raise ValueError(
+            f"score_hashed_from_state needs dense weights: expected "
+            f"{n_buckets} rows (one per bucket), got {n_weights}"
+        )
     occ = state.select(
         F.col(id_col),
         F.col("__nf"),

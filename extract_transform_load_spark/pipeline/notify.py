@@ -41,6 +41,8 @@ from collections.abc import Callable, Iterator
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ..sources.tables import literal_row
+
 #: level -> PUSH_TYPES (types/push.rs:138-147).
 _LEVEL_TYPES = {1: "Funding", 2: "FundingRecommended", 3: "FundNow"}
 
@@ -278,14 +280,16 @@ def apply_subscription(
         return new_state, ("Subscribed" if new_active else "Unsubscribed")
     # build the insert row against the INPUT schema so request-context
     # extras (expiration/ip/user_agent, V001:346-356) pass through as
-    # NULL instead of breaking the union
+    # NULL instead of breaking the union; a plan-only literal row, so
+    # the insert needs no Python worker
     vals = {f.name: None for f in subscriptions.schema.fields}
     vals.update(
         address=address, endpoint=endpoint, p256dh=p256dh, auth=auth, active=True
     )
-    fresh = spark.createDataFrame(
-        [tuple(vals[f.name] for f in subscriptions.schema.fields)],
+    fresh = literal_row(
+        spark,
         subscriptions.schema,
+        tuple(vals[f.name] for f in subscriptions.schema.fields),
     )
     new_state = subscriptions.withColumn(
         "active", F.when(same_auth_other, F.lit(False)).otherwise(F.col("active"))

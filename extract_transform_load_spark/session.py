@@ -10,6 +10,21 @@ runtime knobs that matter at 100 TB and keeps semantics deterministic:
 - shuffle partitions sized from the local core count for tests; on a
   real cluster override via ``spark.sql.shuffle.partitions`` (AQE
   coalesces down from a deliberately-high initial number).
+- a generated-code cache that holds the serving working set
+  (:data:`CODEGEN_CACHE_ENTRIES`).
+
+Generated-code cache: Spark compiles each distinct whole-stage and
+expression class with Janino and keeps at most
+``spark.sql.codegen.cache.maxEntries`` of them (default 100). One sweep
+over the 56 API endpoints compiles about 295 distinct classes and one
+pass of the six benchmark analytics queries another 310-330, about 630
+together (counted with ``CodegenMetrics.METRIC_COMPILATION_TIME`` in a
+session whose cache never evicts). At 100 entries every sweep evicts
+and recompiles nearly all of them (290-320 compiles per sweep); at 1000
+a repeated sweep compiles only the 25 or so classes whose code inlines
+a per-request literal, such as a now-anchored ``?period=`` window.
+This is a static conf: it takes effect only in sessions built here.
+``tune_for_session`` cannot set it on a session the driver hands in.
 """
 
 from __future__ import annotations
@@ -17,6 +32,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+#: ``spark.sql.codegen.cache.maxEntries``: the ~630 classes of a serve
+#: sweep plus an analytics pass, with headroom (see module docstring).
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def default_parallelism() -> int:
@@ -61,6 +81,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", default_driver_memory())
     )
     for k, v in (extra_conf or {}).items():
@@ -73,7 +94,9 @@ def tune_for_session(spark: SparkSession) -> SparkSession:
 
     The driver hands us its own SparkSession for ``queries()``; static
     configs (memory, master) are fixed by then, but SQL confs are not.
-    UTC matters for timestamp parity with the DuckDB oracle.
+    UTC matters for timestamp parity with the DuckDB oracle. The
+    generated-code cache size is static too, so such a session keeps
+    the size it was built with (Spark's default: 100 entries).
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     for k, v in (

@@ -2641,6 +2641,27 @@ def test_fused_doc_state_replays_learn_score_and_stages_byte_identical(spark, do
     assert rep_a == rep_b
 
 
+def test_score_hashed_from_state_rejects_sparse_weights(spark):
+    """score_hashed_from_state counts every feature occurrence, so it
+    only agrees with score_hashed on dense weights: a filtered weights
+    frame must raise, not score silently."""
+    from extract_transform_load_spark.operators.quality_model import (
+        featurized_doc_state,
+        learn_log_odds_from_state,
+        score_hashed_from_state,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "a b a", "src0"), (2, "c d", "srcX")],
+        "doc_id long, text string, source string",
+    )
+    state = featurized_doc_state(docs, F.col("source") == "src0")
+    weights = learn_log_odds_from_state(state)
+    assert score_hashed_from_state(state, weights).count() == 2
+    with pytest.raises(ValueError, match="dense weights"):
+        score_hashed_from_state(state, weights.filter(F.col("bucket") < 128))
+
+
 def test_semantic_delta_arrow_engine_byte_equals_expression(spark, emb):
     """The r12 size-dispatched Arrow cosine stage: semantic_delta with
     cos_engine='arrow' must return byte-identical rows to the
