@@ -548,7 +548,6 @@ def semantic_delta(
     lsh_seed: int = 7,
     ivf_centroids: int = 16,
     ivf_probe: int = 2,
-    cos_engine: str = "expr",
 ) -> DataFrame:
     """Semantic (embedding-space) incremental dedup — the third member
     of the delta family (exact = ``dedup_delta_exact`` fingerprints,
@@ -609,27 +608,6 @@ def semantic_delta(
     (the streaming ``semantic_sink`` calls this per microbatch) would
     otherwise accrete one pinned frame per batch until executor storage
     evicts (r8 judge find).
-
-    ``cos_engine`` (r12; VERDICT r11 task 3 — resolved as a MEASURED
-    NEGATIVE): how candidate-pair cosines are computed. ``"expr"``
-    (default) is the JVM expression form — one interpreted O(dim) fold
-    per pair (``aggregate``/``zip_with`` never enter codegen).
-    ``"arrow"`` scores each Arrow batch of pairs with one vectorized
-    fold-exact pass (``similarity.arrow_pair_cos``), byte-identical by
-    test. The planned size dispatch was measured and REJECTED: at the
-    adversarial 50k-delta x 200k-store dup-heavy scale
-    (scripts/bench_arrow_cos_crossover.py, plus a 3x interleaved
-    confirmation) the kernel loses ~40% (expr 78.3 s vs arrow 112.8 s
-    best) exactly where it was supposed to win — both engines are
-    linear in the pair count, and shipping two vectors per PAIR across
-    Arrow costs more than the interpreted fold at every size. The
-    winning Arrow shape is the q63 probe-batch matmul (no per-pair
-    traffic), not a pair-stream stage; ``"arrow"`` stays as an
-    explicitly-requested audit engine so the negative is reproducible.
-    One edge divergence, same as the q63 kernel's documented one: a
-    ZERO-NORM vector makes the expression form's double division abort
-    under ANSI, while the kernel yields IEEE NaN — strictly more
-    defined.
     """
     from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
@@ -644,11 +622,6 @@ def semantic_delta(
             "the store sentinel node is -1 and must sort below every real id"
         )
     _check_nonnegative_ids(delta_vecs, id_col, "semantic_delta")
-    if cos_engine not in ("expr", "arrow"):
-        raise ValueError(
-            f"cos_engine must be 'expr' or 'arrow', got {cos_engine!r}"
-        )
-    use_arrow = cos_engine == "arrow"
     if prefilter not in _PREFILTERS:
         raise ValueError(
             f"prefilter must be one of {_PREFILTERS}, got {prefilter!r}"
@@ -744,16 +717,9 @@ def semantic_delta(
         cand = s.crossJoin(F.broadcast(d_b))
         for c in blocks:
             cand = cand.filter(F.col(c) == F.col(f"__d_{c}"))
-    if use_arrow:
-        from .similarity import arrow_pair_cos
-
-        scored_store = arrow_pair_cos(
-            cand, "__sv", "__dv", "__sn", "__dn", ["__did"], "__cos"
-        ).select(F.col("__did").alias(id_col), "__cos")
-    else:
-        scored_store = cand.select(
-            F.col("__did").alias(id_col), cos_store.alias("__cos")
-        )
+    scored_store = cand.select(
+        F.col("__did").alias(id_col), cos_store.alias("__cos")
+    )
     sims = scored_store.groupBy(id_col).agg(F.max("__cos").alias("max_store_sim"))
     # sims feeds BOTH the store-hit edges (materialized eagerly inside
     # the components pass) and the final left join — without a persist
@@ -792,21 +758,6 @@ def semantic_delta(
             pre_pairs = a.join(b, bucket_keys).filter(
                 F.col("doc_a") < F.col("doc_b")
             )
-            if use_arrow:
-                from .similarity import arrow_pair_cos
-
-                batch_pairs = (
-                    arrow_pair_cos(
-                        pre_pairs, "__va", "__vb", "__na", "__nb",
-                        ["doc_a", "doc_b"], "__bcos",
-                    )
-                    .filter(F.col("__bcos") >= threshold)
-                    .select("doc_a", "doc_b")
-                )
-            else:
-                batch_pairs = pre_pairs.filter(cos_batch >= threshold).select(
-                    "doc_a", "doc_b"
-                )
         else:
             a = d.select(
                 F.col(id_col).alias("doc_a"),
@@ -823,21 +774,9 @@ def semantic_delta(
             pre_pairs = (
                 a.join(b, blocks) if blocks else a.crossJoin(b)
             ).filter(F.col("doc_a") < F.col("doc_b"))
-            if use_arrow:
-                from .similarity import arrow_pair_cos
-
-                batch_pairs = (
-                    arrow_pair_cos(
-                        pre_pairs, "__va", "__vb", "__na", "__nb",
-                        ["doc_a", "doc_b"], "__bcos",
-                    )
-                    .filter(F.col("__bcos") >= threshold)
-                    .select("doc_a", "doc_b")
-                )
-            else:
-                batch_pairs = pre_pairs.filter(cos_batch >= threshold).select(
-                    "doc_a", "doc_b"
-                )
+        batch_pairs = pre_pairs.filter(cos_batch >= threshold).select(
+            "doc_a", "doc_b"
+        )
         store_hits = (
             sims.filter(F.col("max_store_sim") >= threshold)
             .select(

@@ -8,30 +8,29 @@ hash-partitioned shuffle so the plan scales linearly with corpus size:
   the canonical map-side-combine groupBy.
 - ``ngram_jaccard_pairs``  : exact word-shingle Jaccard via an inverted
   index self-join (shingle → doc list). SQL-expressible → oracle-checked.
-- ``minhash_lsh_pairs``    : MinHash signatures (vectorized numpy via
-  mapInPandas — Arrow batches, no per-row Python) banded into LSH
-  buckets; candidate pairs verified by signature similarity. The scale
-  path: candidate generation touches only bucket-colliding docs instead
-  of all pairs sharing any shingle.
-- ``simhash_64``           : 64-bit SimHash signatures; near-dup pairs =
-  equal band keys (4×16-bit bands ⇒ finds all pairs within Hamming
-  distance 3 across some band… probabilistically; exact verification by
-  popcount on the XOR).
+- ``minhash_lsh_pairs``    : MinHash signatures (xxhash64 family,
+  fully JVM-side) banded into LSH buckets; candidate pairs verified by
+  signature similarity, or exactly by ``minhash_lsh_verified_pairs``.
+  The scale path: candidate generation touches only bucket-colliding
+  docs instead of all pairs sharing any shingle.
+- ``simhash_pairs_portable``: 60-bit md5-derived SimHash signatures;
+  near-dup pairs = equal band keys (6×10-bit bands ⇒ every pair within
+  Hamming distance 5 shares some band), verified by popcount on the XOR.
 
-MinHash/SimHash use deterministic seed-derived hash mixing (splitmix64)
-so results are reproducible run-to-run and machine-to-machine.
+Both hash families are deterministic functions of the text, so results
+are reproducible run-to-run and machine-to-machine, and an SQL engine
+replaying them produces the identical pair set.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from .textops import fingerprint, normalized, word_shingles, words
+from .textops import fingerprint, word_shingles, words
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -223,31 +222,6 @@ def prefix_jaccard_pairs(
 
 
 # ---------------------------------------------------------------------------
-# Deterministic 64-bit mixing (splitmix64) — shared by MinHash & SimHash
-# ---------------------------------------------------------------------------
-
-_MASK = np.uint64(0xFFFFFFFFFFFFFFFF)
-
-
-def _splitmix64(x: np.ndarray) -> np.ndarray:
-    x = (x + np.uint64(0x9E3779B97F4A7C15)) & _MASK
-    x = ((x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)) & _MASK
-    x = ((x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)) & _MASK
-    return x ^ (x >> np.uint64(31))
-
-
-def _token_hashes(tokens: list[str]) -> np.ndarray:
-    """Stable 64-bit hashes of tokens (FNV-1a over utf-8, then mixed)."""
-    out = np.empty(len(tokens), dtype=np.uint64)
-    for i, t in enumerate(tokens):
-        h = np.uint64(0xCBF29CE484222325)
-        for byte in t.encode("utf-8"):
-            h = ((h ^ np.uint64(byte)) * np.uint64(0x100000001B3)) & _MASK
-        out[i] = h
-    return _splitmix64(out)
-
-
-# ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
@@ -389,78 +363,6 @@ def minhash_lsh_pairs(
     )
 
 
-def minhash_lsh_pairs_bucketed(
-    docs: DataFrame,
-    num_hashes: int = 64,
-    bands: int = 16,
-    k: int = 3,
-    threshold: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_bucket_size: int = 1000,
-) -> DataFrame:
-    """:func:`minhash_lsh_pairs` with bucket-aggregation candidate generation.
-
-    Instead of self-joining the banded frame on (band, band_hash) — which
-    evaluates the signature pipeline TWICE (once per join side; Spark
-    does not share non-cached subplans) and shuffles the banded stream
-    twice — this groups each bucket's members into an array once and
-    explodes ordered pairs inside the bucket:
-
-        groupBy(band, band_hash) -> sort_array(collect_list(member))
-        -> posexplode + slice    -> each pair emitted exactly once
-
-    One signature computation, one shuffle of the banded stream. The
-    trade: a bucket's members must fit in one task's memory as an array
-    of (doc_id, 64-long signature) structs, so ``max_bucket_size`` is
-    mandatory here (default 1000 ≈ 0.5 MB/bucket) rather than optional —
-    which is also the right posture at 100 TB, where an uncapped
-    degenerate bucket is an OOM, not a slowdown. Members of a dropped
-    bucket still pair via their other bands, identical semantics to the
-    capped join path.
-    """
-    if num_hashes % bands:
-        raise ValueError("num_hashes must be divisible by bands")
-    r = num_hashes // bands
-    sigs = minhash_signatures(docs, num_hashes, k, text_col, id_col)
-
-    band_idx = F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band")
-    banded = sigs.select("doc_id", "signature", band_idx).select(
-        "doc_id",
-        "signature",
-        "band",
-        F.xxhash64(F.col("band"), F.slice("signature", F.col("band") * r + 1, r)).alias("band_hash"),
-    )
-    buckets = (
-        banded.groupBy("band", "band_hash")
-        .agg(F.sort_array(F.collect_list(F.struct("doc_id", "signature"))).alias("members"))
-        .filter((F.size("members") >= 2) & (F.size("members") <= max_bucket_size))
-    )
-    lefts = buckets.select(
-        F.posexplode("members").alias("pos", "a"),
-        F.col("members"),
-    )
-    cand = (
-        lefts.select(
-            "a",
-            F.explode(F.slice("members", F.col("pos") + 2, F.size("members"))).alias("b"),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.signature").alias("sig_a"),
-            F.col("b.signature").alias("sig_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    agree = F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v))
-    return (
-        cand.withColumn("est_jaccard", agree.cast("double") / F.lit(float(num_hashes)))
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("doc_a", "doc_b", "est_jaccard")
-    )
-
-
 def minhash_verify_state(
     docs: DataFrame,
     num_hashes: int = 64,
@@ -528,9 +430,14 @@ def minhash_lsh_verified_pairs(
     scan across both. The caller owns consistency of the state's
     parameters with this call's.
 
-    Candidates come from :func:`minhash_lsh_pairs_bucketed`'s banded
-    bucket-explode (signature-agreement filter OFF — verification
-    replaces it), then each candidate pair joins its two distinct-
+    Candidates come from a banded bucket-explode — groupBy(band,
+    band_hash) collects each bucket's sorted members once and
+    posexplode + slice emits each pair exactly once, so the signatures
+    are computed once and the banded stream shuffles once (a self-join
+    on the band key would plan both twice); ``max_bucket_size`` caps a
+    degenerate bucket's array, and its members still pair via their
+    other bands. There is no signature-agreement filter — verification
+    replaces it: each candidate pair joins its two distinct-
     shingle-hash sets and scores ``|A∩B| / |A∪B|`` exactly with
     ``array_intersect`` — no Python, no re-tokenize. Shingle sets ride
     as arrays of xxhash64 values (collision-free in practice), so the
@@ -599,93 +506,6 @@ def minhash_lsh_verified_pairs(
 # ---------------------------------------------------------------------------
 
 
-def simhash_signatures(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(doc_id, simhash int64) — 64-bit SimHash over word tokens.
-
-    NULL/empty/whitespace-only documents have no tokens and DROP OUT —
-    they cannot be near-duplicates under a token model (the same rule as
-    minhash_signatures and the portable SimHash flavor, so all three
-    pipelines agree on which docs participate). str() of a pandas NULL
-    would otherwise tokenize as the literal word 'none'."""
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bit_cols = np.arange(64, dtype=np.uint64)
-        for pdf in batches:
-            ids, hashes = [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                if text is None or (isinstance(text, float) and text != text):
-                    continue
-                toks = [t for t in str(text).lower().split(" ") if t]
-                if not toks:
-                    continue
-                th = _token_hashes(toks)  # (T,)
-                bits = (th[:, None] >> bit_cols[None, :]) & np.uint64(1)  # (T, 64)
-                votes = bits.astype(np.int64) * 2 - 1
-                sig_bits = (votes.sum(axis=0) > 0).astype(np.uint64)
-                sig = np.uint64(0)
-                for j in range(64):
-                    sig |= sig_bits[j] << np.uint64(j)
-                ids.append(did)
-                hashes.append(int(sig.astype(np.int64)))
-            yield pd.DataFrame({"doc_id": ids, "simhash": hashes})
-
-    return docs.select(id_col, text_col).mapInPandas(compute, schema="doc_id long, simhash long")
-
-
-def simhash_pairs(
-    docs: DataFrame,
-    max_hamming: int = 8,
-    n_bands: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Near-dup pairs by SimHash banding + exact Hamming verify.
-
-    By pigeonhole, any pair within Hamming distance ``n_bands - 1``
-    agrees exactly on at least one band, so banding is lossless up to
-    that distance; beyond it recall is probabilistic. More bands →
-    coarser band keys → bigger buckets: at 100 TB use fewer bands
-    (wider keys) and accept the tighter guaranteed radius.
-    """
-    if 64 % n_bands:
-        raise ValueError("n_bands must divide 64")
-    band_bits = 64 // n_bands
-    band_mask = (1 << band_bits) - 1
-    sigs = simhash_signatures(docs, text_col, id_col)
-    banded = sigs.select(
-        "doc_id",
-        "simhash",
-        F.explode(F.sequence(F.lit(0), F.lit(n_bands - 1))).alias("band"),
-    ).withColumn(
-        "band_key", F.expr(f"shiftrightunsigned(simhash, band * {band_bits}) & {band_mask}")
-    )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("sig_a"),
-            F.col("b.simhash").alias("sig_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
-    return (
-        cand.withColumn("hamming", hamming.cast("int"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
-    )
-
-
 SIMHASH_PORTABLE_BITS = 60  # 15 hex chars of md5 — fits BIGINT in any engine
 
 
@@ -699,9 +519,10 @@ def simhash_signatures_portable(
     conv-from-md5 trick as sampling.hash_split), so ANY engine with md5
     reproduces the identical signature — which is what lets q43 carry a
     complete SQL oracle (signatures + banding + verify replicated in
-    DuckDB) instead of a rows-only check. Differs from
-    :func:`simhash_signatures` (64-bit FNV mapInPandas showcase) only in
-    the hash family; same votes-per-bit construction.
+    DuckDB) instead of a rows-only check. NULL, empty and
+    whitespace-only documents have no tokens and drop out — they cannot
+    be near-duplicates under a token model (the rule
+    :func:`minhash_signatures` follows too).
 
     Plan shape: explode tokens (multiset — duplicate tokens vote
     repeatedly, per the SimHash definition), one groupBy(doc) with 60
@@ -746,9 +567,12 @@ def simhash_pairs_portable(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """:func:`simhash_pairs` over the portable 60-bit signature.
+    """Near-dup pairs by SimHash banding + exact Hamming verify, over
+    the portable 60-bit signature.
 
-    6 bands × 10 bits: lossless to Hamming 5 by pigeonhole; beyond that
+    6 bands × 10 bits: lossless to Hamming 5 by pigeonhole (any pair
+    within Hamming ``n_bands - 1`` agrees on at least one band; fewer,
+    wider bands mean smaller buckets and a tighter radius); beyond that
     recall is the banding curve — but because the signature AND the
     banding are deterministic functions of the text, an oracle engine
     replaying the same construction produces the identical pair set,

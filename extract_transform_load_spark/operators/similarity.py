@@ -27,7 +27,14 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from .dedup import _splitmix64
+_MASK = np.uint64(0xFFFFFFFFFFFFFFFF)
+
+
+def _splitmix64(x: np.ndarray) -> np.ndarray:
+    x = (x + np.uint64(0x9E3779B97F4A7C15)) & _MASK
+    x = ((x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)) & _MASK
+    x = ((x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)) & _MASK
+    return x ^ (x >> np.uint64(31))
 
 
 def _dot(a, b):
@@ -49,113 +56,6 @@ def _norm(a):
 
 
 MAX_PROBE_BATCH = 10_000
-
-
-def arrow_pair_cos(
-    cand: DataFrame,
-    va: str,
-    vb: str,
-    na: str,
-    nb: str,
-    keep_cols: list,
-    out_col: str,
-) -> DataFrame:
-    """Score each candidate PAIR row's cosine in an Arrow kernel —
-    bitwise equal to the expression form ``_dot(va, vb) / (na * nb)``
-    (r12; guide §4.1-4.2, the size-dispatched stage VERDICT r11 task 3
-    asked for). The expression form pays one interpreted O(dim) fold
-    per pair (``aggregate``/``zip_with`` lambdas never enter codegen);
-    this stage stacks each Arrow batch's pairs per dimension group and
-    computes every dot in one vectorized cumsum pass — wins when the
-    candidate stream is large, loses two Python stage transitions at
-    fixture volumes (the r11 measured dead end), so callers dispatch on
-    a size signal (``semantic_delta(cos_engine=...)``).
-
-    Bitwise equivalence, mirrored from the q63 kernel's proof:
-    elementwise float64 products then a cumulative sum reproduce the
-    JVM fold order exactly (up to the sign of zero — Spark orders
-    -0.0 == 0.0); the final divide uses the SAME JVM-computed norm
-    doubles shipped on the row. Null semantics: Arrow conflates null
-    and NaN inside float arrays and in double columns, so the kernel
-    never infers nullness from values — the JVM ships
-    ``isnull(norm)`` flags per side (a null/null-element vector has a
-    null norm by construction), flagged pairs score null, and
-    length-mismatched pairs score null exactly like the padding
-    ``zip_with``. Genuine NaN elements flow through as NaN, matching
-    the JVM fold. NaN-vs-null crosses the boundary as the q63
-    (null, __isnan) pair and is restored JVM-side, so downstream
-    MAX/threshold semantics are unchanged.
-
-    ``keep_cols`` are passed through untouched; the input is projected
-    to exactly the needed columns before the Python boundary (§4.1).
-    """
-    sel = cand.select(
-        *keep_cols,
-        F.col(va).alias("__va"),
-        F.col(vb).alias("__vb"),
-        F.col(na).alias("__na"),
-        F.col(nb).alias("__nb"),
-        (F.isnull(F.col(na)) | F.isnull(F.col(nb))).alias("__nullcos"),
-    )
-    keep_fields = [f for f in sel.schema.fields if f.name in set(keep_cols)]
-    ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in keep_fields)
-    ddl += ", __cos double, __isnan boolean"
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            out = pdf[list(keep_cols)].copy() if n else pd.DataFrame(
-                {c: pd.Series([], dtype=object) for c in keep_cols}
-            )
-            if n == 0:
-                out["__cos"] = pd.Series([], dtype=np.float64)
-                out["__isnan"] = pd.Series([], dtype=bool)
-                yield out
-                continue
-            cos = np.full(n, np.nan, dtype=np.float64)
-            valid = np.zeros(n, dtype=bool)
-            nullcos = pdf["__nullcos"].to_numpy(dtype=bool)
-            vas = pdf["__va"].to_numpy(dtype=object)
-            vbs = pdf["__vb"].to_numpy(dtype=object)
-            nas = pdf["__na"].to_numpy(dtype=np.float64)
-            nbs = pdf["__nb"].to_numpy(dtype=np.float64)
-            # group pairs by (shared) dim so each group is ONE stacked
-            # cumsum; mismatched lengths stay invalid (null cosine,
-            # the padding zip_with's verdict)
-            lens_a = np.array(
-                [len(v) if v is not None else -1 for v in vas], dtype=np.int64
-            )
-            lens_b = np.array(
-                [len(v) if v is not None else -2 for v in vbs], dtype=np.int64
-            )
-            ok = (~nullcos) & (lens_a == lens_b)
-            for dim in np.unique(lens_a[ok]):
-                idx = np.nonzero(ok & (lens_a == dim))[0]
-                if dim == 0:
-                    d = np.zeros(len(idx), dtype=np.float64)
-                else:
-                    a = np.stack([np.asarray(vas[i], dtype=np.float64) for i in idx])
-                    b = np.stack([np.asarray(vbs[i], dtype=np.float64) for i in idx])
-                    d = _fold_dot(a, b)
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    cos[idx] = d / (nas[idx] * nbs[idx])
-                valid[idx] = True
-            isnan = valid & np.isnan(cos)
-            # pandas NaN crosses Arrow as NULL — right for the invalid
-            # (null-cosine) rows; the genuine-NaN rows are re-
-            # materialized JVM-side from __isnan
-            cos[~valid] = np.nan
-            out["__cos"] = cos
-            out["__isnan"] = isnan
-            yield out
-
-    raw = sel.mapInPandas(kernel, schema=ddl)
-    return raw.select(
-        *keep_cols,
-        F.when(F.col("__isnan"), F.lit(float("nan")))
-        .otherwise(F.col("__cos"))
-        .alias(out_col),
-    )
 
 
 def collect_probe_batch(

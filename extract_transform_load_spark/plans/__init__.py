@@ -22,216 +22,49 @@ from . import domain  # noqa: F401,E402
 # ---------------------------------------------------------------------------
 
 _PRIORITY = [
-    # ------------------------------------------------------------------
-    # Round 10 rotation (the r9 verdict's ranked tasks 1 and 7): eight
-    # queries whose ONLY driver-visible result was a stale round-1 FAIL
-    # (q34, q37, q38, q39, q50, q59, q60, q62 — all strict-gate green
-    # since round 2, re-verified by the judge's own 153/153 run in r9)
-    # rotate back through the window to earn a green CORRECTNESS row,
-    # and q149 (the shuffle-join PageRank engine — the 100 TB graph
-    # path) gets its birth-plus-one driver row. Displaced to make room
-    # (all stay strict-gate green past the window; per-slot rationale
-    # at each displacement comment below): q02, q04, q07 (the scan
-    # class keeps q05 — the densest multi-predicate paged witness — and
-    # q06), q08, q18, q19 (the B11-B20 aggregation class keeps q01 and
-    # GAINS three incoming aggregation rows: q50 rollup totals, q60
-    # approx-distinct MAU — the sketch twin of q18's exact MAU — and
-    # q62 approx percentiles), q27 (running-window physics stays
-    # driver-covered via q25 LEAD, q26 rank, plus incoming q38 frame
-    # aggregation and q39 LAG delta), q112 (pipeline family keeps q117,
-    # whose full-recompute oracle exercises the same snapshot machinery)
-    # and q128 (paragraph/span dedup keeps q101).
-    # ------------------------------------------------------------------
+    # One line per slot. Which query each rotation displaced, and why,
+    # is in git history and in the CORRECTNESS_rNN files.
     # §2.B distinct operator classes
     "q01_pricing_summary",      # B12 grouped SUM + B19 multi-sum
-    # q02_point_lookup (B0) / q04_search_paginated (B0a) /
-    # q07_ledger_summary (B0d) displaced in round 10 for the stale-FAIL
-    # rotation — the scan/filter class held FIVE in-window rows
-    # (q02/q04/q05/q06/q07, one verdict coverage row); q05 (the
-    # multi-predicate paged scan, the densest expression stack) and q06
-    # (bucketed MAX series) stay in-window, and all three displaced
-    # scans stay strict-gate green past the window.
     "q05_txs_filtered_paged",   # B0b multi-predicate paged scan
     "q06_minute_bucket_max",    # B0c bucketed MAX series
-    # q08_range_revenue (B11), q18_monthly_active_users (B13) and
-    # q19_value_stats (B14) displaced in round 10 — the B11-B20
-    # aggregation class keeps q01 and gains q50 (ROLLUP totals), q60
-    # (approx-distinct MAU: the same analytic question as q18 answered
-    # with the mergeable-sketch production shape) and q62 (approx
-    # percentiles: q19's stats surface via KLL). All three stay
-    # strict-gate green past the window.
-    # ------------------------------------------------------------------
-    # Round 12 rotation (the r11 verdict's ranked task 2, the
-    # "birth-plus-one discipline applied to rewrites"): the six queries
-    # whose round-11 REWRITES hold no driver CORRECTNESS row — q63 (the
-    # bitwise Arrow top-k kernel), q148/q151 (fused multi-pass linkage),
-    # q132/q137 (curation scan fusion + shared MinHash state), q161 (the
-    # new BM25 operator, bench-headlined since r11) — rotate in so the
-    # driver's own oracle pins the rewritten paths. Displaced to make
-    # room (all stay strict-gate green past the window): five of the
-    # NINE in-window B1-B9 join rows — q09 (anti), q10 (semi), q12
-    # (left+zero-fill), q13 (full outer), q14 (cross+scalar) — the
-    # fattest class in the window; join physics stays driver-owned via
-    # q11 (dim equi-join + rollup), q15 (as-of), q16 (range) and q17
-    # (multiway chain), and semi/anti shapes additionally ride in-window
-    # through q40 (dedup keep-list anti-join) and q125 (contamination
-    # semi-join coverage). Sixth slot: q62_approx_percentiles rotates
-    # back out — its r10 purpose (a green row on the driver ledger after
-    # the stale r1 FAIL) was served in CORRECTNESS_r10/r11, and the
-    # mergeable-sketch family keeps q97 in-window.
-    # ------------------------------------------------------------------
-    "q11_dim_join_rollup",      # B3
-    "q15_asof_join",            # B7
-    "q16_range_join",           # B8
-    "q17_multiway_chain",       # B9
-    # q20_weighted_avg (B15) displaced in round 9 for q144 — the r8
-    # verdict's ranked task 5 asked for a linkage-family driver row
-    # ("swap q142 or q144, the more novel incremental contract, into
-    # the 50-window"), naming the B11-B20 aggregation reps as the
-    # displacement pool. The weighted average is the thinnest member of
-    # that pool (sum(r*w)/sum(w), a one-expression composition whose
-    # grouped-aggregation physics stays driver-covered via q01/q19);
-    # q20 stays strict-gate green past the window.
-    # q22_conditional_agg (B17) displaced in round 8 for q131 — the
-    # judge's round-7 displacement shortlist named q22/q24 because the
-    # B11-B20 aggregation class held eight in-window rows; q24 made
-    # room for q127, q22 makes room for the curation capstone (a NEW
-    # family this round: q131/q132 + the streaming sink). Conditional
-    # when/otherwise aggregation stays driver-covered via q19/q13/q46,
-    # and q22 stays strict-gate green past the window.
-    # q23_first_in_group (B18) displaced in round 8 for q143 — PageRank
-    # gives the NEW iterative-graph family a driver CORRECTNESS row
-    # from birth (its oracle re-derives all 5 fixed-point rounds
-    # unrolled, the strongest cross-engine pin in the registry).
-    # First-in-group stays driver-covered via q26_latest_per_key (the
-    # same top-1-per-group physical shape: rank-within-partition,
-    # WindowGroupLimit), and q23 stays strict-gate green past the
-    # window. The B11-B20 aggregation class keeps seven in-window rows.
-    # q24_two_level_agg (B20) displaced in round 8 for q127 — the
-    # B11-B20 aggregation class held EIGHT in-window rows (q08, q01,
-    # q18, q19, q20, q22, q23, q24) while the gram-cardinality family
-    # held none (the round-7 verdict's ranked task 2). The two-level
-    # shape stays strict-gate green past the window, and grouped
-    # aggregation stays driver-covered seven ways.
-    "q25_gap_detection",        # B21
-    "q26_latest_per_key",       # B22/B25
-    # q27_cumulative_sum (B23) displaced in round 10 — unbounded-frame
-    # window aggregation stays driver-covered via the incoming q38
-    # (bounded-frame moving average: the same Window physical operator
-    # with a narrower frame) and q39 (LAG delta), alongside q25 (LEAD)
-    # and q26 (rank + WindowGroupLimit); q27 stays strict-gate green
-    # past the window.
+    "q11_dim_join_rollup",      # B3 dim equi-join + rollup
+    "q15_asof_join",            # B7 as-of join
+    "q16_range_join",           # B8 range join
+    "q17_multiway_chain",       # B9 multiway join chain
+    "q25_gap_detection",        # B21 LEAD gap detection
+    "q26_latest_per_key",       # B22/B25 rank + WindowGroupLimit
     "q29_topk_customers",       # sorts/top-k
     "q30_union_ledger",         # set ops
-    # Round-10 rotation, incoming relational block: the eight queries
-    # whose last driver-visible result was the round-1 window's FAIL
-    # (err: no_oracle / alias drift, both fixed in round 2 — see
-    # CORRECTNESS_r01.json vs scripts/verify_driver_gate.py). Each has
-    # passed the strict order-sensitive DuckDB compare every round
-    # since; this rotation puts that fact on the driver's own ledger.
-    # Round-11 rotation (the r10 verdict's ranked task 1): the five
-    # round-10 operators (q154-q158) earn driver rows at birth-plus-one
-    # — all five were strict-gate green in the judge's 158/158 re-run
-    # but none had held a driver row. Displaced to make room: five of
-    # the r10 stale-FAIL rotation block (q34, q38, q39, q50, q60),
-    # whose PURPOSE was to put a green row on the driver's own ledger —
-    # CORRECTNESS_r10 recorded exactly that, so their last driver word
-    # is now green and they rotate back out (strict-gate green past the
-    # window, like every prior displacement). Family coverage holds:
-    # window-function physics stays driver-owned via q25 (LEAD) and
-    # q26 (rank/WindowGroupLimit), grouped aggregation via q01,
-    # mergeable sketches via q97 (+ incoming q62 stays in-window), and
-    # the period-window/scalar class via q37 (which stays).
-    "q37_decimal_shift",        # price decimal normalization (A11)
+    "q37_decimal_shift",        # A11 price decimal normalization
     "q59_sessionization",       # gap-based session assignment
-    # q62_approx_percentiles displaced in round 12 (see the r12 rotation
-    # block above); its green rows stand in CORRECTNESS_r10/r11.
-    "q63_quantized_topk",       # r11 Arrow kernel rewrite (r12 rotation)
+    # rewrites and new operators (correctness row at birth-plus-one)
+    "q63_quantized_topk",       # r11 Arrow top-k kernel
     "q132_curation_delta",      # r11 shared-MinHash-state rewrite
     "q137_curation_model_pipeline",  # r11 curation scan fusion
     "q148_linkage_multipass",   # r11 fused multi-pass linkage
     "q151_linkage_multipass_delta",  # r11 fused delta linkage
-    "q161_bm25_topk",           # new in r11 (birth-plus-one row)
-    "q154_kcore_shuffle",       # delta-peeling k-core — the measured
-                                # 30x 100 TB engine (r10; VERDICT r10
-                                # next-round #1 names it first)
-    "q155_semantic_delta_lsh",  # LSH-prefiltered semantic delta (r10)
-    "q156_zorder_quantile",     # skew-robust quantile Z-order (r10)
-    "q157_semantic_delta_ivf",  # IVF-prefiltered semantic delta (r10)
-    "q158_push_outbox",         # A24 web-push dispatch half (r10)
-    # q33_json_extract displaced in round 8 for q134 — the judge's
-    # round-7 displacement shortlist named q33 next ("a single
-    # scalar-function class also covered by q05/q06"); the JSON/
-    # semi-structured extraction family stays strict-gate green past
-    # the window, and scalar-function coverage stays driver-owned via
-    # q05/q06's expression stacks. q134 gives the NEW model-based
-    # filtering family (hashed fasttext-style classifier + backoff
-    # bigram LM, this round) a driver CORRECTNESS row from birth.
-    # §2.A pipeline layer: q117 (round 3) is the densest snapshot
-    # witness — it exercises the full LS_State reconstruction AND the
-    # incremental roll-forward, and its oracle is the full recompute, so
-    # one green row proves both paths. Round 4 adds q112 — the realized
-    # PnL gold query (`controller/pnl.rs:29`), now exercising Long,
-    # SHORT (LPN debt revaluation) and liquidation cohorts in one
-    # result — per the round-3 verdict's re-balance ask. Displaced:
-    # q32_scalar_functions (r3; q33 keeps that family in window) and
-    # q28_daily_cumulative (r4; its constituent operators stay
-    # driver-covered — cumulative window via q27, time-bucketed agg via
-    # q18/q13 — and q28 itself stays strict-gate green past the window).
-    # Round 5 adds q115 — the PL_State platform rollup, the densest
-    # round-4 witness (30 oracled columns, windowed legs, the exclusive
-    # repayment bound, the two-window tax identity); displaced
-    # q21_histogram_buckets (B16's when/otherwise bucketing + grouped
-    # agg stays driver-covered via q19/q01/q46; q21 itself stays
-    # strict-gate green past the window). Round 5 also adds q122 — the
-    # Gopher repetition-filter family (new this round: multi-granularity
-    # top/dup gram mass, the boilerplate/spam curation signal), taking
-    # the slot of q64_hash_split: splits/packing keeps its in-window rep
-    # via q83 (the VERDICT coverage table lists q83+q64 as ONE family
-    # with two rows), and q64 stays strict-gate green past the window.
-    # Round 6 adds q125 — contamination coverage, giving the
-    # decontamination family (q69/q121/q102/q125) its FIRST driver
-    # CORRECTNESS row ever (the round-5 verdict's top ask: every other
-    # LLM family already carried one). Displaced: q43_simhash_pairs —
-    # dedup keeps THREE in-window reps (q40 exact, q41 jaccard,
-    # q42 minhash) and q43 stays strict-gate green past the window.
-    # Round 7 adds q128 — cross-document exact substring mining (the
-    # repo's most algorithmically novel operator, previously
-    # judge-verified only; the round-6 verdict's ranked task 2).
-    # Displaced: q41_ngram_jaccard_pairs — its family folds into the
-    # banded near-dup reps exactly the way simhash did in round 6
-    # (q40/q42 stay in-window; q41 stays strict-gate green past the
-    # window).
-    "q117_ls_state_incremental",
-    # q112_realized_pnl (A18) displaced in round 10 — the pipeline
-    # family keeps q117, whose oracle is the FULL LS_State recompute
-    # (so one green row still proves the snapshot machinery end to
-    # end); the PnL engine stays strict-gate green past the window and
-    # keeps its pytest coverage (tests/test_pipeline.py Long/Short/
-    # liquidation cohorts).
-    "q115_pl_state",
-    # LLM-pipeline family representatives (19). One per family from the
-    # VERDICT r01 coverage table, so every family carries a driver
-    # CORRECTNESS row if the 50-entry cap recurs. Displaced to make room
-    # (all remain strict-gate green at sf0.01 past the window):
-    # q31/q32/q34/q35/q37 scalar-function variants (q33 stays as the
-    # family's in-window rep; q32 moved out for q117 in round 3) and the
-    # q50/q52/q59 beyond-the-floor extras.
+    "q161_bm25_topk",           # r11 BM25 retrieval
+    "q154_kcore_shuffle",       # r10 delta-peeling k-core engine
+    "q155_semantic_delta_lsh",  # r10 LSH-prefiltered semantic delta
+    "q156_zorder_quantile",     # r10 skew-robust quantile Z-order
+    "q157_semantic_delta_ivf",  # r10 IVF-prefiltered semantic delta
+    "q158_push_outbox",         # A24 web-push dispatch half
+    # §2.A pipeline layer
+    "q117_ls_state_incremental",  # LS_State snapshot + roll-forward
+    "q115_pl_state",            # PL_State platform rollup
+    # LLM-pipeline families, one representative each
     "q40_dedup_exact",          # exact dedup
     "q42_minhash_lsh_pairs",    # MinHash LSH (verified)
-    # q128_cross_doc_spans displaced in round 10 (in-window since r7) —
-    # the paragraph/span dedup family keeps q101 in-window, q128's
-    # green rows stand in CORRECTNESS_r07/r08/r09, and it stays
-    # strict-gate green past the window.
-    "q125_contamination_coverage",  # decontamination (r6; displaced q43)
+    "q125_contamination_coverage",  # decontamination
     "q44_cosine_topk",          # exact similarity search
     "q45_ann_lsh_topk",         # ANN family (LSH/IVF/PQ audit shape)
     "q46_text_quality",         # text analysis
     "q56_media_metadata",       # multimodal columns
     "q58_winnowing",            # winnowing fingerprints
     "q61_dedup_clusters",       # connected components
-    "q83_mixture_resample",     # sampling/mixture rebalance (family also covers q64 splits)
-    "q122_repetition_metrics",  # Gopher repetition filters (r5)
+    "q83_mixture_resample",     # sampling/mixture rebalance and splits
+    "q122_repetition_metrics",  # Gopher repetition filters
     "q87_psi_drift",            # monitors
     "q95_scd2_dimension",       # SCD2 / CDC
     "q97_sketch_mau",           # mergeable sketches
@@ -239,17 +72,12 @@ _PRIORITY = [
     "q100_bpe_merges",          # tokenization/BPE
     "q101_paragraph_dedup",     # paragraph/span dedup
     "q109_funnel",              # funnel / cohort analysis
-    "q127_gram_cardinality_hll",  # gram cardinality / Heaps law (r8; displaced q24)
-    "q131_curation_pipeline",     # curation capstone family (r8; displaced q22)
-    "q134_quality_classifier",    # model-based filtering family (r8; displaced q33)
-    "q143_pagerank",              # iterative graph centrality (r8; displaced q23)
-    "q144_linkage_delta",         # fuzzy record linkage family (r9; displaced q20)
-    "q149_pagerank_shuffle",      # shuffle-join graph engine, the 100 TB
-                                  # width path (r10; the r9 verdict's
-                                  # ranked task 7 — driver row at
-                                  # birth-plus-one; oracle shared with
-                                  # q143, so the row also pins the
-                                  # cross-engine byte-equality contract)
+    "q127_gram_cardinality_hll",  # gram cardinality / Heaps law
+    "q131_curation_pipeline",   # curation capstone
+    "q134_quality_classifier",  # model-based filtering
+    "q143_pagerank",            # iterative graph centrality
+    "q144_linkage_delta",       # fuzzy record linkage
+    "q149_pagerank_shuffle",    # shuffle-join graph engine (oracle shared with q143)
 ]
 
 

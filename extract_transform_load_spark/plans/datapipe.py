@@ -19,12 +19,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.dedup import (
-    exact_duplicates,
-    minhash_lsh_pairs,
-    ngram_jaccard_pairs,
-    simhash_pairs,
-)
+from ..operators.dedup import exact_duplicates, ngram_jaccard_pairs
 from ..operators.similarity import cosine_topk_bruteforce, lsh_topk
 from ..operators.textops import lang_scores, normalized, words
 from ..sources.tables import load
@@ -165,8 +160,8 @@ def q42_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Portable 60-bit SimHash banded near-dup pairs, Hamming <= 8 "
     "(6 bands × 10 bits → lossless to Hamming 5 by pigeonhole; "
-    "operators/dedup.py::simhash_pairs_portable). The 64-bit FNV "
-    "mapInPandas variant remains as simhash_pairs.",
+    "operators/dedup.py::simhash_pairs_portable, fully JVM-side; the "
+    "oracle replays signatures, banding and verify).",
 )
 def q43_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import simhash_pairs_portable

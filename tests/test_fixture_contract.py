@@ -72,7 +72,7 @@ def test_every_rows_only_query_has_named_test_coverage():
     # instead of the registry name (the test targets the operator).
     aliases = {
         "q42_minhash_lsh_pairs": ["minhash_lsh_pairs"],
-        "q43_simhash_pairs": ["simhash_pairs"],
+        "q43_simhash_pairs": ["simhash_pairs_portable"],
         "q45_ann_lsh_topk": ["lsh_topk"],
         "q54_ann_ivf_topk": ["ivf_topk"],
         "q60_approx_distinct_mau": ["approx_distinct_mau"],
