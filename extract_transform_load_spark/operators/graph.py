@@ -1,13 +1,15 @@
-"""Link-graph centrality — iterative PageRank as DataFrame rounds.
+"""Link-graph operators as DataFrame rounds — PageRank, min-label
+propagation, k-core peeling and triangle counting.
 
 Near-dup mining gives a *pair graph* (components.py collapses it);
 large-scale corpus curation also wants a *ranking* over a link graph —
 per-host authority for crawl prioritization, per-source importance for
 mixture weighting (the same role PageRank plays in production
 crawl/curation stacks; Page et al. 1999, public). Vanilla Spark SQL has
-no iterative-fixpoint operator, so each PageRank round is expressed as
-one join + one aggregation over the cached edge list — the Pregel
-message-passing step lowered onto DataFrames.
+no iterative-fixpoint operator, so each round is expressed as one join +
+one aggregation over the cached edge list — the Pregel superstep
+(Malewicz et al., SIGMOD 2010) lowered onto DataFrames. Every round
+loop here steps through :func:`_supersteps`.
 
 Determinism discipline (the cross-engine oracle constraint): every
 arithmetic step is **64-bit integer fixed-point** (1 rank unit =
@@ -17,12 +19,15 @@ recursive re-derivation agree bit-for-bit — no float summation-order
 drift, no decimal-rounding-mode mismatch. The quantization error is
 ≤ outdeg ulps per node per round (documented, bounded, and irrelevant
 at 1e-12 granularity). The SAME integer math runs under both physical
-engines below, so ``engine="broadcast"`` and ``engine="shuffle"`` are
-byte-equal by construction (pinned in tests/test_graph_linkage.py).
+engines below, so they are byte-equal by construction (pinned in
+tests/test_graph_linkage.py).
 
-Two physical engines (100 TB link graph, 1000 executors):
+Two physical engines (100 TB link graph, 1000 executors). The engine is
+chosen from the measured graph size (:func:`_engine`), never by an
+option; a caller that needs the shuffle engine on a small graph passes
+a threshold of 0.
 
-``engine="broadcast"`` — host-level graphs (|V| up to ~5e7):
+broadcast — host-level graphs (|V| up to ~5e7):
 - the edge list is aggregated once to ``(src, dst)`` distinct rows and
   cached; every round reuses that one shuffle-partitioned frame —
   iteration adds NO new edge shuffles beyond the per-round groupBy.
@@ -31,8 +36,8 @@ Two physical engines (100 TB link graph, 1000 executors):
   one map-side hash join over edges plus one ``groupBy(dst)`` partial
   aggregation; edges never re-shuffle.
 
-``engine="shuffle"`` — page-level graphs (|V| beyond the broadcast
-ceiling; a per-round 1 GB+ rank broadcast stops fitting executors):
+shuffle — page-level graphs (|V| beyond the broadcast ceiling; a
+per-round 1 GB+ rank broadcast stops fitting executors):
 - edges are hash-partitioned ONCE by ``src`` (the one |E| shuffle);
   ranks, outdeg, the node spine and every per-round contribution frame
   are |V|-row frames hash-partitioned on the node key with the same
@@ -47,22 +52,10 @@ ceiling; a per-round 1 GB+ rank broadcast stops fitting executors):
   working set per round is |E|/P + 2|V|/P per partition — scale P with
   the cluster, not with executor memory.
 
-``engine="auto"`` (default) dispatches on a node count that is needed
-anyway (the teleport denominator): broadcast below
-``max_nodes_broadcast``, shuffle above — the asof.py statistics-dispatch
-discipline applied to graph width.
-
-Common to both:
-- lineage is truncated with ``localCheckpoint`` per round, the same
-  guard components.py uses — an unchecked 20-round plan otherwise
-  drowns Catalyst analysis time. (``Dataset.localCheckpoint`` preserves
-  the physical output partitioning into the LogicalRDD, so the shuffle
-  engine's co-partitioning SURVIVES the truncation — the property the
-  whole round-over-round reuse rests on.)
-- dangling nodes (outdeg 0) contribute no mass — the "mass leak"
-  PageRank variant. Callers who need a stochastic matrix should
-  symmetrize or add self-loops before calling (q143 feeds a
-  symmetrized bipartite graph, so every node has outdeg >= 1).
+Dangling nodes (outdeg 0) contribute no mass — the "mass leak"
+PageRank variant. Callers who need a stochastic matrix should
+symmetrize or add self-loops before calling (q143 feeds a symmetrized
+bipartite graph, so every node has outdeg >= 1).
 
 Reference parity: the reference engine has no graph operator; this is
 part of the beyond-reference LLM-pipeline layer (SURVEY.md §6).
@@ -72,6 +65,8 @@ from __future__ import annotations
 
 import threading
 from contextlib import contextmanager
+from functools import partial
+from types import SimpleNamespace
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
@@ -79,130 +74,216 @@ from pyspark.sql import DataFrame
 #: 1.0 of rank mass, in fixed-point units (1e-12 granularity).
 UNIT = 10**12
 
-_ENGINES = ("auto", "broadcast", "shuffle")
-
-_AQE_LOCK = threading.Lock()
-#: id(SparkSession) -> [depth, saved "spark.sql.adaptive.enabled"].
-_AQE_DEPTH: dict[int, list] = {}
-
-
-@contextmanager
-def _aqe_compile_off(spark):
-    """Reentrant, serialized 'AQE off while compiling' window.
-
-    The shuffle engines compile their per-round plans (and the
-    localCheckpoints that freeze them) with AQE disabled, because under
-    AQE a localCheckpoint captures UnknownPartitioning — the adaptive
-    plan's final layout isn't known at checkpoint-creation time, eager
-    or not (measured) — which would re-insert an |E|-sized exchange
-    above the edge scan EVERY round. The toggle covers only plan
-    CONSTRUCTION: execution (whenever the caller acts) and every other
-    query are unaffected.
-
-    The naive save/set/restore was not reentrancy-safe (ADVICE r9):
-    two overlapping shuffle-engine calls on one session raced — the
-    second snapshotted the already-disabled value and its restore left
-    AQE off session-wide. This helper serializes the state transitions
-    under a module lock and keys a depth counter per session: the FIRST
-    entry snapshots and disables, the LAST exit restores, nested/
-    concurrent entries only bump the counter. Inherent residual (a
-    session-global conf has no narrower scope): an UNRELATED query
-    compiled inside someone else's window still sees AQE off for that
-    compile — callers who interleave plan construction with graph
-    rounds on one session should expect that, and execution-time
-    behavior is never affected.
-    """
-    key = id(spark)
-    with _AQE_LOCK:
-        state = _AQE_DEPTH.get(key)
-        if state is None:
-            saved = spark.conf.get("spark.sql.adaptive.enabled", "true")
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-            state = _AQE_DEPTH[key] = [0, saved]
-        state[0] += 1
-    try:
-        yield
-    finally:
-        with _AQE_LOCK:
-            state = _AQE_DEPTH[key]
-            state[0] -= 1
-            if state[0] == 0:
-                spark.conf.set("spark.sql.adaptive.enabled", state[1])
-                del _AQE_DEPTH[key]
-
-
-@contextmanager
-def _shuffle_fanout(spark, num: int | None):
-    """Pin ``spark.sql.shuffle.partitions`` to the engine's
-    scale-adaptive fan-out while the round plans (and the
-    localCheckpoints that freeze them) are compiled, so the per-round
-    groupBy exchanges land at the SAME partition count as the frozen
-    edge/state frames and the co-partitioned joins stay exchange-free.
-    Save/restore is serialized under the module lock (the
-    _aqe_compile_off discipline); like that window it covers only plan
-    CONSTRUCTION — execution and other queries are unaffected, with the
-    same documented residual for plans another thread compiles inside
-    this window."""
-    if num is None:
-        yield
-        return
-    key = ("shuffle_partitions", id(spark))
-    with _AQE_LOCK:
-        stack = _FANOUT_STACK.setdefault(key, [])
-        stack.append(spark.conf.get("spark.sql.shuffle.partitions", None))
-        spark.conf.set("spark.sql.shuffle.partitions", str(num))
-    try:
-        yield
-    finally:
-        with _AQE_LOCK:
-            saved = _FANOUT_STACK[key].pop()
-            if not _FANOUT_STACK[key]:
-                del _FANOUT_STACK[key]
-            if saved is None:
-                spark.conf.unset("spark.sql.shuffle.partitions")
-            else:
-                spark.conf.set("spark.sql.shuffle.partitions", saved)
-
-
-#: (tag, id(SparkSession)) -> stack of saved conf values for
-#: _shuffle_fanout's save/restore.
-_FANOUT_STACK: dict[tuple, list] = {}
-
-
-def _shuffle_partitions(spark) -> int:
-    """The session's shuffle fan-out, for the explicit edge repartition
-    in shuffle mode. Matching ``spark.sql.shuffle.partitions`` keeps the
-    edge frame co-partitioned with every groupBy/distinct output, so no
-    join in the round loop re-shuffles the |E| side."""
-    try:
-        return int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):  # "auto" under some AQE configs
-        return spark.sparkContext.defaultParallelism
-
-
 #: Edge rows per frozen-frame partition in the shuffle engines. An edge
 #: row is two or three int64s (~25-50 B shuffled), so 2M rows ≈
 #: 50-100 MB — the guide's fewer-larger-partitions band (§2.2) for the
 #: per-round exchanges that AQE cannot coalesce here (round plans
-#: compile with AQE off; see _aqe_compile_off).
+#: compile with AQE off; see _compile_window).
 _EDGE_ROWS_PER_PARTITION = 2_000_000
 
+_AQE = "spark.sql.adaptive.enabled"
+_FANOUT = "spark.sql.shuffle.partitions"
+_WINDOW_LOCK = threading.Lock()
+#: id(SparkSession) -> [saved AQE flag, then the fan-out each open
+#: window replaced, innermost last].
+_WINDOWS: dict[int, list] = {}
 
-def _scaled_partitions(spark, n_rows: int) -> int:
-    """Scale-adaptive fan-out for the shuffle engines' frozen frames:
-    ``spark.sql.shuffle.partitions`` stays the CEILING (a cluster
-    operator sizes it for the cluster, and a 100 TB edge list always
-    saturates it), but a small graph gets proportionally fewer, larger
-    partitions instead of conf-many near-empty ones. The round plans
-    compile with AQE off, so the usual partition coalescing never sees
-    them — without this, every one of the R per-round exchanges and
-    hash joins schedules conf-many tiny tasks regardless of |E|
-    (measured at sf0.1: the fan-out, not the data, dominates the round
-    cost), and the fixed overhead scales with the conf instead of the
-    input at every core count the driver benches."""
-    cap = _shuffle_partitions(spark)
+
+@contextmanager
+def _compile_window(spark, n_rows: int):
+    """The shuffle engines' plan-construction window. Yields ``win``:
+    build the round plans at fan-out ``win.num`` and set ``win.out`` to
+    the final frame, whose physical plan is frozen before the window
+    closes.
+
+    Inside the window:
+
+    - AQE is off. Under AQE a localCheckpoint captures
+      UnknownPartitioning — the adaptive plan's final layout isn't
+      known at checkpoint-creation time, eager or not (measured) —
+      which would re-insert an |E|-sized exchange above the edge scan
+      EVERY round. What AQE would contribute per round — skew splitting
+      on the groupBy hot keys — is absorbed by map-side partial
+      aggregation instead.
+    - ``spark.sql.shuffle.partitions`` is pinned to a scale-adaptive
+      fan-out, so the per-round groupBy exchanges land at the SAME
+      partition count as the frozen edge/state frames and the
+      co-partitioned joins stay exchange-free. The session conf stays
+      the CEILING (a cluster operator sizes it for the cluster, and a
+      100 TB edge list always saturates it), but a small graph gets
+      proportionally fewer, larger partitions: AQE's coalescing never
+      sees these plans, and without the scaling every per-round
+      exchange schedules conf-many tiny tasks regardless of |E|
+      (measured at sf0.1: the fan-out, not the data, dominated the
+      round cost).
+    - the final plan is frozen: direct consumers (collect, the plan
+      audits) reuse the cached plan — one exchange per round at the
+      adaptive fan-out. A consumer that composes further
+      (orderBy/limit) re-plans at the session conf, which costs at most
+      one extra |V|-row exchange on the last round, under AQE.
+
+    The window covers only plan CONSTRUCTION: execution (whenever the
+    caller acts) and every other query are unaffected. Overlapping
+    windows on one session are safe: state transitions are serialized
+    under a lock, the FIRST entry saves the AQE flag and the LAST exit
+    restores it, and exits restore the saved fan-outs last-in first-out
+    (a nested window hands its enclosing one the enclosing fan-out
+    back; the last exit restores the session's own). Inherent residual
+    (a session-global conf has no narrower scope): an UNRELATED query
+    compiled inside someone else's window sees its conf for that
+    compile.
+    """
+    try:
+        cap = int(spark.conf.get(_FANOUT))
+    except (TypeError, ValueError):  # "auto" under some AQE configs
+        cap = spark.sparkContext.defaultParallelism
     need = -(-max(1, n_rows) // _EDGE_ROWS_PER_PARTITION)  # ceil div
-    return max(1, min(cap, need))
+    win = SimpleNamespace(num=max(1, min(cap, need)), out=None)
+    key = id(spark)
+    with _WINDOW_LOCK:
+        saved = _WINDOWS.setdefault(key, [spark.conf.get(_AQE, "true")])
+        saved.append(spark.conf.get(_FANOUT, None))
+        spark.conf.set(_AQE, "false")
+        spark.conf.set(_FANOUT, str(win.num))
+    try:
+        yield win
+        if win.out is not None:
+            win.out._jdf.queryExecution().executedPlan()
+    finally:
+        with _WINDOW_LOCK:
+            saved = _WINDOWS[key]
+            fanout = saved.pop()
+            if fanout is None:
+                spark.conf.unset(_FANOUT)
+            else:
+                spark.conf.set(_FANOUT, fanout)
+            if len(saved) == 1:
+                spark.conf.set(_AQE, saved[0])
+                del _WINDOWS[key]
+
+
+def _engine(
+    count_nodes,
+    max_nodes_broadcast: int,
+    n_edges: int | None = None,
+    max_edges_broadcast: int | None = None,
+) -> str:
+    """The size dispatch: ``"broadcast"`` or ``"shuffle"``.
+
+    Every operator routes to shuffle past ``max_nodes_broadcast`` — the
+    MEMORY guard: past it the per-round |V|-row broadcast stops fitting
+    executors. Label propagation and k-core also pass their canonical
+    edge count, and route to shuffle past ``max_edges_broadcast`` — the
+    measured COST crossover. An edge count already past its threshold
+    decides alone, so ``count_nodes`` (a zero-argument callable) is not
+    called. Byte-equal engines make the dispatch invisible to results.
+
+    Why pagerank dispatches on NODES ONLY — the per-family cost model:
+
+    ======================  ===============================  ==========
+    operator                broadcast per-round cost         edge cap?
+    ======================  ===============================  ==========
+    pagerank                O(|E|) MAP-SIDE against the      no
+                            frozen edge checkpoint — the
+                            edge frame is never filtered or
+                            re-materialized, so per-round
+                            work matches the shuffle
+                            engine's minus its up-front |E|
+                            exchange
+    kcore                   O(|E|) RE-MATERIALIZED — the     yes
+                            surviving edge frame is
+                            semi-joined and rewritten every
+                            round, vs delta peeling's
+                            deaths-only messages (measured
+                            30x at 100x, ~50M edges)
+    label_propagation       label column rewritten over       yes
+                            the full |E| frame per round
+                            vs co-partitioned MIN-merge
+                            (measured 1.6x at 100x)
+    ======================  ===============================  ==========
+
+    So for pagerank the broadcast form is never asymptotically worse
+    per round — the ONLY reason to leave it is rank-vector WIDTH
+    (executor memory), which is exactly ``max_nodes_broadcast``; an
+    edge-count cap would route mid-size graphs onto the engine with
+    one extra |E| exchange for no per-round saving (PERFORMANCE.md's
+    100x table: broadcast 480 s vs shuffle 349 s in one session, 313 s
+    vs 477 s in another — within tenant noise of each other, both
+    spill-free, neither dominant — against kcore's unambiguous
+    2155 s -> 71 s).
+    """
+    if n_edges is not None and n_edges > max_edges_broadcast:
+        return "shuffle"
+    return "broadcast" if count_nodes() <= max_nodes_broadcast else "shuffle"
+
+
+def _run(engine: str, spark, count_rows, build) -> DataFrame:
+    """Build a round loop under ``engine``: ``build(small, num)`` gets
+    the join hint for the |V|-bounded sides and the frozen frames'
+    fan-out (``None`` under broadcast). ``count_rows`` sizes the
+    shuffle engine's fan-out and is called only for that engine."""
+    if engine == "broadcast":
+        # broadcast EXPLICITLY: checkpointed RDDs carry no stats, so
+        # left to itself Catalyst would SMJ the small sides and could
+        # re-shuffle the edge list
+        return build(F.broadcast, None)
+    with _compile_window(spark, count_rows()) as win:
+        # co-partitioned inputs make the join exchange-free either way;
+        # the hash build avoids SMJ re-sorting the |E| frame every round
+        win.out = build(lambda df: df.hint("shuffle_hash"), win.num)
+    return win.out
+
+
+def _supersteps(state: DataFrame, rounds: int, step):
+    """Run up to ``rounds`` supersteps from ``state``; return the final
+    state and whether the loop stopped early.
+
+    ``step(state)`` returns ``(next_state, changes)``. ``changes`` is
+    ``None`` for a round that always runs, or a frame of what this round
+    changes: when it is empty the fixpoint is reached (every later round
+    would be a no-op too), so the loop stops and returns the state that
+    round started from — saving every no-op round's stages.
+    ``count() == 0`` rather than ``isEmpty()``: the count is one job,
+    where ``limit(1)`` may scan partition batches job by job.
+
+    Lineage is truncated BETWEEN rounds (an unchecked k-round plan
+    drowns Catalyst analysis); ``Dataset.localCheckpoint`` keeps the
+    physical output partitioning in the LogicalRDD, so the shuffle
+    engines' co-partitioning survives the truncation. The LAST round
+    stays a live plan, so callers — and the plan audits — see the real
+    per-round physical shape, not a checkpoint scan.
+    """
+    for i in range(rounds):
+        if i:
+            state = state.localCheckpoint(eager=False)
+        nxt, changes = step(state)
+        if changes is not None and changes.count() == 0:
+            return state, True
+        state = nxt
+    return state, False
+
+
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The loop-free, distinct, symmetric ``(u, v)`` edge set: each
+    undirected edge once per direction. The canonical half is
+    checkpointed, so both directions read one materialization."""
+    raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    sym = (
+        raw.filter(F.col("u") != F.col("v"))
+        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+    return sym.union(sym.select(F.col("v").alias("u"), F.col("u").alias("v")))
+
+
+def _spine(e: DataFrame, a: str, b: str) -> DataFrame:
+    """Distinct node ids over both endpoint columns of ``e``."""
+    return (
+        e.select(F.col(a).alias("node"))
+        .union(e.select(F.col(b).alias("node")))
+        .distinct()
+    )
 
 
 def pagerank(
@@ -215,7 +296,6 @@ def pagerank(
     assume_distinct: bool = False,
     weight: str | None = None,
     seeds: DataFrame | None = None,
-    engine: str = "auto",
 ) -> DataFrame:
     """Fixed-point PageRank over a directed edge list.
 
@@ -245,56 +325,17 @@ def pagerank(
     keyed off seed MEMBERSHIP, not off a nonzero teleport, so the
     degenerate ``damping_pct=100`` (teleport 0) still seeds the walk.
 
-    ``engine`` picks the physical plan (same math, byte-equal results):
-    ``"broadcast"`` re-broadcasts the |V|-row rank vector each round
-    (fastest while it fits; raises past ``max_nodes_broadcast``),
-    ``"shuffle"`` co-partitions ranks and edges by node and reuses that
-    partitioning across rounds (no width ceiling; one extra |E| shuffle
-    up front), ``"auto"`` dispatches on the node count.
-
-    Why ``auto`` here dispatches on NODES ONLY while :func:`kcore` and
-    :func:`label_propagation` dispatch on (nodes, edges) — the
-    per-family cost model, made explicit (VERDICT r10 next-round #7):
-
-    ======================  ===============================  ==========
-    engine pair             broadcast per-round cost         edge cap?
-    ======================  ===============================  ==========
-    pagerank                O(|E|) MAP-SIDE against the      no
-                            frozen edge checkpoint — the
-                            edge frame is never filtered or
-                            re-materialized, so per-round
-                            work matches the shuffle
-                            engine's minus its up-front |E|
-                            exchange
-    kcore                   O(|E|) RE-MATERIALIZED — the     yes
-                            surviving edge frame is
-                            semi-joined and rewritten every
-                            round, vs delta peeling's
-                            deaths-only messages (measured
-                            30x at 100x, ~50M edges)
-    label_propagation       label column rewritten over       yes
-                            the full |E| frame per round
-                            vs co-partitioned MIN-merge
-                            (measured 1.6x at 100x)
-    ======================  ===============================  ==========
-
-    So for pagerank the broadcast form is never asymptotically worse
-    per round — the ONLY reason to leave it is rank-vector WIDTH
-    (executor memory), which is exactly ``max_nodes_broadcast``; an
-    edge-count cap would route mid-size graphs onto the engine with
-    one extra |E| exchange for no per-round saving (PERFORMANCE.md's
-    100x table: broadcast 480 s vs shuffle 349 s in one session, 313 s
-    vs 477 s in another — within tenant noise of each other, both
-    spill-free, neither dominant — against kcore's unambiguous
-    2155 s -> 71 s). Byte-equality across engines makes the dispatch
-    invisible to results either way.
+    The physical engine follows the node count (same math, byte-equal
+    results): up to ``max_nodes_broadcast`` nodes the |V|-row rank
+    vector is re-broadcast each round; past it ranks and edges are
+    co-partitioned by node and that partitioning is reused across
+    rounds (no width ceiling; one extra |E| shuffle up front). See
+    :func:`_engine` for why pagerank has no edge cap.
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
     if not 0 <= damping_pct <= 100:
         raise ValueError("damping_pct must be in [0, 100]")
-    if engine not in _ENGINES:
-        raise ValueError(f"engine must be one of {_ENGINES}, got {engine!r}")
 
     cols = [F.col(src).alias("src"), F.col(dst).alias("dst")]
     if weight is not None:
@@ -311,27 +352,20 @@ def pagerank(
     # checkpoint BEFORE deriving the node spine, so the (possibly
     # expensive) upstream build runs once and both the spine and every
     # round read its blocks; the shuffle engine re-checkpoints its
-    # repartitioned copy below, which is one cheap shuffle over these
-    # same blocks, not a second build. EAGER on purpose: the node count
+    # repartitioned copy, which is one cheap shuffle over these same
+    # blocks, not a second build. EAGER on purpose: the node count
     # below consumes it immediately anyway, and a lazy checkpoint here
-    # let the round-1 broadcast-exchange thread race the main job into
+    # lets the round-1 broadcast-exchange thread race the main job into
     # materializing the full upstream build TWICE (measured at 100x on
     # the weighted feed: two 10.8 GB fact-join stages, 1.7-5.9 GB of
     # sort spill in the broadcast copy; eager => one build, no spill).
     e = e.localCheckpoint(eager=True)
-
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    nodes = _spine(e, "src", "dst").localCheckpoint(eager=False)
     # ONE counting job resolves everything the plan needs eagerly: the
     # node count (teleport denominator + engine dispatch) and, for the
     # personalized form, the in-graph seed count — the seed flag join is
     # lazily checkpointed first so the count job materializes it and the
-    # spine below reuses the same blocks (no second join, no second
-    # scheduler round-trip; review r8 nit).
+    # spine below reuses the same blocks.
     flagged = None
     if seeds is not None:
         seed_ids = seeds.select(
@@ -360,44 +394,15 @@ def pagerank(
             F.lit(0).cast("bigint").alias("rank_units"),
             F.lit(0.0).alias("rank"),
         )
-    if engine == "auto":
-        engine = "broadcast" if n_nodes <= max_nodes_broadcast else "shuffle"
-    elif engine == "broadcast" and n_nodes > max_nodes_broadcast:
-        raise ValueError(
-            f"pagerank: {n_nodes} nodes exceeds max_nodes_broadcast="
-            f"{max_nodes_broadcast}; the per-round rank broadcast would not fit — "
-            "pass engine='shuffle' (or 'auto') for graphs this wide"
-        )
-
-    spark_ = edges.sparkSession
-    if engine == "shuffle":
-        # Compile every round plan with AQE OFF (see _aqe_compile_off:
-        # under AQE a localCheckpoint captures UnknownPartitioning and
-        # every round would re-exchange the |E| frame). What AQE would
-        # have contributed per round — skew splitting on the
-        # groupBy(dst) hot keys — is absorbed by map-side partial
-        # aggregation instead. The fan-out is scale-adaptive
-        # (_scaled_partitions; e is an eager checkpoint so the sizing
-        # count reads cached blocks), and _shuffle_fanout pins the
-        # session conf to it during compilation so the per-round
-        # groupBy exchanges co-partition with the frozen frames.
-        num = _scaled_partitions(spark_, e.count())
-        with _aqe_compile_off(spark_), _shuffle_fanout(spark_, num):
-            out = _pagerank_rounds(
-                e, nodes, flagged, n_nodes, n_seeds,
-                iterations, damping_pct, weight, engine, num,
-            )
-            # freeze the FINAL round's physical plan inside the window
-            # too: direct consumers (collect, the plan audits) reuse
-            # this cached plan — one exchange per round at the adaptive
-            # fan-out. A consumer that composes further (orderBy/limit)
-            # re-plans at the session conf, which costs at most one
-            # extra |V|-row exchange on the last round, under AQE.
-            out._jdf.queryExecution().executedPlan()
-            return out
-    return _pagerank_rounds(
-        e, nodes, flagged, n_nodes, n_seeds,
-        iterations, damping_pct, weight, engine, None,
+    engine = _engine(lambda: n_nodes, max_nodes_broadcast)
+    # e is an eager checkpoint: the shuffle engine's sizing count reads
+    # cached blocks
+    return _run(
+        engine, edges.sparkSession, e.count,
+        partial(
+            _pagerank_rounds, e, nodes, flagged, n_nodes, n_seeds,
+            iterations, damping_pct, weight,
+        ),
     )
 
 
@@ -410,31 +415,16 @@ def _pagerank_rounds(
     iterations: int,
     damping_pct: int,
     weight: str | None,
-    engine: str,
+    small,
     num: int | None,
 ) -> DataFrame:
     """The round loop, shared by both engines — identical int64 math,
     different physical strategy for the |V|-bounded sides."""
-    # maybe-broadcast / maybe-hint: the |V|-bounded sides are broadcast
-    # EXPLICITLY in broadcast mode (checkpointed RDDs carry no stats, so
-    # left to itself Catalyst would SMJ the small sides and, worse,
-    # could re-shuffle the edge list); in shuffle mode the same sides
-    # get a SHUFFLE_HASH hint instead — co-partitioned inputs make the
-    # join exchange-free either way, and the hash build avoids SMJ
-    # re-sorting the |E| frame every round.
-    if engine == "broadcast":
-        _small = F.broadcast
-    else:
-        _small = lambda df: df.hint("shuffle_hash")  # noqa: E731
-
-    if engine == "shuffle":
-        # the ONE |E| shuffle of this engine: hash-partition edges by
-        # src at the scale-adaptive fan-out (the session conf caps it;
-        # every groupBy/repartition below lands at the SAME number via
-        # _shuffle_fanout, so the round loop stays co-partitioned), and
-        # freeze that layout for all rounds — with AQE off (see caller)
-        # the checkpoint preserves HashPartitioning(src) into the
-        # LogicalRDD, so no round ever re-exchanges the edge frame.
+    if num is not None:
+        # the ONE |E| shuffle of the shuffle engine: hash-partition
+        # edges by src at the window's fan-out and freeze that layout
+        # for all rounds — with AQE off the checkpoint keeps
+        # HashPartitioning(src), so no round re-exchanges the edge frame
         e = e.repartition(num, "src").localCheckpoint(eager=False)
 
     outdeg = e.groupBy("src").agg(
@@ -443,10 +433,8 @@ def _pagerank_rounds(
         ).alias("outdeg")
     )
     # teleport mass, exact integer: (100-d)% of one UNIT. Uniform PageRank
-    # spreads it over all N nodes; PERSONALIZED PageRank (``seeds``: a
-    # one-column frame of node ids — topic pages, trusted hosts, a crawl
-    # frontier) concentrates teleport AND the initial mass on the seed
-    # set, ranking nodes by proximity to it (Page et al. §6; the
+    # spreads it over all N nodes; PERSONALIZED PageRank concentrates
+    # teleport AND the initial mass on the seed set (Page et al. §6; the
     # crawl-prioritization form). Same integer discipline: the teleport
     # becomes a per-node column on the node spine instead of a scalar.
     total_teleport = (100 - damping_pct) * (UNIT // 100)
@@ -459,7 +447,7 @@ def _pagerank_rounds(
         # damping_pct=100 the teleport is 0 everywhere, and an initial
         # distribution keyed off a nonzero teleport would be all zeros —
         # the walk must start FROM THE SEEDS regardless of teleport
-        # (ADVICE r8 fix, pinned by test_damping_100_still_seeds).
+        # (pinned by test_damping_100_still_seeds).
         spine = flagged.select(
             "node",
             F.when(F.col("__s").isNotNull(), F.lit(total_teleport // n_seeds))
@@ -468,85 +456,56 @@ def _pagerank_rounds(
             .alias("tele"),
             F.col("__s").isNotNull().alias("__seed"),
         )
-    if engine == "shuffle":
+    if num is not None:
         # node-hash the spine once, so the per-round contrib join and
         # the state derived from it stay co-partitioned on the node key
         spine = spine.repartition(num, "node")
 
-    # Fold the STATIC outdeg onto the spine once, instead of re-joining
-    # ranks against it every round (guide §2.4: two operations keyed the
-    # same way share one exchange — here the join disappears entirely).
-    # The old loop paid one |V| ranks-x-outdeg join (a broadcast build
-    # in broadcast mode, a hash build in shuffle mode) per round to
-    # recover a value that never changes; the state frame now carries
+    # Fold the STATIC outdeg onto the spine once (guide §2.4: two
+    # operations keyed the same way share one exchange — here the join
+    # disappears entirely): the state frame carries
     # (node, tele, outdeg, rank_units) across rounds, so each round is
     # exactly one edge join + one groupBy(dst) + one state update.
-    # Dangling nodes keep a NULL outdeg: the give projection filters
-    # them out, which is byte-identical to the old inner join.
+    # Dangling nodes keep a NULL outdeg, and the give projection
+    # filters them out.
     state = spine.join(
-        _small(outdeg.withColumnRenamed("src", "node")), "node", "left"
+        small(outdeg.withColumnRenamed("src", "node")), "node", "left"
     )
     if flagged is None:
-        state = state.select(
-            "node", "tele", "outdeg",
-            F.lit(UNIT // n_nodes).cast("bigint").alias("rank_units"),
-        )
+        start = F.lit(UNIT // n_nodes)
     else:
-        state = state.select(
-            "node", "tele", "outdeg",
-            F.when(F.col("__seed"), F.lit(UNIT // n_seeds))
-            .otherwise(F.lit(0))
-            .cast("bigint")
-            .alias("rank_units"),
+        start = F.when(F.col("__seed"), F.lit(UNIT // n_seeds)).otherwise(F.lit(0))
+    state = state.select(
+        "node", "tele", "outdeg", start.cast("bigint").alias("rank_units")
+    )
+    # per-src outgoing mass, integer floor division (DIV truncates
+    # toward zero == floor on the nonnegative units; DuckDB's //
+    # floors identically — the cross-engine-exact step a double
+    # intermediate would break, since Spark's double->bigint cast
+    # truncates where DuckDB's rounds). Weighted: the split is per-EDGE
+    # ((rank * w) DIV sum_w), so the build side carries (rank, sum_w)
+    # and the division happens in the edge join's projection — still
+    # one groupBy(dst) per round.
+    if weight is None:
+        give_cols = [F.expr("rank_units DIV outdeg").cast("bigint").alias("give")]
+        got = F.sum("give")
+    else:
+        give_cols = ["rank_units", F.col("outdeg").alias("sw")]
+        got = F.sum(F.expr("(rank_units * w) DIV sw")).cast("bigint")
+
+    def step(state):
+        give = small(
+            state.filter(F.col("outdeg").isNotNull()).select(
+                F.col("node").alias("g_src"), *give_cols
+            )
         )
-    state = state.localCheckpoint(eager=False)
-    for i in range(iterations):
-        if i:
-            # truncate lineage BETWEEN rounds (an unchecked k-round plan
-            # drowns Catalyst analysis); the LAST round stays a live
-            # plan so callers — and the plan-audit tests — see the
-            # real per-round physical shape, not a checkpoint scan
-            state = state.localCheckpoint(eager=False)
-        # per-src outgoing mass, integer floor division (DIV truncates
-        # toward zero == floor on the nonnegative units; DuckDB's //
-        # floors identically — the cross-engine-exact step a double
-        # intermediate would break, since Spark's double->bigint cast
-        # truncates where DuckDB's rounds).
-        if weight is None:
-            give = _small(
-                state.filter(F.col("outdeg").isNotNull()).select(
-                    F.col("node").alias("g_src"),
-                    F.expr("rank_units DIV outdeg").cast("bigint").alias("give"),
-                )
-            )
-            contrib = (
-                e.join(give, F.col("src") == F.col("g_src"))
-                .groupBy("dst")
-                .agg(F.sum("give").alias("got"))
-            )
-        else:
-            # weighted: the split is per-EDGE ((rank * w) DIV sum_w),
-            # so the build side carries (rank, sum_w) and the division
-            # happens in the edge join's projection — still one
-            # groupBy(dst) per round
-            give = _small(
-                state.filter(F.col("outdeg").isNotNull()).select(
-                    F.col("node").alias("g_src"),
-                    "rank_units",
-                    F.col("outdeg").alias("sw"),
-                )
-            )
-            contrib = (
-                e.join(give, F.col("src") == F.col("g_src"))
-                .groupBy("dst")
-                .agg(
-                    F.sum(F.expr("(rank_units * w) DIV sw"))
-                    .cast("bigint")
-                    .alias("got")
-                )
-            )
-        state = state.join(
-            _small(contrib), state.node == contrib.dst, "left"
+        contrib = (
+            e.join(give, F.col("src") == F.col("g_src"))
+            .groupBy("dst")
+            .agg(got.alias("got"))
+        )
+        nxt = state.join(
+            small(contrib), state.node == contrib.dst, "left"
         ).select(
             "node", "tele", "outdeg",
             (
@@ -556,7 +515,9 @@ def _pagerank_rounds(
             .cast("bigint")
             .alias("rank_units"),
         )
+        return nxt, None
 
+    state, _ = _supersteps(state.localCheckpoint(eager=False), iterations, step)
     return state.select(
         "node",
         "rank_units",
@@ -569,7 +530,6 @@ def min_label_propagation(
     src: str = "src",
     dst: str = "dst",
     rounds: int = 3,
-    engine: str = "auto",
     max_nodes_broadcast: int = 50_000_000,
     max_edges_broadcast: int = 10_000_000,
 ) -> DataFrame:
@@ -586,97 +546,54 @@ def min_label_propagation(
 
     Same physical discipline as :func:`pagerank`, both engines: labels
     are the |V|-row frame, one ``groupBy(dst) MIN`` message exchange
-    per round; ``engine="broadcast"`` broadcasts labels into the edge
-    join (guarded by ``max_nodes_broadcast``), ``engine="shuffle"``
-    co-partitions labels and edges by node with the AQE-off checkpoint
-    compilation so nothing re-exchanges the |E| frame; ``auto``
-    dispatches on the node count. MIN is idempotent/associative, so the
-    result is byte-equal across engines and summation-order-free by
-    construction (no fixed-point discipline even needed).
+    per round; the broadcast engine broadcasts labels into the edge
+    join, the shuffle engine co-partitions labels and edges by node
+    with the AQE-off checkpoint compilation so nothing re-exchanges the
+    |E| frame. MIN is idempotent/associative, so the result is
+    byte-equal across engines and summation-order-free by construction
+    (no fixed-point discipline even needed).
 
     Measured at 100x (PERFORMANCE.md r10 table): the shuffle engine is
     ~1.6x faster than broadcast (111 vs 178 s, both spill-free) — the
     broadcast engine rebuilds the |V|-row label broadcast each round
     while the shuffle engine's exchange carries only the per-round MIN
-    messages. ``auto`` therefore dispatches on BOTH dimensions, like
-    :func:`kcore`: shuffle past ``max_nodes_broadcast`` (the memory
-    guard) OR past ``max_edges_broadcast`` (the measured cost
-    crossover); byte-equal engines make the dispatch invisible to
-    results. An explicit ``engine="broadcast"`` applies only the
-    memory guard.
+    messages. The engine is therefore shuffle past
+    ``max_nodes_broadcast`` (the memory guard) OR past
+    ``max_edges_broadcast`` (the measured cost crossover), like
+    :func:`kcore`.
     """
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    if engine not in _ENGINES:
-        raise ValueError(f"engine must be one of {_ENGINES}, got {engine!r}")
-    raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    sym = (
-        raw.filter(F.col("u") != F.col("v"))
-        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .distinct()
+    e = _undirected(edges, src, dst).select(
+        F.col("u").alias("src"), F.col("v").alias("dst")
     )
-    e = sym.union(
-        sym.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).select(F.col("u").alias("src"), F.col("v").alias("dst"))
-    # eager, for the same reason as pagerank: the node count consumes
-    # it now, and a lazy checkpoint lets the round-1 broadcast thread
-    # race the main job into building the upstream twice
+    # eager, for the same reason as pagerank: the counts consume it
+    # now, and a lazy checkpoint lets the round-1 broadcast thread race
+    # the main job into building the upstream twice
     e = e.localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
+    nodes = _spine(e, "src", "dst").localCheckpoint(eager=False)
+    # reads e's checkpoint blocks — cheap relative to even one
+    # propagation round (2|E| symmetric rows)
+    n_sym = e.count()
+    engine = _engine(nodes.count, max_nodes_broadcast, n_sym // 2, max_edges_broadcast)
+    return _run(
+        engine, edges.sparkSession, lambda: n_sym,
+        partial(_label_rounds, e, nodes, rounds),
     )
-    n_nodes = nodes.count()
-    n_sym = None
-    if engine == "auto":
-        # e is an eager checkpoint: this count reads its blocks — cheap
-        # relative to even one propagation round (2|E| symmetric rows)
-        n_sym = e.count()
-        engine = (
-            "broadcast"
-            if n_nodes <= max_nodes_broadcast and n_sym // 2 <= max_edges_broadcast
-            else "shuffle"
-        )
-    elif engine == "broadcast" and n_nodes > max_nodes_broadcast:
-        raise ValueError(
-            f"min_label_propagation: {n_nodes} nodes exceeds "
-            f"max_nodes_broadcast={max_nodes_broadcast} — pass "
-            "engine='shuffle' (or 'auto') for graphs this wide"
-        )
-    spark_ = edges.sparkSession
-    if engine == "shuffle":
-        num = _scaled_partitions(spark_, n_sym if n_sym is not None else e.count())
-        with _aqe_compile_off(spark_), _shuffle_fanout(spark_, num):
-            out = _label_rounds(e, nodes, rounds, engine, spark_, num)
-            # freeze the final round's plan inside the window (the
-            # pagerank discipline): direct consumers see one exchange
-            # per round at the adaptive fan-out
-            out._jdf.queryExecution().executedPlan()
-            return out
-    return _label_rounds(e, nodes, rounds, engine, spark_, None)
 
 
 def _label_rounds(
-    e: DataFrame, nodes: DataFrame, rounds: int, engine: str, spark_,
-    num: int | None,
+    e: DataFrame, nodes: DataFrame, rounds: int, small, num: int | None
 ) -> DataFrame:
     """min_label_propagation's round loop, shared by both engines."""
-    if engine == "broadcast":
-        _small = F.broadcast
-    else:
-        _small = lambda df: df.hint("shuffle_hash")  # noqa: E731
-    if engine == "shuffle":
+    if num is not None:
         e = e.repartition(num, "src").localCheckpoint(eager=False)
         nodes = nodes.repartition(num, "node").localCheckpoint(eager=False)
-    labels = nodes.select("node", F.col("node").alias("label"))
-    for i in range(rounds):
-        if i:
-            labels = labels.localCheckpoint(eager=False)
+
+    def step(labels):
         msgs = (
             e.join(
-                _small(
+                small(
                     labels.select(
                         F.col("node").alias("g_src"),
                         F.col("label").alias("lbl"),
@@ -687,15 +604,18 @@ def _label_rounds(
             .groupBy("dst")
             .agg(F.min("lbl").alias("m"))
         )
-        labels = labels.join(
-            _small(msgs), labels.node == msgs.dst, "left"
+        nxt = labels.join(
+            small(msgs), labels.node == msgs.dst, "left"
         ).select(
             "node",
             F.least(
                 F.col("label"), F.coalesce(F.col("m"), F.col("label"))
             ).alias("label"),
         )
-    return labels
+        return nxt, None
+
+    labels = nodes.select("node", F.col("node").alias("label"))
+    return _supersteps(labels, rounds, step)[0]
 
 
 def kcore(
@@ -705,7 +625,6 @@ def kcore(
     dst: str = "dst",
     rounds: int = 10,
     check_converged: bool = True,
-    engine: str = "auto",
     max_nodes_broadcast: int = 50_000_000,
     max_edges_broadcast: int = 10_000_000,
 ) -> DataFrame:
@@ -721,29 +640,26 @@ def kcore(
     Peeling is confluent: the k-core is unique regardless of removal
     order (Seidman 1983, public), and a round applied to a converged
     core removes nothing — so extra rounds are idempotent and
-    ``rounds`` is an upper bound, not a semantic knob.
-    ``check_converged`` adds one tiny aggregate (min surviving degree
-    >= k) and fails loudly if the peel needs more rounds — never
-    silently returns a non-core.
+    ``rounds`` is an upper bound, not a semantic knob. Both engines
+    stop at the first round with no deaths. ``check_converged`` adds
+    one tiny aggregate (min surviving degree >= k) and fails loudly if
+    the peel needs more rounds — never silently returns a non-core.
 
     Two physical engines (same layer-synchronous peel, identical
     (node, degree) output — pinned byte-equal in
     tests/test_graph_linkage.py):
 
-    ``engine="broadcast"`` (|V| up to ``max_nodes_broadcast``): each
-    round is one degree aggregation over the surviving symmetric edge
-    set plus two broadcast semi-joins against the |V|-bounded survivor
-    list — edges shuffle only in the per-round groupBy, over a
-    monotonically SHRINKING frame. Refuses loudly past the width guard
-    (the pagerank discipline; ADVICE r9 — previously this engine would
-    OOM executors silently instead of raising with advice).
+    broadcast (small graphs): each round is one degree aggregation over
+    the surviving symmetric edge set plus two broadcast semi-joins
+    against the |V|-bounded survivor list — edges shuffle only in the
+    per-round groupBy, over a monotonically SHRINKING frame.
 
-    ``engine="shuffle"`` (no width ceiling): **delta peeling.** The
-    symmetric edge frame is hash-partitioned ONCE by ``u`` and frozen;
-    the round state is the |V|-row live-degree table, co-partitioned
-    on the same key. Per round, only the NEWLY dead nodes (live degree
-    just dropped below k) send messages: their edges are selected with
-    a co-partitioned semi-join (exchange-free), aggregated by the far
+    shuffle (no width ceiling): **delta peeling.** The symmetric edge
+    frame is hash-partitioned ONCE by ``u`` and frozen; the round state
+    is the |V|-row live-degree table, co-partitioned on the same key.
+    Per round, only the NEWLY dead nodes (live degree just dropped
+    below k) send messages: their edges are selected with a
+    co-partitioned semi-join (exchange-free), aggregated by the far
     endpoint (``groupBy(v)`` — the ONE per-round exchange, bounded by
     the edges incident to this round's deaths, not |E|), and the
     decrements land on the live-degree table through another
@@ -759,83 +675,39 @@ def kcore(
     after R rounds both hold the same survivors with the same
     in-core degrees.
 
-    ``engine="auto"`` dispatches on BOTH graph dimensions (one
-    distinct-count job plus one checkpoint-block count, both cheap
-    relative to a peel): shuffle when ``n_nodes >
-    max_nodes_broadcast`` (the MEMORY guard — past it the broadcast
-    engine raises instead of OOMing) **or** when ``n_edges >
-    max_edges_broadcast`` (the COST dispatch: measured at 100x —
-    PERFORMANCE.md r10 table — the delta engine is ~30x faster on a
-    ~50M-edge graph, 71 vs 2155 s both spill-free, because the
-    broadcast engine re-materializes the full shrinking frame every
-    round while delta rounds move only the deaths' incident edges;
-    broadcast wins only when the whole graph is small — 1x: 8.0 vs
-    11.0 s, the up-front |E| repartition dominating). Dispatch can
-    never change results: the engines are byte-equal by construction.
-    An explicit ``engine="broadcast"`` honors the user's cost choice
-    and applies only the memory guard.
-
-    Lineage is truncated per round, components.py-style; the last
-    round stays a live plan so plan audits see the real per-round
-    physical shape.
+    Dispatch: shuffle past ``max_edges_broadcast`` (the COST dispatch:
+    measured at 100x — PERFORMANCE.md r10 table — the delta engine is
+    ~30x faster on a ~50M-edge graph, 71 vs 2155 s both spill-free,
+    because the broadcast engine re-materializes the full shrinking
+    frame every round while delta rounds move only the deaths'
+    incident edges; broadcast wins only when the whole graph is small
+    — 1x: 8.0 vs 11.0 s, the up-front |E| repartition dominating) or
+    past ``max_nodes_broadcast`` (the MEMORY guard). The edge count
+    comes first and reads the canonical edge checkpoint; the node
+    count runs only when the edge count leaves the choice open.
     """
     if k < 1:
         raise ValueError("k must be >= 1")
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    if engine not in _ENGINES:
-        raise ValueError(f"engine must be one of {_ENGINES}, got {engine!r}")
-    raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    sym = (
-        raw.filter(F.col("u") != F.col("v"))
-        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
+    both = _undirected(edges, src, dst)
+    # materializes the canonical edge checkpoint both engines iterate
+    # over, so it is not a throwaway pass
+    n_both = both.count()
+    engine = _engine(
+        lambda: both.select("u").distinct().count(), max_nodes_broadcast,
+        n_both // 2, max_edges_broadcast,
     )
-    both = sym.union(sym.select(F.col("v").alias("u"), F.col("u").alias("v")))
-
-    n_edges = None
-    if engine != "shuffle":
-        # the guard/dispatch needs |V|; the count job also materializes
-        # the sym checkpoint both engines iterate over, so it is not a
-        # throwaway pass. The |E| count after it reads the materialized
-        # checkpoint blocks — cheap relative to a single peel round.
-        n_nodes = both.select("u").distinct().count()
-        if engine == "auto":
-            n_edges = sym.count()
-            engine = (
-                "broadcast"
-                if n_nodes <= max_nodes_broadcast
-                and n_edges <= max_edges_broadcast
-                else "shuffle"
-            )
-        elif n_nodes > max_nodes_broadcast:
-            raise ValueError(
-                f"kcore: {n_nodes} nodes exceeds max_nodes_broadcast="
-                f"{max_nodes_broadcast}; the per-round survivor broadcast "
-                "would not fit executors — pass engine='shuffle' (or "
-                "'auto') for graphs this wide"
-            )
-
-    if engine == "shuffle":
-        spark_ = edges.sparkSession
-        if n_edges is None:
-            # explicit-shuffle callers skip the dispatch counts: the
-            # sizing count materializes the sym checkpoint, work the
-            # first peel round would have triggered anyway
-            n_edges = sym.count()
-        num = _scaled_partitions(spark_, 2 * n_edges)
-        with _aqe_compile_off(spark_), _shuffle_fanout(spark_, num):
-            final_deg = _kcore_delta_rounds(both, k, rounds, spark_, num)
-            # freeze the final plan inside the window (the pagerank
-            # discipline): direct consumers see the per-round shape at
-            # the adaptive fan-out
-            final_deg._jdf.queryExecution().executedPlan()
-    else:
-        final_deg = _kcore_broadcast_rounds(both, k, rounds)
-
+    rounds_fn = _kcore_broadcast_rounds if engine == "broadcast" else _kcore_delta_rounds
+    deg = _run(
+        engine, edges.sparkSession, lambda: n_both,
+        partial(rounds_fn, both, k, rounds),
+    )
+    final = deg.select(
+        F.col("u").alias("node"), F.col("deg").cast("bigint").alias("degree")
+    )
     if check_converged:
-        lo = final_deg.agg(F.min("degree")).first()[0]
+        lo = final.agg(F.min("degree")).first()[0]
         if lo is not None and lo < k:
             raise ValueError(
                 f"kcore: a surviving node still has degree {lo} < k={k} "
@@ -843,75 +715,57 @@ def kcore(
                 "raise rounds (extra rounds past convergence are idempotent "
                 "and cheap: each is one aggregate over the shrunken core)"
             )
-    return final_deg.select("node", "degree")
+    return final
 
 
-def _kcore_broadcast_rounds(both: DataFrame, k: int, rounds: int) -> DataFrame:
+def _kcore_broadcast_rounds(
+    both: DataFrame, k: int, rounds: int, small, _num: None
+) -> DataFrame:
     """Broadcast engine: re-filter the shrinking edge set each round.
+    Returns the ``(u, deg)`` survivor degrees. Each round's death count
+    reads the checkpointed |V|-row degree table, which the chained lazy
+    checkpoints would have materialized at the final action anyway; at
+    the fixpoint that table already IS the result."""
+    deg = None
 
-    Early exit (r11): peeling is confluent and a round that removes
-    nothing proves every later round removes nothing — so each round
-    counts this round's deaths (one tiny job over the checkpointed
-    |V|-row degree table, which the chained lazy checkpoints would have
-    materialized at the final action anyway) and STOPS at the fixpoint
-    instead of paying ``rounds - depth`` no-op rounds, each of which
-    still re-materializes the full surviving edge frame. ``rounds``
-    stays the upper bound and the non-converged contract is unchanged.
-    On early exit the degree table already computed IS the result, so
-    the final aggregate is free too."""
-    alive = both.localCheckpoint(eager=False)
-    for i in range(rounds):
-        if i:
-            alive = alive.localCheckpoint(eager=False)
+    def step(alive):
+        nonlocal deg
         deg = alive.groupBy("u").agg(
             F.count(F.lit(1)).alias("deg")
         ).localCheckpoint(eager=False)
-        if deg.filter(F.col("deg") < k).count() == 0:
-            return deg.select(
-                F.col("u").alias("node"), F.col("deg").cast("bigint").alias("degree")
-            )
         keep = deg.filter(F.col("deg") >= k).select("u")
-        alive = alive.join(F.broadcast(keep), "u", "left_semi").join(
-            F.broadcast(keep.select(F.col("u").alias("v"))), "v", "left_semi"
+        nxt = alive.join(small(keep), "u", "left_semi").join(
+            small(keep.select(F.col("u").alias("v"))), "v", "left_semi"
         )
-    return alive.groupBy("u").agg(
-        F.count(F.lit(1)).cast("bigint").alias("degree")
-    ).select(F.col("u").alias("node"), "degree")
+        return nxt, deg.filter(F.col("deg") < k)
+
+    alive, settled = _supersteps(both.localCheckpoint(eager=False), rounds, step)
+    if settled:
+        return deg
+    return alive.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
 
 
 def _kcore_delta_rounds(
-    both: DataFrame, k: int, rounds: int, spark_, num: int
+    both: DataFrame, k: int, rounds: int, small, num: int
 ) -> DataFrame:
     """Shuffle engine: Pregel-style delta peeling over a frozen,
     u-partitioned edge frame — only newly-dead nodes send degree
     decrements, so the per-round exchange is bounded by the deaths'
     incident edges and each edge moves at most twice across the peel.
-
-    Early exit (r11), same argument as the broadcast engine: a round
-    with zero deaths proves the fixpoint — the per-round death count
-    is one tiny job over the checkpointed |V|-row live-degree table,
-    and it saves every later no-op round's stages."""
-    _small = lambda df: df.hint("shuffle_hash")  # noqa: E731
+    Returns the ``(u, deg)`` survivor degrees."""
     # the ONE |E| shuffle of this engine; with AQE off at compile time
     # the checkpoint preserves HashPartitioning(u), so the per-round
     # semi-join and the degree aggregation below are exchange-free
     e = both.repartition(num, "u").localCheckpoint(eager=False)
-    # live-degree table: |V| rows, co-partitioned with e on the node
-    # key (groupBy("u") over a u-partitioned frame inserts no exchange
-    # and emits the same HashPartitioning)
-    deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-    for i in range(rounds):
-        deg = deg.localCheckpoint(eager=False)
+
+    def step(deg):
         dead = deg.filter(F.col("deg") < k).select("u")
-        if dead.count() == 0:
-            break
-        live = deg.filter(F.col("deg") >= k)
         # edges whose near endpoint just died, keyed by the far one:
         # the semi-join is co-partitioned on u (free); the groupBy(v)
         # is THE per-round exchange, carrying only the dead nodes'
         # incident edges (map-side combined to <= |V| rows out)
         msgs = (
-            e.join(_small(dead), "u", "left_semi")
+            e.join(small(dead), "u", "left_semi")
             .groupBy("v")
             .agg(F.count(F.lit(1)).alias("dec"))
         )
@@ -921,20 +775,25 @@ def _kcore_delta_rounds(
         # SHUFFLE_HASH join is exchange-free — and decrements addressed
         # to same-round deaths vanish here because the left side is the
         # LIVE table only
-        deg = live.join(
-            _small(msgs.select(F.col("v").alias("u"), "dec")), "u", "left"
+        nxt = deg.filter(F.col("deg") >= k).join(
+            small(msgs.select(F.col("v").alias("u"), "dec")), "u", "left"
         ).select(
             "u", (F.col("deg") - F.coalesce("dec", F.lit(0))).alias("deg")
         )
+        return nxt, dead
+
+    # live-degree table: |V| rows, co-partitioned with e on the node
+    # key (groupBy("u") over a u-partitioned frame inserts no exchange
+    # and emits the same HashPartitioning)
+    deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
+    deg, _ = _supersteps(deg.localCheckpoint(eager=False), rounds, step)
     # deg == 0 means every neighbor died: the node has NO surviving
     # edges, so the broadcast engine (degree recomputed from surviving
     # edges) never emits it — drop it here too so the engines agree
-    # byte-for-byte even on a non-converged peel's final table (ADVICE
-    # r10; a 0-degree node can never sit in a k>=1 core, so this never
-    # removes a true core member).
-    return deg.filter(F.col("deg") > 0).select(
-        F.col("u").alias("node"), F.col("deg").cast("bigint").alias("degree")
-    )
+    # byte-for-byte even on a non-converged peel's final table (a
+    # 0-degree node can never sit in a k>=1 core, so this never removes
+    # a true core member).
+    return deg.filter(F.col("deg") > 0)
 
 
 def triangle_count(
@@ -971,17 +830,9 @@ def triangle_count(
     raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint(
         eager=False
     )
-    sym = (
-        raw.filter(F.col("u") != F.col("v"))
-        .select(
-            F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-        )
-        .distinct()
-        # ...and the canonical set once more: degree, orientation and
-        # closure all branch from here
-        .localCheckpoint(eager=False)
-    )
-    both = sym.union(sym.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    # ...and the canonical set once more (in _undirected): degree,
+    # orientation and closure all branch from here
+    both = _undirected(raw, "u", "v")
     deg = both.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
 
     # orient by (degree, id): strict total order, so exactly one
@@ -1011,7 +862,7 @@ def triangle_count(
     # close against `both` (one step from the checkpoint): oriented +
     # its reverse IS the symmetric edge set, and rebuilding it from
     # `oriented` would re-run the two orientation joins a third and
-    # fourth time (review find). Build on the edge set, STREAM the
+    # fourth time. Build on the edge set, STREAM the
     # wedges — the asymmetric side sizes are the whole point of the
     # hint here.
     closed = wedges.join(
@@ -1025,7 +876,7 @@ def triangle_count(
     # instead of unioning three projections of `closed` — the union
     # form re-plans (and re-executes) the wedge+closure join pipeline,
     # the most expensive subtree in the operator, once PER CORNER
-    # (r11 plan audit: three copies under the final aggregate).
+    # (three copies under the final aggregate).
     # explode triples the row count of a frame that already exists
     # instead of tripling the joins; counts are identical.
     per_node = (
@@ -1037,12 +888,7 @@ def triangle_count(
     )
     # node spine from the RAW edges, not the loop-filtered set: a node
     # whose only edge is a self-loop is still a node and must appear
-    # zero-filled (review find)
-    nodes = (
-        raw.select(F.col("u").alias("node"))
-        .union(raw.select(F.col("v").alias("node")))
-        .distinct()
-    )
-    return nodes.join(per_node, "node", "left").select(
+    # zero-filled
+    return _spine(raw, "u", "v").join(per_node, "node", "left").select(
         "node", F.coalesce("triangles", F.lit(0)).cast("bigint").alias("triangles")
     )

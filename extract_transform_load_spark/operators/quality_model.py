@@ -199,7 +199,21 @@ def featurized_doc_state(
     in-flight feature array per doc (vectorized, no md5/tokenize
     replication, so there is no cross-language semantics risk). The
     checkpoint materializes on first use and is released with the
-    frame (no unpersist bookkeeping)."""
+    frame (no unpersist bookkeeping).
+
+    Caveats:
+
+    - ``passthrough_cols`` and ``extra_cols`` cross the Arrow boundary
+      through pandas, which mangles two kinds of value silently: a NaN
+      double comes back as NULL, and a nullable integer travels as
+      float64, so one above 2^53 loses precision. Neither may reach
+      this function. The internal columns are safe (``n_words``,
+      ``__ttr`` and ``__fp`` are never NaN, since ``words('')`` yields
+      ``['']``).
+    - the state is bounded by ``n_buckets``, not by the text, so on
+      very short documents it approaches the text's own size: a doc of
+      a few distinct words keeps one (int, int) histogram entry per
+      word."""
     import numpy as np
 
     feats = hashed_features(F.col(text_col), n_buckets)

@@ -5152,7 +5152,8 @@ def q147_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so one oracle pins both engines byte-equal cross-engine — the
     # strongest possible equivalence evidence for the 100 TB path.
     oracle=_Q143_ORACLE,
-    doc="q143's PageRank under engine='shuffle' — the page-level-width "
+    doc="q143's PageRank on the shuffle engine, forced by a zero "
+    "max_nodes_broadcast — the page-level-width "
     "path (|V| beyond the ~5e7 rank-broadcast ceiling): edges are "
     "hash-partitioned by src ONCE, ranks/outdeg/spine stay node-hashed "
     "with the same fan-out, every per-round join is co-partitioned "
@@ -5161,7 +5162,7 @@ def q147_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     "plan-audited in tests/test_graph_linkage.py (exactly one "
     "hashpartitioning Exchange, zero Broadcast) and byte-equal to the "
     "broadcast engine by the shared oracle. "
-    "operators/graph.py::pagerank(engine='shuffle').",
+    "operators/graph.py::pagerank(max_nodes_broadcast=0).",
 )
 def q149_pagerank_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import pagerank
@@ -5184,7 +5185,8 @@ def q149_pagerank_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = fwd.union(
         fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    pr = pagerank(edges, iterations=5, assume_distinct=True, engine="shuffle")
+    # a zero node threshold forces the shuffle engine on this small graph
+    pr = pagerank(edges, iterations=5, assume_distinct=True, max_nodes_broadcast=0)
     return pr.orderBy(F.col("rank_units").desc(), "node").limit(20)
 
 
@@ -5306,7 +5308,8 @@ def q150_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # verdict's "What's wrong" #1 (kcore's unguarded survivor
     # broadcast was the last hard 100 TB blocker in the family).
     oracle=_Q150_ORACLE,
-    doc="q150's k-core peel under engine='shuffle' — the width path: "
+    doc="q150's k-core peel on the shuffle engine, forced by a zero "
+    "max_edges_broadcast — the width path: "
     "the symmetric edge frame is hash-partitioned ONCE by node and "
     "frozen; per round only the NEWLY dead nodes send degree "
     "decrements (co-partitioned semi-join, exchange-free) aggregated "
@@ -5316,7 +5319,7 @@ def q150_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     "most twice (once per endpoint death). No broadcast, no width "
     "ceiling; plan-audited in tests/test_graph_linkage.py (zero "
     "Broadcast, exactly one hashpartitioning Exchange, no SMJ). "
-    "operators/graph.py::kcore(engine='shuffle').",
+    "operators/graph.py::kcore(max_edges_broadcast=0).",
 )
 def q154_kcore_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import kcore
@@ -5331,7 +5334,9 @@ def q154_kcore_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    return kcore(edges, k=30, rounds=10, engine="shuffle")
+    # a zero edge threshold forces the shuffle engine and skips the
+    # node count: one counting job
+    return kcore(edges, k=30, rounds=10, max_edges_broadcast=0)
 
 
 @query(

@@ -16,7 +16,8 @@
 
 Round-9 additions (the r8 verdict's ranked task 4):
 
-- ``pagerank(engine="shuffle")`` over the same 100x edge replica — the
+- ``pagerank(max_nodes_broadcast=0)`` (the shuffle engine, forced by
+  a zero node threshold) over the same 100x edge replica — the
   width-scaling engine's cost relative to broadcast AT A WIDTH WHERE
   BROADCAST STILL WINS (its advantage is surviving |V| > 5e7, not
   speed here; the row pins the co-partitioned round cost and shuffle
@@ -141,7 +142,7 @@ def main() -> None:
                 edges_from(sf_dir),
                 iterations=5,
                 assume_distinct=True,
-                engine="shuffle",
+                max_nodes_broadcast=0,  # force the shuffle engine
             )
         )
 

@@ -1,7 +1,8 @@
 """100x scale measurement for the round-9/10 operators that lacked
 100x rows (PERFORMANCE.md; the r9 verdict's ranked task 5):
 
-- ``kcore`` (both engines) over the 100x orders+lineitem edge replica
+- ``kcore`` (both engines, forced by ``max_edges_broadcast``) over the
+  100x orders+lineitem edge replica
   (the q150 feed at 100x; reuses bench_pipeline_scale100's replica).
   Edge-scaling rule: each replica-shifted custkey reproduces its
   original supplier set, so distinct edges scale ~100x while the
@@ -10,7 +11,9 @@
   per-round cost at 100x width. Supplier-side degrees grow ~100x
   (they aggregate all replicas), which is exactly the hub shape the
   degree aggregation's map-side combine must absorb.
-- ``min_label_propagation`` (both engines) over the 100x fuzzy-pair
+- ``min_label_propagation`` (both engines; the broadcast leg runs
+  under the default thresholds, the shuffle leg forces
+  ``max_edges_broadcast=0``) over the 100x fuzzy-pair
   graph (the q153 feed at 100x; |E| scales linearly with customers —
   the q145 scaling rule: 9-digit regenerated names keep prefix blocks
   <= 1000 rows and a constant ~27 dist-1 neighbors per name).
@@ -84,10 +87,13 @@ def main() -> None:
         )
 
     def run_kcore(sf_dir: str) -> None:
-        noop(kcore(edges_from(sf_dir), k=30, rounds=10))
+        # force the broadcast engine: the 100x replica's edge count is
+        # past the default cost crossover (max_edges_broadcast)
+        noop(kcore(edges_from(sf_dir), k=30, rounds=10, max_edges_broadcast=10**12))
 
     def run_kcore_shuffle(sf_dir: str) -> None:
-        noop(kcore(edges_from(sf_dir), k=30, rounds=10, engine="shuffle"))
+        # a zero edge threshold forces the shuffle engine
+        noop(kcore(edges_from(sf_dir), k=30, rounds=10, max_edges_broadcast=0))
 
     def pair_graph(sf_dir: str):
         return fuzzy_pairs(
@@ -112,7 +118,7 @@ def main() -> None:
                 src="id_a",
                 dst="id_b",
                 rounds=3,
-                engine="shuffle",
+                max_edges_broadcast=0,  # force the shuffle engine
             )
         )
 

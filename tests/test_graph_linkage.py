@@ -47,17 +47,6 @@ class TestPagerank:
         assert out.count() == 0
         assert out.columns == ["node", "rank_units", "rank"]
 
-    def test_broadcast_guard_fails_loud(self, spark):
-        # forced broadcast past the cap refuses (auto would dispatch to
-        # the shuffle engine instead — TestPagerankEngines)
-        with pytest.raises(ValueError, match="max_nodes_broadcast"):
-            pagerank(
-                _edges(spark, [(1, 2), (2, 1)]),
-                iterations=1,
-                max_nodes_broadcast=1,
-                engine="broadcast",
-            )
-
     def test_dangling_mass_leaks_not_crashes(self, spark):
         # 1 -> 2 only: node 2 is dangling (outdeg 0); its mass is not
         # redistributed (documented variant) but every node still gets
@@ -492,80 +481,61 @@ class TestKCore:
         assert "BroadcastExchange" not in plan  # no round ran past the check
         assert self._core(spark, k4, k=2, rounds=2) == {1: 3, 2: 3, 3: 3, 4: 3}
 
-    # ---- round 10: the shuffle (delta-peeling) engine ----
+    # ---- the shuffle (delta-peeling) engine, forced by a zero edge
+    # threshold; the default thresholds keep these graphs on broadcast ----
 
     def test_engines_byte_equal(self, spark):
         # triangle + tail + a second cycle: deaths cascade over two
         # rounds, survivors keep in-core degrees — both engines must
         # agree exactly (k-core is unique; Seidman 1983)
         g = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 3), (1, 4)]
-        b = self._core(spark, g, k=2, engine="broadcast")
-        s = self._core(spark, g, k=2, engine="shuffle")
+        b = self._core(spark, g, k=2)
+        s = self._core(spark, g, k=2, max_edges_broadcast=0)
         assert b == s
         assert b  # non-vacuous: the 2-core here is non-empty
 
     def test_engines_agree_when_all_neighbors_die_last_round(self, spark):
-        # ADVICE r10: a survivor whose neighbors ALL die in the final
-        # round drops to live degree 0 — the delta engine used to keep
-        # its (node, 0) row while the broadcast engine (degree
-        # recomputed from surviving edges) omitted it. Star, k=2,
-        # rounds=1, unconverged view: the leaves die, the hub's degree
-        # hits 0 — both engines must return the same EMPTY table.
+        # a survivor whose neighbors ALL die in the final round drops
+        # to live degree 0; the broadcast engine (degree recomputed
+        # from surviving edges) omits it, so the delta engine must too.
+        # Star, k=2, rounds=1, unconverged view: the leaves die, the
+        # hub's degree hits 0 — both engines must return the same EMPTY
+        # table.
         star = [(1, i) for i in range(2, 6)]
         kw = dict(k=2, rounds=1, check_converged=False)
-        b = self._core(spark, star, engine="broadcast", **kw)
-        s = self._core(spark, star, engine="shuffle", **kw)
+        b = self._core(spark, star, **kw)
+        s = self._core(spark, star, max_edges_broadcast=0, **kw)
         assert b == s == {}
 
     def test_shuffle_cascade_and_convergence_check(self, spark):
         path = [(1, 2), (2, 3), (3, 4), (4, 5)]
         # the delta peel cascades layer-synchronously like broadcast...
-        assert self._core(spark, path, k=2, rounds=3, engine="shuffle") == {}
+        shuffle = dict(k=2, max_edges_broadcast=0)
+        assert self._core(spark, path, rounds=3, **shuffle) == {}
         # ...and the loud convergence contract holds in shuffle mode too
         with pytest.raises(ValueError, match="not converged"):
-            self._core(spark, path, k=2, rounds=1, engine="shuffle")
+            self._core(spark, path, rounds=1, **shuffle)
 
     def test_auto_dispatches_to_shuffle_past_cap(self, spark):
         tri = [(1, 2), (2, 3), (3, 1), (3, 4)]
-        auto = self._core(spark, tri, k=2, max_nodes_broadcast=1, engine="auto")
-        assert auto == self._core(spark, tri, k=2, engine="broadcast")
+        auto = self._core(spark, tri, k=2, max_nodes_broadcast=1)
+        assert auto == self._core(spark, tri, k=2)
 
     def test_auto_dispatches_on_edge_count_too(self, spark):
-        # the r10 cost dispatch: a 30x-measured crossover means auto
+        # the cost dispatch: a 30x-measured crossover means the peel
         # must ALSO route to shuffle when |E| exceeds the edge cap,
         # even while |V| fits the memory guard — byte-equal engines
         # make the routing invisible to results
         tri = [(1, 2), (2, 3), (3, 1), (3, 4)]
-        auto = self._core(spark, tri, k=2, max_edges_broadcast=1, engine="auto")
-        assert auto == self._core(spark, tri, k=2, engine="broadcast")
-        # an explicit broadcast choice ignores the COST cap (only the
-        # memory guard applies)
-        assert (
-            self._core(
-                spark, tri, k=2, engine="broadcast", max_edges_broadcast=1
-            )
-            == auto
-        )
-
-    def test_broadcast_guard_fails_loud(self, spark):
-        # ADVICE r9 / VERDICT r9 "What's wrong" #1: past the width cap
-        # the broadcast engine must RAISE with advice, not OOM silently
-        with pytest.raises(ValueError, match="max_nodes_broadcast"):
-            self._core(
-                spark, [(1, 2), (2, 3)], k=1,
-                engine="broadcast", max_nodes_broadcast=1,
-            )
-
-    def test_engine_validation(self, spark):
-        with pytest.raises(ValueError, match="engine"):
-            self._core(spark, [(1, 2)], k=1, engine="peel")
+        auto = self._core(spark, tri, k=2, max_edges_broadcast=1)
+        assert auto == self._core(spark, tri, k=2)
 
     def test_shuffle_plan_one_exchange_no_broadcast(self, spark, monkeypatch):
         # the delta engine's per-round physics: zero broadcasts, no SMJ,
         # and exactly ONE hashpartitioning exchange (the groupBy(v)
         # decrement shuffle) — edges and the live-degree table stay
         # co-partitioned on the node key across rounds. The fan-out is
-        # scale-adaptive (r11): a test-sized graph collapses to ONE
+        # scale-adaptive: a test-sized graph collapses to ONE
         # partition (zero exchanges — strictly cheaper), so the audit
         # pins the at-scale shape by forcing multi-partition sizing,
         # and uses a fixture that does NOT converge inside `rounds`
@@ -579,7 +549,7 @@ class TestKCore:
         path = [(1, 2), (2, 3), (3, 4), (4, 5)]
         out = kcore(
             _edges(spark, path), k=2, rounds=1,
-            check_converged=False, engine="shuffle",
+            check_converged=False, max_edges_broadcast=0,
         )
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "Broadcast" not in plan
@@ -587,20 +557,62 @@ class TestKCore:
         assert "SortMergeJoin" not in plan
 
 
-def test_aqe_compile_off_is_reentrant(spark):
-    # ADVICE r9 (medium): two overlapping shuffle-engine calls on one
-    # session must not leave AQE off session-wide — the FIRST entry
-    # snapshots+disables, the LAST exit restores, inner exits are no-ops
-    from extract_transform_load_spark.operators.graph import _aqe_compile_off
+def test_aqe_compile_off_is_reentrant(spark, monkeypatch):
+    # two overlapping shuffle-engine calls on one session must not
+    # leave AQE off session-wide: the FIRST entry saves and disables,
+    # the LAST exit restores, and each exit restores the fan-out its
+    # own entry replaced
+    from extract_transform_load_spark.operators import graph
 
-    orig = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    with _aqe_compile_off(spark):
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-        with _aqe_compile_off(spark):
-            assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-        # the inner exit (the r9 race's second caller) must NOT restore
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-    assert spark.conf.get("spark.sql.adaptive.enabled") == orig
+    aqe, fanout = "spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions"
+    monkeypatch.setattr(graph, "_EDGE_ROWS_PER_PARTITION", 1)
+    orig = spark.conf.get(aqe, "true"), spark.conf.get(fanout)
+    with graph._compile_window(spark, 3) as outer:
+        assert spark.conf.get(aqe) == "false"
+        assert spark.conf.get(fanout) == str(outer.num) == "3"
+        with graph._compile_window(spark, 2) as inner:
+            assert spark.conf.get(aqe) == "false"
+            assert spark.conf.get(fanout) == str(inner.num) == "2"
+        # the inner exit must NOT restore AQE, and must hand the outer
+        # window its own fan-out back
+        assert spark.conf.get(aqe) == "false"
+        assert spark.conf.get(fanout) == "3"
+    assert (spark.conf.get(aqe), spark.conf.get(fanout)) == orig
+    assert not graph._WINDOWS
+
+
+def test_compile_window_survives_concurrent_callers(spark):
+    # more threads than cores entering and leaving windows on one
+    # session: AQE must read off inside every open window, and the
+    # session's own conf must come back once the last one closes
+    import sys
+    import threading
+
+    from extract_transform_load_spark.operators import graph
+
+    aqe, fanout = "spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions"
+    orig = spark.conf.get(aqe, "true"), spark.conf.get(fanout)
+    seen = []
+
+    def worker(n):
+        for _ in range(15):
+            with graph._compile_window(spark, n):
+                seen.append(spark.conf.get(aqe))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=worker, args=(n,)) for n in range(1, 9)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert len(seen) == 8 * 15 and set(seen) == {"false"}
+    assert (spark.conf.get(aqe), spark.conf.get(fanout)) == orig
+    assert not graph._WINDOWS
 
 
 class TestMinLabelPropagation:
@@ -644,28 +656,26 @@ class TestMinLabelPropagation:
 
     def test_engines_byte_equal(self, spark):
         pairs = TestPagerankEngines.PAIRS
-        b = self._lp(spark, pairs, rounds=3, engine="broadcast")
-        s = self._lp(spark, pairs, rounds=3, engine="shuffle")
+        b = self._lp(spark, pairs, rounds=3)
+        s = self._lp(spark, pairs, rounds=3, max_edges_broadcast=0)
         assert b == s
 
     def test_auto_dispatches_on_edge_count(self, spark):
         pairs = [(1, 2), (2, 3), (10, 11)]
         auto = self._lp(spark, pairs, rounds=2, max_edges_broadcast=1)
-        assert auto == self._lp(spark, pairs, rounds=2, engine="broadcast")
+        assert auto == self._lp(spark, pairs, rounds=2)
 
     def test_validation(self, spark):
         import pytest as _pt
 
         with _pt.raises(ValueError, match="rounds"):
             self._lp(spark, [(1, 2)], rounds=0)
-        with _pt.raises(ValueError, match="engine"):
-            self._lp(spark, [(1, 2)], rounds=1, engine="gossip")
 
     def test_shuffle_plan_one_exchange_no_broadcast(self, spark, monkeypatch):
         # same audit as pagerank's shuffle engine: the final round's
         # plan carries exactly ONE hashpartitioning exchange (the
         # groupBy(dst) MIN message shuffle), zero broadcasts, no SMJ.
-        # Fan-out forced multi-partition (r11 scale-adaptive sizing
+        # Fan-out forced multi-partition (scale-adaptive sizing
         # collapses a test graph to one partition and zero exchanges).
         import re
 
@@ -676,7 +686,8 @@ class TestMinLabelPropagation:
 
         monkeypatch.setattr(graph, "_EDGE_ROWS_PER_PARTITION", 1)
         out = min_label_propagation(
-            _edges(spark, TestPagerankEngines.PAIRS), rounds=2, engine="shuffle"
+            _edges(spark, TestPagerankEngines.PAIRS), rounds=2,
+            max_edges_broadcast=0,
         )
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "Broadcast" not in plan
@@ -685,9 +696,10 @@ class TestMinLabelPropagation:
 
 
 class TestPagerankEngines:
-    """Round 9: the shuffle-join engine (ranks and edges co-partitioned
-    by node, reused across rounds) must be BYTE-EQUAL to the broadcast
-    engine — same int64 fixed-point math, different physical plan."""
+    """The shuffle-join engine (ranks and edges co-partitioned by node,
+    reused across rounds; forced here by a zero node threshold) must be
+    BYTE-EQUAL to the broadcast engine — same int64 fixed-point math,
+    different physical plan."""
 
     # a planted graph with every structural feature the rounds touch:
     # a hub, a cycle, a dangling-ish leaf, asymmetric degrees
@@ -701,70 +713,68 @@ class TestPagerankEngines:
 
     def test_plain_engines_byte_equal(self, spark):
         e = _edges(spark, self.PAIRS)
-        b = self._by(pagerank(e, iterations=5, engine="broadcast"))
-        s = self._by(pagerank(e, iterations=5, engine="shuffle"))
+        b = self._by(pagerank(e, iterations=5))
+        s = self._by(pagerank(e, iterations=5, max_nodes_broadcast=0))
         assert b == s
 
     def test_weighted_engines_byte_equal(self, spark):
         rows = [(a, b, (a * 7 + b) % 5 + 1) for a, b in self.PAIRS]
         e = spark.createDataFrame(rows, "src bigint, dst bigint, w bigint")
-        b = self._by(pagerank(e, iterations=4, weight="w", engine="broadcast"))
-        s = self._by(pagerank(e, iterations=4, weight="w", engine="shuffle"))
+        b = self._by(pagerank(e, iterations=4, weight="w"))
+        s = self._by(pagerank(e, iterations=4, weight="w", max_nodes_broadcast=0))
         assert b == s
 
     def test_personalized_engines_byte_equal(self, spark):
         e = _edges(spark, self.PAIRS)
         seeds = spark.createDataFrame([(1,), (4,)], "node bigint")
-        b = self._by(pagerank(e, iterations=4, seeds=seeds, engine="broadcast"))
-        s = self._by(pagerank(e, iterations=4, seeds=seeds, engine="shuffle"))
+        b = self._by(pagerank(e, iterations=4, seeds=seeds))
+        s = self._by(
+            pagerank(e, iterations=4, seeds=seeds, max_nodes_broadcast=0)
+        )
         assert b == s
 
     def test_auto_dispatches_to_shuffle_past_cap(self, spark):
-        # a width the broadcast engine refuses must run — and agree —
-        # under auto (which dispatches to shuffle)
+        # a width past the broadcast cap must run — and agree — on
+        # the shuffle engine
         e = _edges(spark, self.PAIRS)
-        auto = self._by(
-            pagerank(e, iterations=3, max_nodes_broadcast=1, engine="auto")
-        )
-        ref = self._by(pagerank(e, iterations=3, engine="broadcast"))
+        auto = self._by(pagerank(e, iterations=3, max_nodes_broadcast=1))
+        ref = self._by(pagerank(e, iterations=3))
         assert auto == ref
 
     def test_shuffle_plan_has_no_broadcast(self, spark, monkeypatch):
-        # the plan-audit the r8 verdict asked for: in shuffle mode the
-        # rank vector must NOT be broadcast — no BroadcastExchange (or
+        # in shuffle mode the rank vector must NOT be broadcast — no BroadcastExchange (or
         # BroadcastHashJoin) anywhere in the initial physical plan —
         # and the per-round cost is exactly ONE exchange (the
         # groupBy(dst) message shuffle): state (rank+outdeg+tele) and
         # the edge frame are co-partitioned on the node key, which the
         # AQE-off checkpoint compilation preserves across rounds.
-        # Fan-out forced multi-partition (r11 scale-adaptive sizing
+        # Fan-out forced multi-partition (scale-adaptive sizing
         # collapses a test graph to one partition and zero exchanges).
         import re
 
         from extract_transform_load_spark.operators import graph
 
         monkeypatch.setattr(graph, "_EDGE_ROWS_PER_PARTITION", 1)
-        out = pagerank(_edges(spark, self.PAIRS), iterations=2, engine="shuffle")
+        out = pagerank(
+            _edges(spark, self.PAIRS), iterations=2, max_nodes_broadcast=0
+        )
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "Broadcast" not in plan
         assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1
         assert "SortMergeJoin" not in plan  # SHJ streams edges unsorted
 
     def test_tiny_graph_collapses_to_single_partition_plan(self, spark):
-        # r11 scale-adaptive fan-out: below _EDGE_ROWS_PER_PARTITION
-        # edges the frozen frames land in ONE partition, so the round
-        # loop plans with NO exchange at all — the fewer-larger-
-        # partitions shape the guide prescribes for small inputs, with
-        # the session conf as the ceiling at scale (see
-        # _scaled_partitions).
-        out = pagerank(_edges(spark, self.PAIRS), iterations=2, engine="shuffle")
+        # scale-adaptive fan-out: below _EDGE_ROWS_PER_PARTITION edges
+        # the frozen frames land in ONE partition, so the round loop
+        # plans with NO exchange at all — the fewer-larger-partitions
+        # shape the guide prescribes for small inputs, with the session
+        # conf as the ceiling at scale (see _compile_window).
+        out = pagerank(
+            _edges(spark, self.PAIRS), iterations=2, max_nodes_broadcast=0
+        )
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan
         assert "Broadcast" not in plan
-
-    def test_engine_validation(self, spark):
-        with pytest.raises(ValueError, match="engine"):
-            pagerank(_edges(spark, [(1, 2)]), iterations=1, engine="pregel")
 
 
 def test_selfloop_only_node_still_zero_filled(spark):
