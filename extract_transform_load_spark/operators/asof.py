@@ -106,6 +106,11 @@ def _probe_right_stats(
     return stats
 
 
+def quote_ident(name: str) -> str:
+    """``name`` as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def as_of_join(
     left: DataFrame,
     right: DataFrame,
@@ -144,47 +149,29 @@ def as_of_join(
     on = list(on)
     value_cols = list(value_cols)
     out_cols = [f"{c}{suffix}" for c in value_cols]
-
-    # Side marker: right=0 sorts before left=1 at equal timestamps.
-    l_tagged = left.select(
-        *[F.col(c) for c in left.columns],
-        F.lit(1).alias("__side"),
-        F.col(left_ts).alias("__ts"),
-        F.lit(None).cast("double").alias("__rord"),
-        F.lit(None).cast("timestamp").alias("__vts"),
-        *[F.lit(None).cast(right.schema[c].dataType).alias(o) for c, o in zip(value_cols, out_cols)],
-    )
-    rord = F.col(right_order).cast("double") if right_order else F.lit(0.0)
-    r_tagged = right.select(
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in left.columns if c not in on],
-        *[F.col(c) for c in on],
-        F.lit(0).alias("__side"),
-        F.col(right_ts).alias("__ts"),
-        rord.alias("__rord"),
-        F.col(right_ts).cast("timestamp").alias("__vts"),
-        *[F.col(c).alias(o) for c, o in zip(value_cols, out_cols)],
-    )
-    unioned = l_tagged.unionByName(r_tagged)
-
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(f"direction must be backward|forward|nearest, got {direction!r}")
+    q = quote_ident
+    keys, outs = ", ".join(map(q, on)), ", ".join(map(q, out_cols))
 
-    wb = (
-        Window.partitionBy(*on)
-        .orderBy(F.col("__ts").asc(), F.col("__side").asc(), F.col("__rord").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    # The plan is built from whole SQL expressions, and the union fills
+    # each side's missing columns with typed nulls by name, so no step
+    # lists the left columns: construction costs the same few dozen py4j
+    # calls however wide the left frame is (each PySpark Column call
+    # costs about a dozen). Side marker: right=0 sorts before left=1 at
+    # equal timestamps.
+    rord = f"CAST({q(right_order)} AS DOUBLE)" if right_order else "0.0D"
+    r_tagged = right.selectExpr(
+        *map(q, on),
+        "0 AS __side",
+        f"{q(right_ts)} AS __ts",
+        f"{rord} AS __rord",
+        f"CAST({q(right_ts)} AS TIMESTAMP) AS __vts",
+        *[f"{q(c)} AS {q(o)}" for c, o in zip(value_cols, out_cols)],
     )
-    # Descending twin: walking from the future backward, the running
-    # last-right-value is the EARLIEST right at/after the current row.
-    # side still ascends so a right row at the exact left ts is visible.
-    wf = (
-        Window.partitionBy(*on)
-        .orderBy(F.col("__ts").desc(), F.col("__side").asc(), F.col("__rord").desc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    unioned = left.selectExpr("*", "1 AS __side", f"{q(left_ts)} AS __ts").unionByName(
+        r_tagged, allowMissingColumns=True
     )
-    fill_cols = [*out_cols, "__vts"]
-    keep = [c for c in unioned.columns if c not in fill_cols]
-    micros = F.unix_micros
     # The matched right ROW travels as ONE struct (non-null exactly for
     # right rows), so last(ignorenulls) picks the latest right row
     # ATOMICALLY. Filling each value column independently would skip a
@@ -193,64 +180,48 @@ def as_of_join(
     # __vts) and multi-column results mixing fields from different
     # right rows. The LATERAL ... LIMIT 1 semantics this mirrors return
     # the latest ROW, NULL fields included.
-    row_struct = F.when(
-        F.col("__side") == 0,
-        F.struct(F.col("__vts").alias("__vts"), *[F.col(o).alias(o) for o in out_cols]),
-    )
-    unioned = unioned.select(*keep, row_struct.alias("__row"))
+    unioned = unioned.withColumn(
+        "__row", F.expr(f"CASE WHEN __side = 0 THEN struct(__vts, {outs}) END")
+    ).drop("__vts", *out_cols)
 
-    def unpack(result, row_col: str):
-        return [F.col(f"{row_col}.{o}").alias(o) for o in out_cols] + [
-            F.col(f"{row_col}.__vts").alias("__vts")
-        ]
-
-    if direction in ("backward", "forward"):
-        w = wb if direction == "backward" else wf
-        filled = unioned.select(
-            *keep, F.last("__row", ignorenulls=True).over(w).alias("__row")
+    # backward: running last over ascending time. forward: its descending
+    # twin — walking from the future backward, the running last right row
+    # is the EARLIEST right at/after the current row (side still ascends,
+    # so a right row at the exact left ts is visible). nearest runs both
+    # passes over the same exchange, then picks per row.
+    def last_row(order: str):
+        return F.expr(
+            f"last(__row, true) OVER (PARTITION BY {keys} "
+            f"ORDER BY __ts {order}, __side ASC, __rord {order} "
+            "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
         )
-        result = filled.filter(F.col("__side") == 1).select(*keep, *unpack(filled, "__row"))
-        if tolerance_seconds is not None:
-            dist = micros(F.col(left_ts).cast("timestamp")) - micros(F.col("__vts"))
-            if direction == "forward":
-                dist = -dist
-            fresh = dist <= int(tolerance_seconds * 1_000_000)
-            result = result.select(
-                *[c for c in result.columns if c not in fill_cols],
-                *[F.when(fresh, F.col(o)).alias(o) for o in out_cols],
-                "__vts",
-            )
-        return result.drop("__side", "__ts", "__rord", "__vts")
 
-    # nearest: both passes over the same exchange, then pick per row.
-    filled = unioned.select(
-        *keep,
-        F.last("__row", ignorenulls=True).over(wb).alias("__row_b"),
-        F.last("__row", ignorenulls=True).over(wf).alias("__row_f"),
+    passes = {
+        "backward": {"__row": "ASC"},
+        "forward": {"__row": "DESC"},
+        "nearest": {"__row_b": "ASC", "__row_f": "DESC"},
+    }[direction]
+    result = unioned.withColumns({c: last_row(o) for c, o in passes.items()}).filter("__side = 1")
+    lts = f"unix_micros(CAST({q(left_ts)} AS TIMESTAMP))"
+    if direction == "nearest":
+        use_b = (
+            f"__row_f.__vts IS NULL OR (__row_b.__vts IS NOT NULL"
+            f" AND {lts} - unix_micros(__row_b.__vts) <= unix_micros(__row_f.__vts) - {lts})"
+        )
+        result = result.withColumn(
+            "__row", F.expr(f"CASE WHEN {use_b} THEN __row_b ELSE __row_f END")
+        )
+    if tolerance_seconds is not None:
+        # backward matches sit at or before the left ts, forward ones at
+        # or after it: the staleness is the absolute gap either way
+        tol = int(tolerance_seconds * 1_000_000)
+        result = result.withColumn(
+            "__row",
+            F.expr(f"CASE WHEN abs({lts} - unix_micros(__row.__vts)) <= {tol} THEN __row END"),
+        )
+    return result.selectExpr("*", *[f"__row.{q(o)} AS {q(o)}" for o in out_cols]).drop(
+        "__side", "__ts", "__rord", "__row", "__row_b", "__row_f"
     )
-    result = filled.filter(F.col("__side") == 1)
-    lts = micros(F.col(left_ts).cast("timestamp"))
-    vts_b = F.col("__row_b.__vts")
-    vts_f = F.col("__row_f.__vts")
-    dist_b = lts - micros(vts_b)
-    dist_f = micros(vts_f) - lts
-    use_b = vts_f.isNull() | (vts_b.isNotNull() & (dist_b <= dist_f))
-    chosen_dist = F.when(use_b, dist_b).otherwise(dist_f)
-    fresh = (
-        chosen_dist <= int(tolerance_seconds * 1_000_000)
-        if tolerance_seconds is not None
-        else F.lit(True)
-    )
-    result = result.select(
-        *[c for c in result.columns if c not in ("__row_b", "__row_f")],
-        *[
-            F.when(fresh & use_b, F.col(f"__row_b.{o}"))
-            .when(fresh & ~use_b, F.col(f"__row_f.{o}"))
-            .alias(o)
-            for o in out_cols
-        ],
-    )
-    return result.drop("__side", "__ts", "__rord")
 
 
 def as_of_join_bucketed(
@@ -340,41 +311,31 @@ def as_of_join_bucketed(
     )
 
     # --- 2. in-bucket union-sort window ---------------------------------
-    l_tagged = left.select(
-        *[F.col(c) for c in left.columns],
-        F.lit(2).alias("__side"),
-        F.col(left_ts).alias("__ts"),
-        F.lit(None).cast("double").alias("__rord"),
-        *[F.lit(None).cast(right.schema[c].dataType).alias(o) for c, o in zip(value_cols, out_cols)],
-        bucket_of(left_ts).alias("__bucket"),
+    # The unions fill each side's missing columns with typed nulls by
+    # name, so the left columns are never listed (width-independent
+    # plan construction, as in as_of_join).
+    l_tagged = left.withColumns({
+        "__side": F.lit(2),
+        "__ts": F.col(left_ts),
+        "__bucket": bucket_of(left_ts),
+    })
+    r_in = r_tagged.withColumn("__side", F.lit(1)).join(
+        left_buckets, [*on, "__bucket"], "left_semi"
+    )  # prune tick-only buckets
+    carry_rows = spine.withColumns({
+        "__side": F.lit(0),  # carry sorts before everything in the bucket
+        "__ts": (F.col("__bucket") * bucket_seconds).cast("timestamp"),
+    })
+    unioned = l_tagged.unionByName(r_in, allowMissingColumns=True).unionByName(
+        carry_rows, allowMissingColumns=True
     )
-    r_in = r_tagged.select(
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in left.columns if c not in on],
-        *[F.col(c) for c in on],
-        F.lit(1).alias("__side"),
-        F.col("__ts"),
-        F.col("__rord"),
-        *[F.col(o) for o in out_cols],
-        F.col("__bucket"),
-    ).join(left_buckets, [*on, "__bucket"], "left_semi")  # prune tick-only buckets
-    carry_rows = spine.select(
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in left.columns if c not in on],
-        *[F.col(c) for c in on],
-        F.lit(0).alias("__side"),  # carry sorts before everything in the bucket
-        (F.col("__bucket") * bucket_seconds).cast("timestamp").alias("__ts"),
-        F.lit(None).cast("double").alias("__rord"),
-        *[F.col(o) for o in out_cols],
-        F.col("__bucket"),
-    )
-    unioned = l_tagged.unionByName(r_in).unionByName(carry_rows)
     w = (
         Window.partitionBy(*on, "__bucket")
         .orderBy(F.col("__ts").asc(), F.col("__side").asc(), F.col("__rord").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    filled = unioned.select(
-        *[c for c in unioned.columns if c not in out_cols],
-        *[F.last(o, ignorenulls=True).over(w).alias(o) for o in out_cols],
+    filled = unioned.withColumns(
+        {o: F.last(o, ignorenulls=True).over(w) for o in out_cols}
     )
     return filled.filter(F.col("__side") == 2).drop("__side", "__ts", "__rord", "__bucket")
 

@@ -15,7 +15,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
-from ..operators.asof import as_of_join
+from ..operators.asof import as_of_join, quote_ident
 from ..schemas import AMOUNT, PRICE
 
 
@@ -36,10 +36,10 @@ def attach_asof_price(
     (`dao/postgre/mp_asset.rs:125-187`) is the Postgres formulation of
     the same semantics.
     """
-    p = prices.select(
-        F.col(price_symbol_col).alias(symbol_col),
-        F.col(price_ts_col).alias("__price_ts"),
-        F.col(price_col).alias("__price"),
+    p = prices.selectExpr(
+        f"{quote_ident(price_symbol_col)} AS {quote_ident(symbol_col)}",
+        f"{quote_ident(price_ts_col)} AS __price_ts",
+        f"{quote_ident(price_col)} AS __price",
     )
     joined = as_of_join(
         df,
@@ -122,10 +122,14 @@ def enrich_ls_opening(opening: DataFrame, prices: DataFrame) -> DataFrame:
     )
     liq_short = (dp_s + loan_s) / F.nullif(lpn_loan / 0.9, F.lit(0.0))
 
+    # one stage per dependency level: the stable amounts and the opening
+    # price, then the LPN amount, then the liquidation price
     return (
-        df.withColumn("LS_loan_amnt_stable", loan_stable_c)
-        .withColumn("LS_cltr_amnt_stable", cltr_stable_c)
-        .withColumn("LS_opening_price", asset_price.cast(PRICE))
+        df.withColumns({
+            "LS_loan_amnt_stable": loan_stable_c,
+            "LS_cltr_amnt_stable": cltr_stable_c,
+            "LS_opening_price": asset_price.cast(PRICE),
+        })
         .withColumn(
             "LS_lpn_loan_amnt",
             (

@@ -42,7 +42,7 @@ def dedup_batch(batch: DataFrame, pk: Sequence[str], order_col: str | None = Non
     return (
         batch.groupBy(*pk)
         .agg(F.min_by(F.struct(*payload), F.col(order_col)).alias("__row"))
-        .select(*pk, *[F.col(f"__row.{c}").alias(c) for c in payload])
+        .select(*pk, "__row.*")
     )
 
 

@@ -3,9 +3,12 @@
 The reference routes 13 ``wasm-*`` event types to typed parsers
 (`event_dispatch.rs:31-191`, enum `helpers/enums.rs:27-40`) that project
 a ``HashMap<String,String>`` of KV attributes into typed structs
-(`event_parsing.rs:16-327`). Spark-first: each parser is a
-filter + select over the bronze event table — pure column expressions
-that inline into whole-stage codegen, no UDFs.
+(`event_parsing.rs:16-327`). Spark-first: each parser is one
+``filter`` + one ``selectExpr`` over the bronze event table, driven by a
+declarative spec per table (``SPECS``) — pure SQL expressions that
+inline into whole-stage codegen, no UDFs. The expressions go to the
+engine whole, so building a parser costs a fixed handful of py4j round
+trips, not about a dozen per PySpark ``Column`` call.
 
 Semantics preserved:
 
@@ -17,15 +20,14 @@ Semantics preserved:
   ``due-loan-interest``. Parsers COALESCE both spellings.
 - **Skip path** (`event_parsing.rs:84-111`): rows missing the ``height``
   attribute are dropped (the reference returns early).
-- **Timestamp**: event attr ``at`` (RFC3339) when present, else the
-  block timestamp.
+- **Timestamp**: event attr ``at`` (RFC3339) when present and
+  parseable, else the block timestamp.
 - Amount columns cast to DecimalType(38,0), the engine decimal policy.
 """
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 
 from ..schemas import AMOUNT
 
@@ -46,188 +48,175 @@ EVENT_TYPES = (
 )
 
 
-def _a(name: str) -> Column:
-    return F.col("attributes").getItem(name)
+def _a(name: str) -> str:
+    return f"attributes['{name}']"
 
 
-def _amount(name: str) -> Column:
-    return _a(name).cast(AMOUNT)
+def _amount(name: str) -> str:
+    return f"CAST({_a(name)} AS {AMOUNT.simpleString()})"
 
 
-def _ts() -> Column:
-    """Event time: `at` attribute if parseable, else block timestamp."""
-    return F.coalesce(F.try_to_timestamp(_a("at")), F.col("timestamp"))
+def _flag(name: str) -> str:
+    return f"coalesce(CAST({_a(name)} AS BOOLEAN), false)"
 
 
-def _interest_quartet() -> list[Column]:
-    """COALESCE of the two attribute spellings (`event_parsing.rs:195-237`)."""
-    return [
-        F.coalesce(_amount("prev-margin-interest"), _amount("overdue-margin-interest")).alias(
-            "LS_prev_margin_stable"
-        ),
-        F.coalesce(_amount("prev-loan-interest"), _amount("overdue-loan-interest")).alias(
-            "LS_prev_interest_stable"
-        ),
-        F.coalesce(_amount("curr-margin-interest"), _amount("due-margin-interest")).alias(
-            "LS_current_margin_stable"
-        ),
-        F.coalesce(_amount("curr-loan-interest"), _amount("due-loan-interest")).alias(
-            "LS_current_interest_stable"
-        ),
-    ]
+# Event time: `at` attribute if parseable, else block timestamp.
+TS = f"coalesce(try_to_timestamp({_a('at')}), `timestamp`)"
+HEIGHT = f"CAST({_a('height')} AS BIGINT)"
+TX = ("tx_hash", "Tx_Hash")
 
-
-def parse_ls_opening(bronze: DataFrame) -> DataFrame:
-    """`wasm-ls-open` → LS_Opening core columns (`event_parsing.rs:25-43`).
-
-    Enrichment columns (stable amounts, opening price, liquidation price)
-    are added by pipeline.enrich — mirroring the reference's split between
-    parser and handler (`handler/wasm_ls_open.rs`).
-    """
-    return bronze.filter(F.col("event_type") == "wasm-ls-open").select(
-        _a("id").alias("LS_contract_id"),
-        _a("customer").alias("LS_address_id"),
-        _a("currency").alias("LS_asset_symbol"),
-        _a("air").cast("int").alias("LS_interest"),
-        _ts().alias("LS_timestamp"),
-        _a("loan-pool-id").alias("LS_loan_pool_id"),
-        _amount("loan-amount").alias("LS_loan_amnt"),
-        _a("loan-symbol").alias("LS_lpn_symbol"),
-        _amount("downpayment-amount").alias("LS_cltr_amnt"),
-        _a("downpayment-symbol").alias("LS_cltr_symbol"),
-        F.col("tx_hash").alias("Tx_Hash"),
-        F.col("block").alias("Block"),
+# COALESCE of the two attribute spellings (`event_parsing.rs:195-237`).
+INTEREST_QUARTET = tuple(
+    (f"coalesce({_amount(old)}, {_amount(new)})", col)
+    for old, new, col in (
+        ("prev-margin-interest", "overdue-margin-interest", "LS_prev_margin_stable"),
+        ("prev-loan-interest", "overdue-loan-interest", "LS_prev_interest_stable"),
+        ("curr-margin-interest", "due-margin-interest", "LS_current_margin_stable"),
+        ("curr-loan-interest", "due-loan-interest", "LS_current_interest_stable"),
     )
+)
 
 
-def _payment_common(bronze: DataFrame, event_type: str) -> DataFrame:
+def _payment(kind: str, *extra: tuple[str, str]) -> tuple[tuple[str, str], ...]:
     """Shared shape of repay/close-position/liquidation (`event_parsing.rs:84-237`)."""
-    return bronze.filter(
-        (F.col("event_type") == event_type) & _a("height").isNotNull()  # skip path
-    ).select(
-        _a("height").cast("long").alias("height"),
-        F.col("event_index").alias("idx"),
-        _a("to").alias("LS_contract_id"),
-        _a("payment-symbol").alias("LS_payment_symbol"),
-        _amount("payment-amount").alias("LS_payment_amnt"),
-        _ts().alias("LS_timestamp"),
-        F.coalesce(_a("loan-close").cast("boolean"), F.lit(False)).alias("LS_loan_close"),
-        *_interest_quartet(),
-        _amount("principal").alias("LS_principal_stable"),
-        F.col("tx_hash").alias("Tx_Hash"),
-        F.col("attributes"),
-    )
-
-
-def parse_ls_repayment(bronze: DataFrame) -> DataFrame:
     return (
-        _payment_common(bronze, "wasm-ls-repay")
-        .withColumnRenamed("height", "LS_repayment_height")
-        .withColumnRenamed("idx", "LS_repayment_idx")
-        .drop("attributes")
+        (HEIGHT, f"LS_{kind}_height"),
+        ("event_index", f"LS_{kind}_idx"),
+        (_a("to"), "LS_contract_id"),
+        (_a("payment-symbol"), "LS_payment_symbol"),
+        (_amount("payment-amount"), "LS_payment_amnt"),
+        (TS, "LS_timestamp"),
+        (_flag("loan-close"), "LS_loan_close"),
+        *INTEREST_QUARTET,
+        (_amount("principal"), "LS_principal_stable"),
+        TX,
+        *extra,
     )
 
 
-def parse_ls_close_position(bronze: DataFrame) -> DataFrame:
-    base = _payment_common(bronze, "wasm-ls-close-position")
+def _lp(kind: str, *extra: tuple[str, str]) -> tuple[tuple[str, str], ...]:
     return (
-        base.withColumn("LS_change", _amount("change"))
-        .withColumn("LS_amnt", _amount("amount-amount"))
-        .withColumn("LS_amnt_symbol", _a("amount-symbol"))
-        .withColumnRenamed("height", "LS_position_height")
-        .withColumnRenamed("idx", "LS_position_idx")
-        .drop("attributes")
+        (HEIGHT, f"LP_{kind}_height"),
+        ("event_index", f"LP_{kind}_idx"),
+        (_a("from"), "LP_address_id"),
+        (TS, "LP_timestamp"),
+        (_a("to"), "LP_Pool_id"),
+        (_amount(f"{kind}-amount"), "LP_amnt_asset"),
+        (_a(f"{kind}-symbol"), "LP_symbol"),
+        (_amount("receipts"), "LP_amnt_receipts"),
+        TX,
+        *extra,
     )
 
 
-def parse_ls_liquidation(bronze: DataFrame) -> DataFrame:
-    base = _payment_common(bronze, "wasm-ls-liquidation")
-    return (
-        base.withColumn("LS_amnt", _amount("amount-amount"))
-        .withColumn("LS_amnt_symbol", _a("amount-symbol"))
-        .withColumn("LS_transaction_type", _a("cause"))
-        .withColumnRenamed("height", "LS_liquidation_height")
-        .withColumnRenamed("idx", "LS_liquidation_idx")
-        .drop("attributes")
-    )
+# table -> (event type, skip path: drop rows without `height`
+# (`event_parsing.rs:84-111`), (expression, column) pairs in output order).
+# Dict order is dispatch order (`event_dispatch.rs:31-191`).
+SPECS: dict[str, tuple[str, bool, tuple[tuple[str, str], ...]]] = {
+    # `event_parsing.rs:25-43`
+    "LS_Opening": ("wasm-ls-open", False, (
+        (_a("id"), "LS_contract_id"),
+        (_a("customer"), "LS_address_id"),
+        (_a("currency"), "LS_asset_symbol"),
+        (f"CAST({_a('air')} AS INT)", "LS_interest"),
+        (TS, "LS_timestamp"),
+        (_a("loan-pool-id"), "LS_loan_pool_id"),
+        (_amount("loan-amount"), "LS_loan_amnt"),
+        (_a("loan-symbol"), "LS_lpn_symbol"),
+        (_amount("downpayment-amount"), "LS_cltr_amnt"),
+        (_a("downpayment-symbol"), "LS_cltr_symbol"),
+        TX,
+        ("block", "Block"),
+    )),
+    # `V001:197-201`
+    "LS_Closing": ("wasm-ls-close", False, (
+        (_a("id"), "LS_contract_id"),
+        (TS, "LS_timestamp"),
+        TX,
+    )),
+    "LS_Repayment": ("wasm-ls-repay", True, _payment("repayment")),
+    "LS_Close_Position": ("wasm-ls-close-position", True, _payment(
+        "position",
+        (_amount("change"), "LS_change"),
+        (_amount("amount-amount"), "LS_amnt"),
+        (_a("amount-symbol"), "LS_amnt_symbol"),
+    )),
+    "LS_Liquidation": ("wasm-ls-liquidation", True, _payment(
+        "liquidation",
+        (_amount("amount-amount"), "LS_amnt"),
+        (_a("amount-symbol"), "LS_amnt_symbol"),
+        (_a("cause"), "LS_transaction_type"),
+    )),
+    # `event_parsing.rs:239-255`
+    "LP_Deposit": ("wasm-lp-deposit", True, _lp("deposit")),
+    # `event_parsing.rs:257-274`: + the `close` flag
+    "LP_Withdraw": ("wasm-lp-withdraw", True, _lp("withdraw", (_flag("close"), "LP_deposit_close"))),
+    # `event_parsing.rs:276-289`
+    "TR_Profit": ("wasm-tr-profit", True, (
+        (HEIGHT, "TR_Profit_height"),
+        ("event_index", "TR_Profit_idx"),
+        (TS, "TR_Profit_timestamp"),
+        (_a("profit-amount-symbol"), "TR_Profit_symbol"),
+        (_amount("profit-amount-amount"), "TR_Profit_amnt"),
+        TX,
+    )),
+    # `event_parsing.rs:291-311`
+    "TR_Rewards_Distribution": ("wasm-tr-rewards", True, (
+        (HEIGHT, "TR_Rewards_height"),
+        ("event_index", "TR_Rewards_idx"),
+        (_a("to"), "TR_Rewards_Pool_id"),
+        (TS, "TR_Rewards_timestamp"),
+        (_a("rewards-symbol"), "TR_Rewards_symbol"),
+        (_amount("rewards-amount"), "TR_Rewards_amnt"),
+        TX,
+    )),
+    # `V001:212-221`
+    "LS_Liquidation_Warning": ("wasm-ls-liquidation-warning", False, (
+        (_a("lease"), "LS_contract_id"),
+        (_a("customer"), "LS_address_id"),
+        (_a("lease-asset"), "LS_asset_symbol"),
+        (f"CAST({_a('level')} AS INT)", "LS_level"),
+        (_amount("ltv"), "LS_ltv"),
+        (TS, "LS_timestamp"),
+        TX,
+    )),
+    # `V001:203-210`: take-profit / stop-loss strategy rows
+    "LS_Auto_Close_Position": ("wasm-ls-auto-close-position", False, (
+        (_a("to"), "LS_contract_id"),
+        (_a("strategy"), "LS_Close_Strategy"),
+        (_amount("strategy-ltv"), "LS_Close_Strategy_Ltv"),
+        (TS, "LS_timestamp"),
+        TX,
+    )),
+    # `V001:243-251`
+    "LS_Slippage_Anomaly": ("wasm-ls-slippage-anomaly", False, (
+        (_a("customer"), "LS_address_id"),
+        (_a("lease"), "LS_contract_id"),
+        (_a("lease-asset"), "LS_asset_symbol"),
+        (_amount("max-slippage"), "LS_max_slipagge"),
+        (TS, "LS_timestamp"),
+        TX,
+    )),
+    # `V001:335-343`
+    "Reserve_Cover_Loss": ("wasm-reserve-cover-loss", True, (
+        (_a("to"), "LS_contract_id"),
+        (HEIGHT, "LS_height"),
+        ("event_index", "LS_idx"),
+        (_amount("payment-amount"), "LS_payment_amnt"),
+        (_a("payment-symbol"), "LS_payment_symbol"),
+        (TS, "LS_timestamp"),
+        TX,
+    )),
+}
 
 
-def parse_ls_closing(bronze: DataFrame) -> DataFrame:
-    """`wasm-ls-close` → terminal close marker (`V001:197-201`)."""
-    return bronze.filter(F.col("event_type") == "wasm-ls-close").select(
-        _a("id").alias("LS_contract_id"),
-        _ts().alias("LS_timestamp"),
-        F.col("tx_hash").alias("Tx_Hash"),
-    )
-
-
-def _lp_common(bronze: DataFrame, event_type: str, prefix: str) -> DataFrame:
-    return bronze.filter(
-        (F.col("event_type") == event_type) & _a("height").isNotNull()
-    ).select(
-        _a("height").cast("long").alias("height"),
-        F.col("event_index").alias("idx"),
-        _a("from").alias("LP_address_id"),
-        _ts().alias("LP_timestamp"),
-        _a("to").alias("LP_Pool_id"),
-        _amount(f"{prefix}-amount").alias("LP_amnt_asset"),
-        _a(f"{prefix}-symbol").alias("LP_symbol"),
-        _amount("receipts").alias("LP_amnt_receipts"),
-        F.col("tx_hash").alias("Tx_Hash"),
-        F.col("attributes"),
-    )
-
-
-def parse_lp_deposit(bronze: DataFrame) -> DataFrame:
-    """`wasm-lp-deposit` (`event_parsing.rs:239-255`)."""
-    return (
-        _lp_common(bronze, "wasm-lp-deposit", "deposit")
-        .withColumnRenamed("height", "LP_deposit_height")
-        .withColumnRenamed("idx", "LP_deposit_idx")
-        .drop("attributes")
-    )
-
-
-def parse_lp_withdraw(bronze: DataFrame) -> DataFrame:
-    """`wasm-lp-withdraw` (+`close` flag, `event_parsing.rs:257-274`)."""
-    base = _lp_common(bronze, "wasm-lp-withdraw", "withdraw")
-    return (
-        base.withColumn(
-            "LP_deposit_close", F.coalesce(_a("close").cast("boolean"), F.lit(False))
-        )
-        .withColumnRenamed("height", "LP_withdraw_height")
-        .withColumnRenamed("idx", "LP_withdraw_idx")
-        .drop("attributes")
-    )
-
-
-def parse_tr_profit(bronze: DataFrame) -> DataFrame:
-    """`wasm-tr-profit` (`event_parsing.rs:276-289`)."""
-    return bronze.filter(
-        (F.col("event_type") == "wasm-tr-profit") & _a("height").isNotNull()
-    ).select(
-        _a("height").cast("long").alias("TR_Profit_height"),
-        F.col("event_index").alias("TR_Profit_idx"),
-        _ts().alias("TR_Profit_timestamp"),
-        _a("profit-amount-symbol").alias("TR_Profit_symbol"),
-        _amount("profit-amount-amount").alias("TR_Profit_amnt"),
-        F.col("tx_hash").alias("Tx_Hash"),
-    )
-
-
-def parse_tr_rewards(bronze: DataFrame) -> DataFrame:
-    """`wasm-tr-rewards` (`event_parsing.rs:291-311`)."""
-    return bronze.filter(
-        (F.col("event_type") == "wasm-tr-rewards") & _a("height").isNotNull()
-    ).select(
-        _a("height").cast("long").alias("TR_Rewards_height"),
-        F.col("event_index").alias("TR_Rewards_idx"),
-        _a("to").alias("TR_Rewards_Pool_id"),
-        _ts().alias("TR_Rewards_timestamp"),
-        _a("rewards-symbol").alias("TR_Rewards_symbol"),
-        _amount("rewards-amount").alias("TR_Rewards_amnt"),
-        F.col("tx_hash").alias("Tx_Hash"),
-    )
+def _parse(bronze: DataFrame, table: str) -> DataFrame:
+    """The ``table`` rows of a bronze batch: one filter, one projection."""
+    event_type, skip_path, columns = SPECS[table]
+    cond = f"event_type = '{event_type}'"
+    if skip_path:
+        cond += f" AND {_a('height')} IS NOT NULL"
+    return bronze.filter(cond).selectExpr(*(f"{expr} AS {col}" for expr, col in columns))
 
 
 def dispatch(bronze: DataFrame) -> dict[str, DataFrame]:
@@ -237,70 +226,72 @@ def dispatch(bronze: DataFrame) -> dict[str, DataFrame]:
     are materialized together (e.g. with ``df.persist()`` on bronze for
     one batch). Mirrors `event_dispatch.rs:31-191`.
     """
-    return {
-        "LS_Opening": parse_ls_opening(bronze),
-        "LS_Closing": parse_ls_closing(bronze),
-        "LS_Repayment": parse_ls_repayment(bronze),
-        "LS_Close_Position": parse_ls_close_position(bronze),
-        "LS_Liquidation": parse_ls_liquidation(bronze),
-        "LP_Deposit": parse_lp_deposit(bronze),
-        "LP_Withdraw": parse_lp_withdraw(bronze),
-        "TR_Profit": parse_tr_profit(bronze),
-        "TR_Rewards_Distribution": parse_tr_rewards(bronze),
-        "LS_Liquidation_Warning": parse_ls_liquidation_warning(bronze),
-        "LS_Auto_Close_Position": parse_ls_auto_close_position(bronze),
-        "LS_Slippage_Anomaly": parse_ls_slippage_anomaly(bronze),
-        "Reserve_Cover_Loss": parse_reserve_cover_loss(bronze),
-    }
+    return {table: _parse(bronze, table) for table in SPECS}
+
+
+def parse_ls_opening(bronze: DataFrame) -> DataFrame:
+    """`wasm-ls-open` → LS_Opening core columns (`event_parsing.rs:25-43`).
+
+    Enrichment columns (stable amounts, opening price, liquidation price)
+    are added by pipeline.enrich — mirroring the reference's split between
+    parser and handler (`handler/wasm_ls_open.rs`).
+    """
+    return _parse(bronze, "LS_Opening")
+
+
+def parse_ls_closing(bronze: DataFrame) -> DataFrame:
+    """`wasm-ls-close` → terminal close marker (`V001:197-201`)."""
+    return _parse(bronze, "LS_Closing")
+
+
+def parse_ls_repayment(bronze: DataFrame) -> DataFrame:
+    return _parse(bronze, "LS_Repayment")
+
+
+def parse_ls_close_position(bronze: DataFrame) -> DataFrame:
+    return _parse(bronze, "LS_Close_Position")
+
+
+def parse_ls_liquidation(bronze: DataFrame) -> DataFrame:
+    return _parse(bronze, "LS_Liquidation")
+
+
+def parse_lp_deposit(bronze: DataFrame) -> DataFrame:
+    """`wasm-lp-deposit` (`event_parsing.rs:239-255`)."""
+    return _parse(bronze, "LP_Deposit")
+
+
+def parse_lp_withdraw(bronze: DataFrame) -> DataFrame:
+    """`wasm-lp-withdraw` (+`close` flag, `event_parsing.rs:257-274`)."""
+    return _parse(bronze, "LP_Withdraw")
+
+
+def parse_tr_profit(bronze: DataFrame) -> DataFrame:
+    """`wasm-tr-profit` (`event_parsing.rs:276-289`)."""
+    return _parse(bronze, "TR_Profit")
+
+
+def parse_tr_rewards(bronze: DataFrame) -> DataFrame:
+    """`wasm-tr-rewards` (`event_parsing.rs:291-311`)."""
+    return _parse(bronze, "TR_Rewards_Distribution")
 
 
 def parse_ls_liquidation_warning(bronze: DataFrame) -> DataFrame:
     """`wasm-ls-liquidation-warning` → warning rows (`V001:212-221`)."""
-    return bronze.filter(F.col("event_type") == "wasm-ls-liquidation-warning").select(
-        _a("lease").alias("LS_contract_id"),
-        _a("customer").alias("LS_address_id"),
-        _a("lease-asset").alias("LS_asset_symbol"),
-        _a("level").cast("int").alias("LS_level"),
-        _amount("ltv").alias("LS_ltv"),
-        _ts().alias("LS_timestamp"),
-        F.col("tx_hash").alias("Tx_Hash"),
-    )
+    return _parse(bronze, "LS_Liquidation_Warning")
 
 
 def parse_ls_auto_close_position(bronze: DataFrame) -> DataFrame:
     """`wasm-ls-auto-close-position` → take-profit / stop-loss strategy
     rows (`V001:203-210`)."""
-    return bronze.filter(F.col("event_type") == "wasm-ls-auto-close-position").select(
-        _a("to").alias("LS_contract_id"),
-        _a("strategy").alias("LS_Close_Strategy"),
-        _amount("strategy-ltv").alias("LS_Close_Strategy_Ltv"),
-        _ts().alias("LS_timestamp"),
-        F.col("tx_hash").alias("Tx_Hash"),
-    )
+    return _parse(bronze, "LS_Auto_Close_Position")
 
 
 def parse_ls_slippage_anomaly(bronze: DataFrame) -> DataFrame:
     """`wasm-ls-slippage-anomaly` (`V001:243-251`)."""
-    return bronze.filter(F.col("event_type") == "wasm-ls-slippage-anomaly").select(
-        _a("customer").alias("LS_address_id"),
-        _a("lease").alias("LS_contract_id"),
-        _a("lease-asset").alias("LS_asset_symbol"),
-        _amount("max-slippage").alias("LS_max_slipagge"),
-        _ts().alias("LS_timestamp"),
-        F.col("tx_hash").alias("Tx_Hash"),
-    )
+    return _parse(bronze, "LS_Slippage_Anomaly")
 
 
 def parse_reserve_cover_loss(bronze: DataFrame) -> DataFrame:
     """`wasm-reserve-cover-loss` (`V001:335-343`)."""
-    return bronze.filter(
-        (F.col("event_type") == "wasm-reserve-cover-loss") & _a("height").isNotNull()
-    ).select(
-        _a("to").alias("LS_contract_id"),
-        _a("height").cast("long").alias("LS_height"),
-        F.col("event_index").alias("LS_idx"),
-        _amount("payment-amount").alias("LS_payment_amnt"),
-        _a("payment-symbol").alias("LS_payment_symbol"),
-        _ts().alias("LS_timestamp"),
-        F.col("tx_hash").alias("Tx_Hash"),
-    )
+    return _parse(bronze, "Reserve_Cover_Loss")

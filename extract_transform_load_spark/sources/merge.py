@@ -75,7 +75,7 @@ def merge_plan(
         changed = (
             pool.groupBy(*pk)
             .agg(F.max_by(F.struct(*payload), F.col(order_col)).alias("__row"))
-            .select(*pk, *[F.col(f"__row.{c}").alias(c) for c in payload])
+            .select(*pk, "__row.*")
         )
     changed_keys = upd.select(*pk)
     if deletes is not None:

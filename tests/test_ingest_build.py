@@ -1,0 +1,635 @@
+"""The ingest micro-batch's plan construction: what the parsers and the
+as-of join build, and what building it costs on the driver.
+
+- ``test_dispatch_tables_pinned``: every ``dispatch`` table's schema
+  (names, order, types, nullability) and sorted rows over a bronze batch
+  that exercises all 13 event types, both interest spellings, the
+  ``height`` skip path, an unparseable ``at`` and missing
+  ``loan-close``/``close`` flags.
+- ``test_as_of_join_edges_pinned``: ``as_of_join`` (every direction, with
+  and without tolerance) and ``as_of_join_bucketed`` over a left frame
+  with array, map, struct and ``decimal(38,18)`` columns; the null-fill
+  of the nested left columns on the right side of the union is in the
+  pinned nullability.
+- The construction-cost guards count py4j gateway commands sent by the
+  building thread: ``as_of_join`` costs the same over a 3-column and a
+  63-column left frame, and ``dispatch`` stays within a fixed budget.
+
+The pinned literals were captured from the column-by-column builders
+these replaced, so they hold the rewrite to byte-identical output.
+"""
+
+from __future__ import annotations
+
+import datetime
+import threading
+from decimal import Decimal
+
+import pyspark.sql.functions as F
+import pytest
+from py4j.clientserver import ClientServerConnection
+from pyspark.sql import Row
+from pyspark.sql.types import (
+    ArrayType,
+    BooleanType,
+    DecimalType,
+    IntegerType,
+    LongType,
+    MapType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
+
+from extract_transform_load_spark.operators.asof import as_of_join, as_of_join_bucketed
+from extract_transform_load_spark.pipeline.parsers import dispatch
+from extract_transform_load_spark.schemas import BRONZE_EVENT
+
+
+def _t(s: str) -> datetime.datetime:
+    return datetime.datetime.fromisoformat(s)
+
+
+def _ev(block, etype, attrs, idx=0):
+    return (block, f"h{block}", idx, etype, _t("2024-03-01 00:00:00") + datetime.timedelta(hours=block), attrs)
+
+
+OLD_INTEREST = {
+    "prev-margin-interest": "1", "prev-loan-interest": "2",
+    "curr-margin-interest": "3", "curr-loan-interest": "4",
+}
+NEW_INTEREST = {
+    "overdue-margin-interest": "5", "overdue-loan-interest": "6",
+    "due-margin-interest": "7", "due-loan-interest": "8",
+}
+
+BRONZE_ROWS = [
+    _ev(1, "wasm-ls-open", {
+        "id": "l1", "customer": "c1", "currency": "ATOM", "air": "120",
+        "at": "2024-03-01T00:30:00", "loan-pool-id": "pool1", "loan-amount": "1000",
+        "loan-symbol": "USDC", "downpayment-amount": "400", "downpayment-symbol": "OSMO",
+    }),
+    # unparseable `at`: the block timestamp stands in
+    _ev(2, "wasm-ls-open", {
+        "id": "l2", "customer": "c2", "currency": "OSMO", "air": "90", "at": "not-a-time",
+        "loan-pool-id": "pool2", "loan-amount": "50", "loan-symbol": "USDC",
+        "downpayment-amount": "25", "downpayment-symbol": "USDC",
+    }),
+    _ev(3, "wasm-ls-close", {"id": "l1", "at": "2024-03-01T03:15:00"}),
+    # old interest spelling, explicit loan-close
+    _ev(4, "wasm-ls-repay", {
+        "height": "4", "to": "l1", "payment-symbol": "USDC", "payment-amount": "300",
+        "at": "2024-03-01T04:00:00", "loan-close": "false", "principal": "250", **OLD_INTEREST,
+    }, idx=2),
+    # new interest spelling, no loan-close attribute
+    _ev(5, "wasm-ls-repay", {
+        "height": "5", "to": "l1", "payment-symbol": "USDC", "payment-amount": "700",
+        "principal": "650", **NEW_INTEREST,
+    }, idx=1),
+    _ev(6, "wasm-ls-repay", {"to": "l1", "payment-amount": "9"}),  # skip path
+    _ev(7, "wasm-ls-close-position", {
+        "height": "7", "to": "l2", "payment-symbol": "USDC", "payment-amount": "40",
+        "at": "2024-03-01T07:05:00", "loan-close": "true", "principal": "30",
+        "change": "-3", "amount-amount": "12", "amount-symbol": "OSMO", **NEW_INTEREST,
+    }),
+    _ev(8, "wasm-ls-close-position", {"to": "l2", "change": "1"}),  # skip path
+    _ev(9, "wasm-ls-liquidation", {
+        "height": "9", "to": "l2", "payment-symbol": "USDC", "payment-amount": "20",
+        "principal": "15", "amount-amount": "6", "amount-symbol": "OSMO",
+        "cause": "overdue interest", **OLD_INTEREST,
+    }, idx=3),
+    _ev(10, "wasm-ls-liquidation", {"to": "l2", "cause": "x"}),  # skip path
+    _ev(11, "wasm-ls-liquidation-warning", {
+        "lease": "l2", "customer": "c2", "lease-asset": "OSMO", "level": "3", "ltv": "880",
+        "at": "2024-03-01T11:00:00",
+    }),
+    _ev(12, "wasm-ls-slippage-anomaly", {
+        "customer": "c1", "lease": "l1", "lease-asset": "ATOM", "max-slippage": "55",
+    }),
+    _ev(13, "wasm-ls-auto-close-position", {
+        "to": "l1", "strategy": "stop-loss", "strategy-ltv": "700", "at": "2024-03-01T13:00:00",
+    }),
+    _ev(14, "wasm-reserve-cover-loss", {
+        "to": "l2", "height": "14", "payment-amount": "17", "payment-symbol": "USDC",
+    }, idx=4),
+    _ev(15, "wasm-reserve-cover-loss", {"to": "l2", "payment-amount": "1"}),  # skip path
+    _ev(16, "wasm-lp-deposit", {
+        "height": "16", "from": "lender1", "to": "pool1", "at": "2024-03-01T16:00:00",
+        "deposit-amount": "5000", "deposit-symbol": "USDC", "receipts": "4900",
+    }),
+    _ev(17, "wasm-lp-deposit", {"from": "lender2", "deposit-amount": "1"}),  # skip path
+    _ev(18, "wasm-lp-withdraw", {
+        "height": "18", "from": "lender1", "to": "pool1", "withdraw-amount": "100",
+        "withdraw-symbol": "USDC", "receipts": "98", "close": "true",
+    }),
+    # no `close` attribute
+    _ev(19, "wasm-lp-withdraw", {
+        "height": "19", "from": "lender1", "to": "pool1", "at": "2024-03-01T19:30:00",
+        "withdraw-amount": "200", "withdraw-symbol": "USDC", "receipts": "196",
+    }, idx=1),
+    _ev(20, "wasm-lp-withdraw", {"from": "lender3"}),  # skip path
+    _ev(21, "wasm-tr-profit", {
+        "height": "21", "at": "2024-03-01T21:00:00", "profit-amount-symbol": "NLS",
+        "profit-amount-amount": "333",
+    }),
+    _ev(22, "wasm-tr-profit", {"profit-amount-amount": "1"}),  # skip path
+    _ev(23, "wasm-tr-rewards", {
+        "height": "23", "to": "pool1", "rewards-symbol": "NLS", "rewards-amount": "44",
+        "at": "garbage",
+    }, idx=5),
+    _ev(24, "wasm-tr-rewards", {"to": "pool1", "rewards-amount": "1"}),  # skip path
+    _ev(25, "wasm-unknown-event", {"height": "25", "id": "zz"}),  # routed nowhere
+]
+
+
+def _snapshot(df):
+    return df.schema, sorted(repr(tuple(r)) for r in df.collect())
+
+
+def _pinned(schema: StructType, rows: list[tuple]):
+    return schema, sorted(repr(r) for r in rows)
+
+
+def _schema(*fields: tuple) -> StructType:
+    return StructType([StructField(n, t, nullable) for n, t, nullable in fields])
+
+
+S, L, I, B, TS = StringType(), LongType(), IntegerType(), BooleanType(), TimestampType()
+AMT, PX = DecimalType(38, 0), DecimalType(38, 18)
+
+EXPECTED_DISPATCH: dict[str, tuple[StructType, list[tuple]]] = {
+    'LS_Opening': (
+        _schema(
+            ('LS_contract_id', S, True),
+            ('LS_address_id', S, True),
+            ('LS_asset_symbol', S, True),
+            ('LS_interest', I, True),
+            ('LS_timestamp', TS, False),
+            ('LS_loan_pool_id', S, True),
+            ('LS_loan_amnt', AMT, True),
+            ('LS_lpn_symbol', S, True),
+            ('LS_cltr_amnt', AMT, True),
+            ('LS_cltr_symbol', S, True),
+            ('Tx_Hash', S, False),
+            ('Block', L, False),
+        ),
+        [
+            ('l1', 'c1', 'ATOM', 120, datetime.datetime(2024, 3, 1, 0, 30), 'pool1', Decimal('1000'), 'USDC', Decimal('400'), 'OSMO', 'h1', 1),
+            ('l2', 'c2', 'OSMO', 90, datetime.datetime(2024, 3, 1, 2, 0), 'pool2', Decimal('50'), 'USDC', Decimal('25'), 'USDC', 'h2', 2),
+        ],
+    ),
+    'LS_Closing': (
+        _schema(
+            ('LS_contract_id', S, True),
+            ('LS_timestamp', TS, False),
+            ('Tx_Hash', S, False),
+        ),
+        [
+            ('l1', datetime.datetime(2024, 3, 1, 3, 15), 'h3'),
+        ],
+    ),
+    'LS_Repayment': (
+        _schema(
+            ('LS_repayment_height', L, True),
+            ('LS_repayment_idx', I, False),
+            ('LS_contract_id', S, True),
+            ('LS_payment_symbol', S, True),
+            ('LS_payment_amnt', AMT, True),
+            ('LS_timestamp', TS, False),
+            ('LS_loan_close', B, False),
+            ('LS_prev_margin_stable', AMT, True),
+            ('LS_prev_interest_stable', AMT, True),
+            ('LS_current_margin_stable', AMT, True),
+            ('LS_current_interest_stable', AMT, True),
+            ('LS_principal_stable', AMT, True),
+            ('Tx_Hash', S, False),
+        ),
+        [
+            (4, 2, 'l1', 'USDC', Decimal('300'), datetime.datetime(2024, 3, 1, 4, 0), False, Decimal('1'), Decimal('2'), Decimal('3'), Decimal('4'), Decimal('250'), 'h4'),
+            (5, 1, 'l1', 'USDC', Decimal('700'), datetime.datetime(2024, 3, 1, 5, 0), False, Decimal('5'), Decimal('6'), Decimal('7'), Decimal('8'), Decimal('650'), 'h5'),
+        ],
+    ),
+    'LS_Close_Position': (
+        _schema(
+            ('LS_position_height', L, True),
+            ('LS_position_idx', I, False),
+            ('LS_contract_id', S, True),
+            ('LS_payment_symbol', S, True),
+            ('LS_payment_amnt', AMT, True),
+            ('LS_timestamp', TS, False),
+            ('LS_loan_close', B, False),
+            ('LS_prev_margin_stable', AMT, True),
+            ('LS_prev_interest_stable', AMT, True),
+            ('LS_current_margin_stable', AMT, True),
+            ('LS_current_interest_stable', AMT, True),
+            ('LS_principal_stable', AMT, True),
+            ('Tx_Hash', S, False),
+            ('LS_change', AMT, True),
+            ('LS_amnt', AMT, True),
+            ('LS_amnt_symbol', S, True),
+        ),
+        [
+            (7, 0, 'l2', 'USDC', Decimal('40'), datetime.datetime(2024, 3, 1, 7, 5), True, Decimal('5'), Decimal('6'), Decimal('7'), Decimal('8'), Decimal('30'), 'h7', Decimal('-3'), Decimal('12'), 'OSMO'),
+        ],
+    ),
+    'LS_Liquidation': (
+        _schema(
+            ('LS_liquidation_height', L, True),
+            ('LS_liquidation_idx', I, False),
+            ('LS_contract_id', S, True),
+            ('LS_payment_symbol', S, True),
+            ('LS_payment_amnt', AMT, True),
+            ('LS_timestamp', TS, False),
+            ('LS_loan_close', B, False),
+            ('LS_prev_margin_stable', AMT, True),
+            ('LS_prev_interest_stable', AMT, True),
+            ('LS_current_margin_stable', AMT, True),
+            ('LS_current_interest_stable', AMT, True),
+            ('LS_principal_stable', AMT, True),
+            ('Tx_Hash', S, False),
+            ('LS_amnt', AMT, True),
+            ('LS_amnt_symbol', S, True),
+            ('LS_transaction_type', S, True),
+        ),
+        [
+            (9, 3, 'l2', 'USDC', Decimal('20'), datetime.datetime(2024, 3, 1, 9, 0), False, Decimal('1'), Decimal('2'), Decimal('3'), Decimal('4'), Decimal('15'), 'h9', Decimal('6'), 'OSMO', 'overdue interest'),
+        ],
+    ),
+    'LP_Deposit': (
+        _schema(
+            ('LP_deposit_height', L, True),
+            ('LP_deposit_idx', I, False),
+            ('LP_address_id', S, True),
+            ('LP_timestamp', TS, False),
+            ('LP_Pool_id', S, True),
+            ('LP_amnt_asset', AMT, True),
+            ('LP_symbol', S, True),
+            ('LP_amnt_receipts', AMT, True),
+            ('Tx_Hash', S, False),
+        ),
+        [
+            (16, 0, 'lender1', datetime.datetime(2024, 3, 1, 16, 0), 'pool1', Decimal('5000'), 'USDC', Decimal('4900'), 'h16'),
+        ],
+    ),
+    'LP_Withdraw': (
+        _schema(
+            ('LP_withdraw_height', L, True),
+            ('LP_withdraw_idx', I, False),
+            ('LP_address_id', S, True),
+            ('LP_timestamp', TS, False),
+            ('LP_Pool_id', S, True),
+            ('LP_amnt_asset', AMT, True),
+            ('LP_symbol', S, True),
+            ('LP_amnt_receipts', AMT, True),
+            ('Tx_Hash', S, False),
+            ('LP_deposit_close', B, False),
+        ),
+        [
+            (18, 0, 'lender1', datetime.datetime(2024, 3, 1, 18, 0), 'pool1', Decimal('100'), 'USDC', Decimal('98'), 'h18', True),
+            (19, 1, 'lender1', datetime.datetime(2024, 3, 1, 19, 30), 'pool1', Decimal('200'), 'USDC', Decimal('196'), 'h19', False),
+        ],
+    ),
+    'TR_Profit': (
+        _schema(
+            ('TR_Profit_height', L, True),
+            ('TR_Profit_idx', I, False),
+            ('TR_Profit_timestamp', TS, False),
+            ('TR_Profit_symbol', S, True),
+            ('TR_Profit_amnt', AMT, True),
+            ('Tx_Hash', S, False),
+        ),
+        [
+            (21, 0, datetime.datetime(2024, 3, 1, 21, 0), 'NLS', Decimal('333'), 'h21'),
+        ],
+    ),
+    'TR_Rewards_Distribution': (
+        _schema(
+            ('TR_Rewards_height', L, True),
+            ('TR_Rewards_idx', I, False),
+            ('TR_Rewards_Pool_id', S, True),
+            ('TR_Rewards_timestamp', TS, False),
+            ('TR_Rewards_symbol', S, True),
+            ('TR_Rewards_amnt', AMT, True),
+            ('Tx_Hash', S, False),
+        ),
+        [
+            (23, 5, 'pool1', datetime.datetime(2024, 3, 1, 23, 0), 'NLS', Decimal('44'), 'h23'),
+        ],
+    ),
+    'LS_Liquidation_Warning': (
+        _schema(
+            ('LS_contract_id', S, True),
+            ('LS_address_id', S, True),
+            ('LS_asset_symbol', S, True),
+            ('LS_level', I, True),
+            ('LS_ltv', AMT, True),
+            ('LS_timestamp', TS, False),
+            ('Tx_Hash', S, False),
+        ),
+        [
+            ('l2', 'c2', 'OSMO', 3, Decimal('880'), datetime.datetime(2024, 3, 1, 11, 0), 'h11'),
+        ],
+    ),
+    'LS_Auto_Close_Position': (
+        _schema(
+            ('LS_contract_id', S, True),
+            ('LS_Close_Strategy', S, True),
+            ('LS_Close_Strategy_Ltv', AMT, True),
+            ('LS_timestamp', TS, False),
+            ('Tx_Hash', S, False),
+        ),
+        [
+            ('l1', 'stop-loss', Decimal('700'), datetime.datetime(2024, 3, 1, 13, 0), 'h13'),
+        ],
+    ),
+    'LS_Slippage_Anomaly': (
+        _schema(
+            ('LS_address_id', S, True),
+            ('LS_contract_id', S, True),
+            ('LS_asset_symbol', S, True),
+            ('LS_max_slipagge', AMT, True),
+            ('LS_timestamp', TS, False),
+            ('Tx_Hash', S, False),
+        ),
+        [
+            ('c1', 'l1', 'ATOM', Decimal('55'), datetime.datetime(2024, 3, 1, 12, 0), 'h12'),
+        ],
+    ),
+    'Reserve_Cover_Loss': (
+        _schema(
+            ('LS_contract_id', S, True),
+            ('LS_height', L, True),
+            ('LS_idx', I, False),
+            ('LS_payment_amnt', AMT, True),
+            ('LS_payment_symbol', S, True),
+            ('LS_timestamp', TS, False),
+            ('Tx_Hash', S, False),
+        ),
+        [
+            ('l2', 14, 4, Decimal('17'), 'USDC', datetime.datetime(2024, 3, 1, 14, 0), 'h14'),
+        ],
+    ),
+}
+
+
+@pytest.fixture(scope="module")
+def bronze(spark):
+    return spark.createDataFrame(BRONZE_ROWS, BRONZE_EVENT)
+
+
+def test_dispatch_tables_pinned(bronze):
+    parsed = dispatch(bronze)
+    assert list(parsed) == list(EXPECTED_DISPATCH)
+    for table, (schema, rows) in EXPECTED_DISPATCH.items():
+        assert _snapshot(parsed[table]) == _pinned(schema, rows), table
+
+
+# ---------------------------------------------------------------------------
+# as-of join over nested left columns
+# ---------------------------------------------------------------------------
+
+LEFT_SCHEMA = StructType([
+    StructField("id", I, False),
+    StructField("k", S, True),
+    StructField("t", TS, False),
+    StructField("arr", ArrayType(S, True), True),
+    StructField("m", MapType(S, I, True), False),
+    StructField("s", StructType([StructField("a", I, False), StructField("b", S, True)]), True),
+    StructField("d", PX, True),
+])
+RIGHT_SCHEMA = StructType([
+    StructField("k", S, False),
+    StructField("pt", TS, False),
+    StructField("v", PX, True),
+    StructField("w", S, True),
+    StructField("ord", L, False),
+])
+LEFT_ROWS = [
+    (1, "A", _t("2024-01-01 00:30:00"), ["x", None], {"p": 1}, (1, "one"), Decimal("1.5")),
+    (2, "A", _t("2024-01-01 01:00:00"), [], {"q": None}, None, None),
+    (3, "A", _t("2024-01-01 02:00:00"), None, {}, (3, None), Decimal("-0.000000000000000001")),
+    (4, "A", _t("2024-01-01 03:30:00"), ["z"], {"r": 4}, (4, "four"), Decimal("12345678901234567890.123456789012345678")),
+    (5, "A", _t("2023-12-31 23:00:00"), ["early"], {"s": 5}, (5, "five"), Decimal("0")),
+    (6, "B", _t("2024-01-01 01:59:00"), ["b"], {"b": 6}, (6, "six"), Decimal("6")),
+    (7, "B", _t("2024-01-01 02:00:00"), ["b", "b"], {"b": 7}, (7, "seven"), Decimal("7")),
+    (8, "B", _t("2024-01-01 05:00:00"), None, {"b": 8}, None, Decimal("8")),
+    (9, "C", _t("2024-01-01 01:00:00"), ["c"], {"c": 9}, (9, "nine"), Decimal("9")),
+    (10, None, _t("2024-01-01 01:00:00"), ["n"], {"n": 10}, (10, "ten"), Decimal("10")),
+]
+RIGHT_ROWS = [
+    ("A", _t("2024-01-01 00:00:00"), Decimal("1.000000000000000001"), "a0", 1),
+    ("A", _t("2024-01-01 01:00:00"), Decimal("2"), "a1-lo", 1),
+    ("A", _t("2024-01-01 01:00:00"), Decimal("3"), "a1-hi", 2),
+    ("A", _t("2024-01-01 03:00:00"), None, "a3-null-v", 1),
+    ("B", _t("2024-01-01 02:00:00"), Decimal("20.5"), None, 1),
+    ("D", _t("2024-01-01 01:00:00"), Decimal("99"), "d", 1),
+]
+ASOF_CASES = {
+    "backward": dict(direction="backward"),
+    "forward": dict(direction="forward"),
+    "nearest": dict(direction="nearest"),
+    "backward_tol": dict(direction="backward", tolerance_seconds=1800),
+    "forward_tol": dict(direction="forward", tolerance_seconds=1800),
+    "nearest_tol": dict(direction="nearest", tolerance_seconds=1800),
+}
+
+EXPECTED_ASOF_SCHEMA = _schema(
+    ('id', I, True),
+    ('k', S, True),
+    ('t', TS, True),
+    ('arr', ArrayType(StringType(), True), True),
+    ('m', MapType(StringType(), IntegerType(), True), True),
+    ('s', StructType([StructField('a', IntegerType(), False), StructField('b', StringType(), True)]), True),
+    ('d', PX, True),
+    ('v_asof', PX, True),
+    ('w_asof', S, True),
+)
+EXPECTED_ASOF: dict[str, list[tuple]] = {
+    'backward': [
+        (1, 'A', datetime.datetime(2024, 1, 1, 0, 30), ['x', None], {'p': 1}, Row(a=1, b='one'), Decimal('1.500000000000000000'), Decimal('1.000000000000000001'), 'a0'),
+        (10, None, datetime.datetime(2024, 1, 1, 1, 0), ['n'], {'n': 10}, Row(a=10, b='ten'), Decimal('10.000000000000000000'), None, None),
+        (2, 'A', datetime.datetime(2024, 1, 1, 1, 0), [], {'q': None}, None, None, Decimal('3.000000000000000000'), 'a1-hi'),
+        (3, 'A', datetime.datetime(2024, 1, 1, 2, 0), None, {}, Row(a=3, b=None), Decimal('-1E-18'), Decimal('3.000000000000000000'), 'a1-hi'),
+        (4, 'A', datetime.datetime(2024, 1, 1, 3, 30), ['z'], {'r': 4}, Row(a=4, b='four'), Decimal('12345678901234567890.123456789012345678'), None, 'a3-null-v'),
+        (5, 'A', datetime.datetime(2023, 12, 31, 23, 0), ['early'], {'s': 5}, Row(a=5, b='five'), Decimal('0E-18'), None, None),
+        (6, 'B', datetime.datetime(2024, 1, 1, 1, 59), ['b'], {'b': 6}, Row(a=6, b='six'), Decimal('6.000000000000000000'), None, None),
+        (7, 'B', datetime.datetime(2024, 1, 1, 2, 0), ['b', 'b'], {'b': 7}, Row(a=7, b='seven'), Decimal('7.000000000000000000'), Decimal('20.500000000000000000'), None),
+        (8, 'B', datetime.datetime(2024, 1, 1, 5, 0), None, {'b': 8}, None, Decimal('8.000000000000000000'), Decimal('20.500000000000000000'), None),
+        (9, 'C', datetime.datetime(2024, 1, 1, 1, 0), ['c'], {'c': 9}, Row(a=9, b='nine'), Decimal('9.000000000000000000'), None, None),
+    ],
+    'forward': [
+        (1, 'A', datetime.datetime(2024, 1, 1, 0, 30), ['x', None], {'p': 1}, Row(a=1, b='one'), Decimal('1.500000000000000000'), Decimal('2.000000000000000000'), 'a1-lo'),
+        (10, None, datetime.datetime(2024, 1, 1, 1, 0), ['n'], {'n': 10}, Row(a=10, b='ten'), Decimal('10.000000000000000000'), None, None),
+        (2, 'A', datetime.datetime(2024, 1, 1, 1, 0), [], {'q': None}, None, None, Decimal('2.000000000000000000'), 'a1-lo'),
+        (3, 'A', datetime.datetime(2024, 1, 1, 2, 0), None, {}, Row(a=3, b=None), Decimal('-1E-18'), None, 'a3-null-v'),
+        (4, 'A', datetime.datetime(2024, 1, 1, 3, 30), ['z'], {'r': 4}, Row(a=4, b='four'), Decimal('12345678901234567890.123456789012345678'), None, None),
+        (5, 'A', datetime.datetime(2023, 12, 31, 23, 0), ['early'], {'s': 5}, Row(a=5, b='five'), Decimal('0E-18'), Decimal('1.000000000000000001'), 'a0'),
+        (6, 'B', datetime.datetime(2024, 1, 1, 1, 59), ['b'], {'b': 6}, Row(a=6, b='six'), Decimal('6.000000000000000000'), Decimal('20.500000000000000000'), None),
+        (7, 'B', datetime.datetime(2024, 1, 1, 2, 0), ['b', 'b'], {'b': 7}, Row(a=7, b='seven'), Decimal('7.000000000000000000'), Decimal('20.500000000000000000'), None),
+        (8, 'B', datetime.datetime(2024, 1, 1, 5, 0), None, {'b': 8}, None, Decimal('8.000000000000000000'), None, None),
+        (9, 'C', datetime.datetime(2024, 1, 1, 1, 0), ['c'], {'c': 9}, Row(a=9, b='nine'), Decimal('9.000000000000000000'), None, None),
+    ],
+    'nearest': [
+        (1, 'A', datetime.datetime(2024, 1, 1, 0, 30), ['x', None], {'p': 1}, Row(a=1, b='one'), Decimal('1.500000000000000000'), Decimal('1.000000000000000001'), 'a0'),
+        (10, None, datetime.datetime(2024, 1, 1, 1, 0), ['n'], {'n': 10}, Row(a=10, b='ten'), Decimal('10.000000000000000000'), None, None),
+        (2, 'A', datetime.datetime(2024, 1, 1, 1, 0), [], {'q': None}, None, None, Decimal('3.000000000000000000'), 'a1-hi'),
+        (3, 'A', datetime.datetime(2024, 1, 1, 2, 0), None, {}, Row(a=3, b=None), Decimal('-1E-18'), Decimal('3.000000000000000000'), 'a1-hi'),
+        (4, 'A', datetime.datetime(2024, 1, 1, 3, 30), ['z'], {'r': 4}, Row(a=4, b='four'), Decimal('12345678901234567890.123456789012345678'), None, 'a3-null-v'),
+        (5, 'A', datetime.datetime(2023, 12, 31, 23, 0), ['early'], {'s': 5}, Row(a=5, b='five'), Decimal('0E-18'), Decimal('1.000000000000000001'), 'a0'),
+        (6, 'B', datetime.datetime(2024, 1, 1, 1, 59), ['b'], {'b': 6}, Row(a=6, b='six'), Decimal('6.000000000000000000'), Decimal('20.500000000000000000'), None),
+        (7, 'B', datetime.datetime(2024, 1, 1, 2, 0), ['b', 'b'], {'b': 7}, Row(a=7, b='seven'), Decimal('7.000000000000000000'), Decimal('20.500000000000000000'), None),
+        (8, 'B', datetime.datetime(2024, 1, 1, 5, 0), None, {'b': 8}, None, Decimal('8.000000000000000000'), Decimal('20.500000000000000000'), None),
+        (9, 'C', datetime.datetime(2024, 1, 1, 1, 0), ['c'], {'c': 9}, Row(a=9, b='nine'), Decimal('9.000000000000000000'), None, None),
+    ],
+    'backward_tol': [
+        (1, 'A', datetime.datetime(2024, 1, 1, 0, 30), ['x', None], {'p': 1}, Row(a=1, b='one'), Decimal('1.500000000000000000'), Decimal('1.000000000000000001'), 'a0'),
+        (10, None, datetime.datetime(2024, 1, 1, 1, 0), ['n'], {'n': 10}, Row(a=10, b='ten'), Decimal('10.000000000000000000'), None, None),
+        (2, 'A', datetime.datetime(2024, 1, 1, 1, 0), [], {'q': None}, None, None, Decimal('3.000000000000000000'), 'a1-hi'),
+        (3, 'A', datetime.datetime(2024, 1, 1, 2, 0), None, {}, Row(a=3, b=None), Decimal('-1E-18'), None, None),
+        (4, 'A', datetime.datetime(2024, 1, 1, 3, 30), ['z'], {'r': 4}, Row(a=4, b='four'), Decimal('12345678901234567890.123456789012345678'), None, 'a3-null-v'),
+        (5, 'A', datetime.datetime(2023, 12, 31, 23, 0), ['early'], {'s': 5}, Row(a=5, b='five'), Decimal('0E-18'), None, None),
+        (6, 'B', datetime.datetime(2024, 1, 1, 1, 59), ['b'], {'b': 6}, Row(a=6, b='six'), Decimal('6.000000000000000000'), None, None),
+        (7, 'B', datetime.datetime(2024, 1, 1, 2, 0), ['b', 'b'], {'b': 7}, Row(a=7, b='seven'), Decimal('7.000000000000000000'), Decimal('20.500000000000000000'), None),
+        (8, 'B', datetime.datetime(2024, 1, 1, 5, 0), None, {'b': 8}, None, Decimal('8.000000000000000000'), None, None),
+        (9, 'C', datetime.datetime(2024, 1, 1, 1, 0), ['c'], {'c': 9}, Row(a=9, b='nine'), Decimal('9.000000000000000000'), None, None),
+    ],
+    'forward_tol': [
+        (1, 'A', datetime.datetime(2024, 1, 1, 0, 30), ['x', None], {'p': 1}, Row(a=1, b='one'), Decimal('1.500000000000000000'), Decimal('2.000000000000000000'), 'a1-lo'),
+        (10, None, datetime.datetime(2024, 1, 1, 1, 0), ['n'], {'n': 10}, Row(a=10, b='ten'), Decimal('10.000000000000000000'), None, None),
+        (2, 'A', datetime.datetime(2024, 1, 1, 1, 0), [], {'q': None}, None, None, Decimal('2.000000000000000000'), 'a1-lo'),
+        (3, 'A', datetime.datetime(2024, 1, 1, 2, 0), None, {}, Row(a=3, b=None), Decimal('-1E-18'), None, None),
+        (4, 'A', datetime.datetime(2024, 1, 1, 3, 30), ['z'], {'r': 4}, Row(a=4, b='four'), Decimal('12345678901234567890.123456789012345678'), None, None),
+        (5, 'A', datetime.datetime(2023, 12, 31, 23, 0), ['early'], {'s': 5}, Row(a=5, b='five'), Decimal('0E-18'), None, None),
+        (6, 'B', datetime.datetime(2024, 1, 1, 1, 59), ['b'], {'b': 6}, Row(a=6, b='six'), Decimal('6.000000000000000000'), Decimal('20.500000000000000000'), None),
+        (7, 'B', datetime.datetime(2024, 1, 1, 2, 0), ['b', 'b'], {'b': 7}, Row(a=7, b='seven'), Decimal('7.000000000000000000'), Decimal('20.500000000000000000'), None),
+        (8, 'B', datetime.datetime(2024, 1, 1, 5, 0), None, {'b': 8}, None, Decimal('8.000000000000000000'), None, None),
+        (9, 'C', datetime.datetime(2024, 1, 1, 1, 0), ['c'], {'c': 9}, Row(a=9, b='nine'), Decimal('9.000000000000000000'), None, None),
+    ],
+    'nearest_tol': [
+        (1, 'A', datetime.datetime(2024, 1, 1, 0, 30), ['x', None], {'p': 1}, Row(a=1, b='one'), Decimal('1.500000000000000000'), Decimal('1.000000000000000001'), 'a0'),
+        (10, None, datetime.datetime(2024, 1, 1, 1, 0), ['n'], {'n': 10}, Row(a=10, b='ten'), Decimal('10.000000000000000000'), None, None),
+        (2, 'A', datetime.datetime(2024, 1, 1, 1, 0), [], {'q': None}, None, None, Decimal('3.000000000000000000'), 'a1-hi'),
+        (3, 'A', datetime.datetime(2024, 1, 1, 2, 0), None, {}, Row(a=3, b=None), Decimal('-1E-18'), None, None),
+        (4, 'A', datetime.datetime(2024, 1, 1, 3, 30), ['z'], {'r': 4}, Row(a=4, b='four'), Decimal('12345678901234567890.123456789012345678'), None, 'a3-null-v'),
+        (5, 'A', datetime.datetime(2023, 12, 31, 23, 0), ['early'], {'s': 5}, Row(a=5, b='five'), Decimal('0E-18'), None, None),
+        (6, 'B', datetime.datetime(2024, 1, 1, 1, 59), ['b'], {'b': 6}, Row(a=6, b='six'), Decimal('6.000000000000000000'), Decimal('20.500000000000000000'), None),
+        (7, 'B', datetime.datetime(2024, 1, 1, 2, 0), ['b', 'b'], {'b': 7}, Row(a=7, b='seven'), Decimal('7.000000000000000000'), Decimal('20.500000000000000000'), None),
+        (8, 'B', datetime.datetime(2024, 1, 1, 5, 0), None, {'b': 8}, None, Decimal('8.000000000000000000'), None, None),
+        (9, 'C', datetime.datetime(2024, 1, 1, 1, 0), ['c'], {'c': 9}, Row(a=9, b='nine'), Decimal('9.000000000000000000'), None, None),
+    ],
+}
+# The bucketed form fills each value column on its own, so a tick whose
+# `v` is NULL (A at 03:00) lets `v` fall back to the older tick while `w`
+# comes from the newer one (row 4); `as_of_join` returns the whole
+# latest row. Pinned as the current behaviour.
+EXPECTED_ASOF_BUCKETED = [
+    (1, 'A', datetime.datetime(2024, 1, 1, 0, 30), ['x', None], {'p': 1}, Row(a=1, b='one'), Decimal('1.500000000000000000'), Decimal('1.000000000000000001'), 'a0'),
+    (10, None, datetime.datetime(2024, 1, 1, 1, 0), ['n'], {'n': 10}, Row(a=10, b='ten'), Decimal('10.000000000000000000'), None, None),
+    (2, 'A', datetime.datetime(2024, 1, 1, 1, 0), [], {'q': None}, None, None, Decimal('3.000000000000000000'), 'a1-hi'),
+    (3, 'A', datetime.datetime(2024, 1, 1, 2, 0), None, {}, Row(a=3, b=None), Decimal('-1E-18'), Decimal('3.000000000000000000'), 'a1-hi'),
+    (4, 'A', datetime.datetime(2024, 1, 1, 3, 30), ['z'], {'r': 4}, Row(a=4, b='four'), Decimal('12345678901234567890.123456789012345678'), Decimal('3.000000000000000000'), 'a3-null-v'),
+    (5, 'A', datetime.datetime(2023, 12, 31, 23, 0), ['early'], {'s': 5}, Row(a=5, b='five'), Decimal('0E-18'), None, None),
+    (6, 'B', datetime.datetime(2024, 1, 1, 1, 59), ['b'], {'b': 6}, Row(a=6, b='six'), Decimal('6.000000000000000000'), None, None),
+    (7, 'B', datetime.datetime(2024, 1, 1, 2, 0), ['b', 'b'], {'b': 7}, Row(a=7, b='seven'), Decimal('7.000000000000000000'), Decimal('20.500000000000000000'), None),
+    (8, 'B', datetime.datetime(2024, 1, 1, 5, 0), None, {'b': 8}, None, Decimal('8.000000000000000000'), Decimal('20.500000000000000000'), None),
+    (9, 'C', datetime.datetime(2024, 1, 1, 1, 0), ['c'], {'c': 9}, Row(a=9, b='nine'), Decimal('9.000000000000000000'), None, None),
+]
+
+
+@pytest.fixture(scope="module")
+def asof_sides(spark):
+    return (
+        spark.createDataFrame(LEFT_ROWS, LEFT_SCHEMA),
+        spark.createDataFrame(RIGHT_ROWS, RIGHT_SCHEMA),
+    )
+
+
+@pytest.mark.parametrize("case", list(ASOF_CASES))
+def test_as_of_join_edges_pinned(asof_sides, case):
+    left, right = asof_sides
+    out = as_of_join(
+        left, right, on=["k"], left_ts="t", right_ts="pt", value_cols=["v", "w"],
+        right_order="ord", **ASOF_CASES[case],
+    )
+    assert _snapshot(out) == _pinned(EXPECTED_ASOF_SCHEMA, EXPECTED_ASOF[case])
+
+
+def test_as_of_join_two_keys(asof_sides):
+    """A constant second key leaves every match as it is."""
+    left, right = asof_sides
+    one = F.lit(1).cast("bigint")
+    out = as_of_join(
+        left.withColumn("k2", one), right.withColumn("k2", one), on=["k", "k2"],
+        left_ts="t", right_ts="pt", value_cols=["v", "w"], right_order="ord",
+    )
+    assert out.columns == [*LEFT_SCHEMA.names, "k2", "v_asof", "w_asof"]
+    rows = sorted(repr(tuple(r)) for r in out.drop("k2").collect())
+    assert rows == _pinned(EXPECTED_ASOF_SCHEMA, EXPECTED_ASOF["backward"])[1]
+
+def test_as_of_join_bucketed_edges_pinned(asof_sides):
+    left, right = asof_sides
+    out = as_of_join_bucketed(
+        left, right, on=["k"], left_ts="t", right_ts="pt", value_cols=["v", "w"],
+        bucket_seconds=3600, right_order="ord",
+    )
+    assert _snapshot(out) == _pinned(EXPECTED_ASOF_SCHEMA, EXPECTED_ASOF_BUCKETED)
+
+
+# ---------------------------------------------------------------------------
+# construction cost: py4j commands sent while the plans are built
+# ---------------------------------------------------------------------------
+
+DISPATCH_COMMAND_BUDGET = 1500
+
+
+@pytest.fixture
+def gateway_commands(monkeypatch):
+    """Count the py4j commands this thread sends. Other threads (py4j's
+    finalizer worker, Spark listeners) are left out of the count."""
+    sent = {"n": 0}
+    me = threading.get_ident()
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        if threading.get_ident() == me:
+            sent["n"] += 1
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+
+    def measure(build):
+        before = sent["n"]
+        build()
+        return sent["n"] - before
+
+    return measure
+
+
+def test_as_of_join_cost_is_width_independent(spark, gateway_commands):
+    base = spark.range(10).select(
+        F.col("id").cast("string").alias("k"),
+        F.timestamp_seconds(F.col("id") * 60).alias("t"),
+    )
+    narrow = base.withColumn("c0", F.lit(0))
+    wide = base.withColumns({f"c{i}": F.lit(i) for i in range(61)})
+    assert (len(narrow.columns), len(wide.columns)) == (3, 63)
+    prices = spark.range(5).select(
+        F.col("id").cast("string").alias("k"),
+        F.timestamp_seconds(F.col("id") * 30).alias("pt"),
+        F.col("id").cast("double").alias("v"),
+    )
+
+    def join(left):
+        return lambda: as_of_join(left, prices, on=["k"], left_ts="t", right_ts="pt", value_cols=["v"])
+
+    join(narrow)()  # first call loads the Python-side helpers
+    n_narrow, n_wide = gateway_commands(join(narrow)), gateway_commands(join(wide))
+    assert n_narrow > 0
+    assert n_narrow == n_wide
+
+
+def test_dispatch_cost_within_budget(bronze, gateway_commands):
+    dispatch(bronze)
+    n = gateway_commands(lambda: dispatch(bronze))
+    assert 0 < n <= DISPATCH_COMMAND_BUDGET, n
