@@ -6,61 +6,55 @@ table (SURVEY.md §2.B B7; reference `dao/postgre/ls_opening.rs:1460-1467`,
 `mp_asset.rs:125-187`). Postgres runs that as an index probe per row —
 O(rows) random lookups, which does not translate to a scan engine.
 
-Spark-first formulation — the *union-sort* trick:
+One semantics, two physical forms:
 
-1. Tag right rows (the tick/price series) with their value columns and
-   left rows with nulls for those columns; union them.
-2. One shuffle: ``Window.partitionBy(keys).orderBy(ts, side)`` where
-   right rows sort *before* left rows at equal timestamps (a tick at
-   exactly the event time is visible to the event).
-3. ``last(value, ignorenulls=True)`` over rows UNBOUNDED PRECEDING →
-   CURRENT ROW carries the most recent right value forward.
-4. Keep only left rows.
+- :func:`as_of_join` (*union-sort*, any size): tag right rows (the tick
+  series) with their values and left rows with nulls, union them, and
+  run ``last(row, ignorenulls)`` over ``Window.partitionBy(keys)
+  .orderBy(ts, side)``, right rows sorting *before* left rows at equal
+  timestamps (a tick at exactly the event time is visible to the
+  event). Exactly ONE shuffle of (|L| + |R|) rows hash-partitioned by
+  key — no range-explosion, no per-row probes, no broadcast
+  requirement; skewed keys can be AQE-split.
+- :func:`as_of_join_broadcast` (dimension-scale right side, zero
+  shuffle): one sorted tick array per key, broadcast onto the left,
+  picked scan-locally.
 
-Scale properties: exactly ONE shuffle of (|L| + |R|) rows hash-partitioned
-by key — no range-explosion, no per-row probes, no broadcast requirement.
-Within-partition sort is what the shuffle already does. Skewed keys can be
-AQE-split because the window partitions by join key only. This is the same
-strategy Flink's temporal join and Delta's `MERGE`-free SCD reads use.
-
-Tie-breaking is deterministic: among right rows sharing a timestamp the
-one with the greatest ``right_order`` column wins (matches the reference's
-``ORDER BY ts DESC, idx DESC LIMIT 1`` determinization).
+:func:`as_of_join_auto` chooses between them from one probe of the
+right side's shape. Both forms answer as LATERAL does: the latest tick
+is returned whole, NULL fields included; a tick with a NULL key or
+timestamp matches nothing; a left row with a NULL key or timestamp gets
+NULL values. Among right rows sharing a timestamp the one with the
+greatest ``right_order`` column wins (the reference's ``ORDER BY ts
+DESC, idx DESC LIMIT 1``).
 """
 
 from __future__ import annotations
 
+import time
 from collections.abc import Sequence
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql.types import ArrayType
 
-# Session-scoped memo for the dimension-scale probe (round-7: the guard
-# re-ran a right-side groupBy().count() job on EVERY broadcast call,
-# which doubled q112's quiet wall — VERDICT r06 "What's wrong" #3 /
-# ranked task 3). Keyed on (plan semanticHash, join keys, probe limit):
-# the same logical right plan yields the same stats within a session, so
-# a pipeline that has already validated its price series pays the probe
-# once. The memo affects ONLY the guard/dispatch decision, never answers
-# (the join itself always reads the actual data). Stale-stats hazard: if
-# the same plan re-reads a GROWING source within one session, a memo hit
-# could skip the loud cap error. Two mitigations IN CODE (round-8
-# verdict task 3 — the caveat used to be prose-only):
+# Dimension scale for the broadcast form: beyond either cap the per-left-
+# row O(|ticks|) pick and the driver-side broadcast stop paying off.
+MAX_KEYS = 100_000
+MAX_TICKS_PER_KEY = 20_000
+
+# Session-scoped memo for the dimension-scale probe, keyed on (plan
+# semanticHash, join keys, probe limit), so a pipeline that re-enriches
+# against an already validated series pays the probe job once. The memo
+# feeds only the guard and the dispatch decision, never answers: the
+# join always reads the actual data. A memo hit on a plan whose source
+# has since GROWN could skip the cap error, so:
 #
-# 1. Every in-repo path that mutates a parquet table a session may
-#    re-enrich against (``sources.merge.merge_parquet``, ``replace_dir``
-#    — the streaming ``merge_sink`` and gold swaps route through them)
-#    calls :func:`clear_probe_memo` after the mutation lands.
-# 2. Entries expire after ``_PROBE_MEMO_TTL`` seconds (monotonic clock)
-#    as a backstop for OUT-of-session writers (another process appending
-#    to the landing dir): a long-lived enrichment loop re-validates its
-#    series at least every 5 minutes, so the guard can lag a grow by at
-#    most one TTL, never forever.
-#
-# External writers inside the TTL window remain the documented residual
-# gap — the caps carry 100x+ headroom over fixture shapes, and answers
-# are never affected, only guard latency.
+# 1. every in-repo path that mutates a parquet table
+#    (``sources.merge.merge_parquet``, ``replace_dir``) must call
+#    :func:`clear_probe_memo` after the mutation lands;
+# 2. entries expire after ``_PROBE_MEMO_TTL`` seconds (monotonic clock),
+#    which bounds the lag behind an out-of-session writer to one TTL.
 _PROBE_MEMO: dict[tuple[int, tuple[str, ...], int], tuple[float, tuple[int, int]]] = {}
 _PROBE_MEMO_CAP = 256
 _PROBE_MEMO_TTL = 300.0
@@ -74,15 +68,12 @@ def clear_probe_memo() -> None:
     _PROBE_MEMO.clear()
 
 
-def _probe_right_stats(
-    right: DataFrame, on: Sequence[str], max_keys: int
-) -> tuple[int, int]:
+def _probe_right_stats(right: DataFrame, on: Sequence[str]) -> tuple[int, int]:
     """(n_keys, max_ticks_per_key) of ``right`` grouped by ``on``, via a
-    guarded ``limit(max_keys + 1)`` count — the similarity.py probe
-    pattern. n_keys saturates at max_keys + 1 (enough to fail the cap
+    guarded ``limit(MAX_KEYS + 1)`` count — the similarity.py probe
+    pattern. n_keys saturates at MAX_KEYS + 1 (enough to fail the cap
     check); memoized per logical plan within the session."""
-    import time
-
+    max_keys = MAX_KEYS
     key = None
     try:
         key = (right.semanticHash(), tuple(on), max_keys)
@@ -134,7 +125,9 @@ def as_of_join(
       ties (pandas' rule).
 
     Returns all ``left`` columns plus ``{value_col}{suffix}`` for each
-    requested value column (null when no matching right row exists).
+    requested value column (null when no matching right row exists). A
+    right row with a NULL key or timestamp matches nothing, and a left
+    row with a NULL key or timestamp gets nulls, as under LATERAL.
 
     ``tolerance_seconds`` bounds staleness (pandas ``merge_asof``
     tolerance): a match farther than the bound yields nulls instead —
@@ -159,7 +152,9 @@ def as_of_join(
     # lists the left columns: construction costs the same few dozen py4j
     # calls however wide the left frame is (each PySpark Column call
     # costs about a dozen). Side marker: right=0 sorts before left=1 at
-    # equal timestamps.
+    # equal timestamps. A right row with a NULL key or timestamp can
+    # never satisfy LATERAL's `p.k = e.k AND p.ts <= e.ts`, so it is
+    # dropped before the union rather than joining the NULL-key window.
     rord = f"CAST({q(right_order)} AS DOUBLE)" if right_order else "0.0D"
     r_tagged = right.selectExpr(
         *map(q, on),
@@ -168,7 +163,7 @@ def as_of_join(
         f"{rord} AS __rord",
         f"CAST({q(right_ts)} AS TIMESTAMP) AS __vts",
         *[f"{q(c)} AS {q(o)}" for c, o in zip(value_cols, out_cols)],
-    )
+    ).filter(" AND ".join(f"{c} IS NOT NULL" for c in [*map(q, on), "__ts"]))
     unioned = left.selectExpr("*", "1 AS __side", f"{q(left_ts)} AS __ts").unionByName(
         r_tagged, allowMissingColumns=True
     )
@@ -188,11 +183,13 @@ def as_of_join(
     # twin — walking from the future backward, the running last right row
     # is the EARLIEST right at/after the current row (side still ascends,
     # so a right row at the exact left ts is visible). nearest runs both
-    # passes over the same exchange, then picks per row.
+    # passes over the same exchange, then picks per row. NULLS FIRST in
+    # both orders puts a NULL-timestamp left row before every tick, so
+    # it matches nothing in either pass.
     def last_row(order: str):
         return F.expr(
             f"last(__row, true) OVER (PARTITION BY {keys} "
-            f"ORDER BY __ts {order}, __side ASC, __rord {order} "
+            f"ORDER BY __ts {order} NULLS FIRST, __side ASC, __rord {order} "
             "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
         )
 
@@ -224,122 +221,6 @@ def as_of_join(
     )
 
 
-def as_of_join_bucketed(
-    left: DataFrame,
-    right: DataFrame,
-    on: Sequence[str],
-    left_ts: str,
-    right_ts: str,
-    value_cols: Sequence[str],
-    bucket_seconds: int = 3600,
-    right_order: str | None = None,
-    suffix: str = "_asof",
-) -> DataFrame:
-    """As-of join with parallelism beyond the key cardinality.
-
-    The plain union-sort join's window partitions by join key only — with
-    a handful of hot symbols and billions of rows, each symbol becomes
-    ONE window task. This variant adds a time bucket to the partition
-    key, restoring parallelism = |keys| × |buckets|:
-
-    1. Reduce the right series to one *carry* row per (key, bucket): the
-       latest right value at-or-before each bucket's start. This table is
-       tiny (|keys| × |buckets|), so its own running-carry window is
-       cheap.
-    2. Union left rows + in-bucket right rows + the carry row (a
-       synthetic tick at bucket start), then run the last-ignorenulls
-       window partitioned by (key, bucket).
-
-    Semantics are identical to :func:`as_of_join` (verified by property
-    test); only the physical partitioning changes.
-    """
-    on = list(on)
-    value_cols = list(value_cols)
-    out_cols = [f"{c}{suffix}" for c in value_cols]
-    rord = F.col(right_order).cast("double") if right_order else F.lit(0.0)
-
-    bucket_of = lambda ts_col: F.floor(F.col(ts_col).cast("double") / bucket_seconds).cast("long")
-
-    # --- 1. per-(key, bucket) latest right row, then carry forward ------
-    r_tagged = right.select(
-        *on,
-        F.col(right_ts).alias("__ts"),
-        rord.alias("__rord"),
-        *[F.col(c).alias(o) for c, o in zip(value_cols, out_cols)],
-        bucket_of(right_ts).alias("__bucket"),
-    )
-    last_in_bucket = (
-        r_tagged.groupBy(*on, "__bucket")
-        .agg(
-            F.max_by(
-                F.struct(*[F.col(o) for o in out_cols]),
-                F.struct(F.col("__ts"), F.col("__rord")),
-            ).alias("__last")
-        )
-        .select(*on, "__bucket", *[F.col(f"__last.{o}").alias(o) for o in out_cols])
-    )
-    # carry into the NEXT bucket onwards: shift by one, then running last.
-    # The carry table is |keys|×|buckets| — small enough that this window
-    # is negligible.
-    w_carry = (
-        Window.partitionBy(*on)
-        .orderBy("__bucket")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carries = (
-        last_in_bucket.select(*on, (F.col("__bucket") + 1).alias("__bucket"), *out_cols)
-        .select(
-            *on,
-            "__bucket",
-            *[F.last(o, ignorenulls=True).over(w_carry).alias(o) for o in out_cols],
-        )
-    )
-    # Carry rows must exist for EVERY left bucket after a tick, not only
-    # the bucket immediately following one. The full-outer union of left
-    # buckets with the shifted tick buckets lets the running-last window
-    # flow values across the gaps; the semi-join then keeps only buckets
-    # the left side actually needs.
-    left_buckets = left.select(*on, bucket_of(left_ts).alias("__bucket")).distinct()
-    spine = (
-        left_buckets.join(carries, [*on, "__bucket"], "full_outer")
-        .select(
-            *on,
-            "__bucket",
-            *[F.last(o, ignorenulls=True).over(w_carry).alias(o) for o in out_cols],
-        )
-        .join(left_buckets, [*on, "__bucket"], "left_semi")
-    )
-
-    # --- 2. in-bucket union-sort window ---------------------------------
-    # The unions fill each side's missing columns with typed nulls by
-    # name, so the left columns are never listed (width-independent
-    # plan construction, as in as_of_join).
-    l_tagged = left.withColumns({
-        "__side": F.lit(2),
-        "__ts": F.col(left_ts),
-        "__bucket": bucket_of(left_ts),
-    })
-    r_in = r_tagged.withColumn("__side", F.lit(1)).join(
-        left_buckets, [*on, "__bucket"], "left_semi"
-    )  # prune tick-only buckets
-    carry_rows = spine.withColumns({
-        "__side": F.lit(0),  # carry sorts before everything in the bucket
-        "__ts": (F.col("__bucket") * bucket_seconds).cast("timestamp"),
-    })
-    unioned = l_tagged.unionByName(r_in, allowMissingColumns=True).unionByName(
-        carry_rows, allowMissingColumns=True
-    )
-    w = (
-        Window.partitionBy(*on, "__bucket")
-        .orderBy(F.col("__ts").asc(), F.col("__side").asc(), F.col("__rord").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    filled = unioned.withColumns(
-        {o: F.last(o, ignorenulls=True).over(w) for o in out_cols}
-    )
-    return filled.filter(F.col("__side") == 2).drop("__side", "__ts", "__rord", "__bucket")
-
-
 def as_of_join_broadcast(
     left: DataFrame,
     right: DataFrame,
@@ -349,9 +230,6 @@ def as_of_join_broadcast(
     value_cols: Sequence[str],
     right_order: str | None = None,
     suffix: str = "_asof",
-    max_keys: int = 100_000,
-    max_ticks_per_key: int = 20_000,
-    precomputed_stats: tuple[int, int] | None = None,
     pick_when: Column | None = None,
 ) -> DataFrame:
     """As-of join for a DIMENSION-SCALE right side: zero shuffle.
@@ -368,63 +246,63 @@ def as_of_join_broadcast(
        field-order, so ts leads the sort);
     2. broadcast-hash-join that per-key row onto the left (|keys| rows
        — always under the broadcast threshold by precondition);
-    3. pick the latest tick ``<= left_ts`` scan-locally with an array
-       ``filter`` + ``F.get`` (null-safe past-the-end, no ANSI throw).
+    3. pick the latest tick ``<= left_ts`` scan-locally.
 
     The left side never moves: the plan is scan -> broadcast join ->
     project. Cost per row is O(|ticks of its key|) comparisons inside
-    codegen — the right tradeoff while |ticks| is dimension-scale; for
-    a big right side use :func:`as_of_join` (one shuffle, any size) or
-    :func:`as_of_join_bucketed` (adds parallelism on hot keys).
+    codegen — the right tradeoff while |ticks| is dimension-scale; a big
+    right side belongs in :func:`as_of_join` (one shuffle, any size).
+    Answers match :func:`as_of_join` with ``direction="backward"``
+    (property-tested in tests/test_properties.py).
 
-    Semantics match :func:`as_of_join(direction="backward")`, including
-    null values when a key has no tick at-or-before ``left_ts`` and the
-    ``ORDER BY ts DESC, right_order DESC LIMIT 1`` tie rule (the struct
-    sorts by (ts, order), so the array's last hit is the winner) —
-    property-tested against the union-sort form in
-    tests/test_properties.py.
+    The dimension-scale precondition is ENFORCED, not trusted: a guarded
+    probe (``MAX_KEYS`` + 1 rows of one ``groupBy(on).count()``,
+    memoized per logical plan, see :func:`clear_probe_memo`) checks that
+    the right side has at most ``MAX_KEYS`` keys and ``MAX_TICKS_PER_KEY``
+    ticks on its densest key before anything is packed or broadcast, and
+    fails loudly beyond either cap instead of hanging the job (a 2M-left
+    x 100k-tick misuse never finishes — PERFORMANCE.md).
 
-    The dimension-scale precondition is ENFORCED, not trusted: a
-    guarded ``limit(n+1)``-style count (the ``similarity.py`` probe
-    pattern) checks that the right side has at most ``max_keys`` keys
-    and ``max_ticks_per_key`` ticks on its densest key before anything
-    is packed or broadcast. Beyond either cap the per-left-row
-    O(|ticks|) fold and the driver-side broadcast both stop being the
-    right tradeoff (the documented 2M-left x 100k-tick misuse never
-    finishes — PERFORMANCE.md), so the guard fails loudly with a
-    pointer to the shapes that do scale instead of hanging the job.
-    The guard job is one ``groupBy(on).count()`` over the right side —
-    dimension-scale by the same precondition, so its cost is noise —
-    and it is memoized per logical plan within the session (see
-    :func:`clear_probe_memo`), so repeated enrichments against the same
-    validated series pay it once. Callers that already hold measured
-    stats (e.g. :func:`as_of_join_auto`'s dispatch probe) pass them via
-    ``precomputed_stats=(n_keys, max_ticks_per_key)`` — the cap checks
-    still run against those numbers, so misuse still fails loudly; the
-    opt-out only skips the probe JOB, never the guard.
+    ``pick_when`` gates the pick per row: rows where it is false skip
+    the O(|ticks|) fold (Spark's If is lazy in codegen) and get NULL;
+    rows where it is true get exactly the ungated answer.
     """
-    on = list(on)
-    value_cols = list(value_cols)
-    if precomputed_stats is not None:
-        n_keys, worst = precomputed_stats
-    else:
-        n_keys, worst = _probe_right_stats(right, on, max_keys)
-    if n_keys > max_keys:
+    n_keys, worst = _probe_right_stats(right, list(on))
+    if n_keys > MAX_KEYS:
         raise ValueError(
-            f"as_of_join_broadcast: right side has more than {max_keys} "
-            f"distinct keys on {on} — the packed per-key tick table is "
+            f"as_of_join_broadcast: right side has more than {MAX_KEYS} "
+            f"distinct keys on {list(on)} — the packed per-key tick table is "
             "broadcast and the pick is a linear fold per left row, so "
-            "this shape belongs in as_of_join (one shuffle, any size) "
-            "or as_of_join_bucketed (hot-key parallelism)"
+            "this shape belongs in as_of_join (one shuffle, any size), "
+            "or let as_of_join_auto choose"
         )
-    if worst > max_ticks_per_key:
+    if worst > MAX_TICKS_PER_KEY:
         raise ValueError(
             f"as_of_join_broadcast: densest right key carries {worst} "
-            f"ticks (> {max_ticks_per_key}) — the per-left-row pick is "
+            f"ticks (> {MAX_TICKS_PER_KEY}) — the per-left-row pick is "
             "O(|ticks|) inside codegen, so a deep series makes every "
             "left row pay for it; use as_of_join (one shuffle, sorted "
-            "window) or as_of_join_bucketed for deep/hot keys"
+            "window), or let as_of_join_auto choose"
         )
+    return _broadcast_pick(
+        left, right, on, left_ts, right_ts, value_cols, right_order, suffix, pick_when
+    )
+
+
+def _broadcast_pick(
+    left: DataFrame,
+    right: DataFrame,
+    on: Sequence[str],
+    left_ts: str,
+    right_ts: str,
+    value_cols: Sequence[str],
+    right_order: str | None,
+    suffix: str,
+    pick_when: Column | None = None,
+) -> DataFrame:
+    """The broadcast form's plan, with the dimension-scale check already
+    made by the caller."""
+    on = list(on)
     rord = [F.col(right_order).alias("__rord")] if right_order else []
     tick = F.struct(
         F.col(right_ts).alias("__ts"), *rord, *[F.col(c) for c in value_cols]
@@ -436,26 +314,17 @@ def as_of_join_broadcast(
     joined = left.join(F.broadcast(packed), on, "left")
     # Latest tick <= left_ts via a fold over the sorted array: later
     # qualifying elements overwrite earlier ones, preserving the
-    # ORDER BY ts DESC, right_order DESC LIMIT 1 tie rule. Chosen over
-    # the equivalent F.filter + F.get(last) because the fold carries one
-    # struct instead of allocating a filtered copy of the tick array per
-    # left row (same q112 wall at sf0.1 within noise; strictly less
-    # allocation per row). Either way the pick is O(|ticks|) per left
-    # row — the precondition that the right side is dimension-scale is
-    # load-bearing: a big series belongs in as_of_join (one shuffle).
+    # ORDER BY ts DESC, right_order DESC LIMIT 1 tie rule, and the whole
+    # tick struct is carried, so the matched row is returned whole. The
+    # fold carries one struct instead of allocating a filtered copy of
+    # the array per left row. A NULL tick timestamp or a NULL left_ts
+    # never qualifies, and a NULL key finds no packed row.
     tick_type = packed.schema["__ticks"].dataType.elementType
     latest = F.aggregate(
         F.coalesce(F.col("__ticks"), F.array().cast(ArrayType(tick_type))),
         F.lit(None).cast(tick_type),
         lambda acc, t: F.when(t["__ts"] <= F.col(left_ts), t).otherwise(acc),
     )
-    # Row-level gate (round 7): when only a SUBSET of left rows consumes
-    # the enrichment (q112: Short contracts revalue debt, Longs ignore
-    # the price), ``pick_when`` pushes that predicate into the pick —
-    # Spark's If is lazy in codegen, so gated-out rows skip the
-    # O(|ticks|) fold entirely and get NULL, exactly what a downstream
-    # ``when(cond & col.isNotNull(), ...)`` consumer reads. Answers for
-    # gated-IN rows are bit-identical to the ungated form (unit test).
     if pick_when is not None:
         latest = F.when(pick_when, latest).otherwise(F.lit(None).cast(tick_type))
     out = joined
@@ -473,58 +342,31 @@ def as_of_join_auto(
     value_cols: Sequence[str],
     right_order: str | None = None,
     suffix: str = "_asof",
-    max_keys: int = 100_000,
-    max_ticks_per_key: int = 20_000,
-    bucket_seconds: int = 3600,
-    hot_key_parallelism_floor: int = 32,
 ) -> tuple[DataFrame, str]:
     """Pick the physical as-of form from the right side's MEASURED
     shape — the operator-level analogue of Catalyst choosing a join
-    strategy from statistics. One guarded ``groupBy(on).count()`` job
-    over the right side decides the form, and its measured stats are
-    HANDED to the broadcast form via ``precomputed_stats`` so the
-    broadcast path pays exactly one probe scan total (round 7: the
-    dispatch probe and the guard probe used to each run the job). The
-    probe is also memoized per logical plan within the session. It is
-    one aggregate scan of the RIGHT side — free for the tick/price
-    series this operator family exists for, but a real cost if the
-    right side is fact-scale: when you already know the series is big,
-    call :func:`as_of_join` directly and skip the probe. Dispatch:
+    strategy from statistics. One probe (the broadcast guard's, so the
+    broadcast path pays one probe job in all, memoized per logical plan)
+    decides:
 
-    - right side within (``max_keys``, ``max_ticks_per_key``) →
-      :func:`as_of_join_broadcast` — zero shuffle, the left never moves;
-    - beyond dimension scale with at least ``hot_key_parallelism_floor``
-      keys → :func:`as_of_join` (union-sort) — one shuffle, any size,
-      parallelism = |keys|;
-    - beyond dimension scale with FEWER keys (the hot-symbol regime
-      where |keys| window tasks would cap the cluster) →
-      :func:`as_of_join_bucketed` — parallelism |keys| × |buckets|.
+    - right side within (``MAX_KEYS``, ``MAX_TICKS_PER_KEY``) → the
+      broadcast form — zero shuffle, the left never moves;
+    - otherwise → :func:`as_of_join` (union-sort) — one shuffle, any
+      size.
 
-    Returns ``(result, form)`` with ``form`` in {"broadcast",
-    "union_sort", "bucketed"} so callers/tests can pin the dispatch.
-    All three forms are property-tested equivalent, so the choice can
-    never change ANSWERS, only the plan — which is what makes automatic
-    dispatch safe here and NOT safe for operators whose variants differ
-    semantically (tolerance/direction stay explicit parameters of
-    :func:`as_of_join` for that reason).
+    The probe is one aggregate scan of the RIGHT side: free for a
+    tick/price series, but a real cost if the right side is fact-scale;
+    when the series is known to be big, call :func:`as_of_join`
+    directly. Returns ``(result, form)`` with ``form`` in
+    {"broadcast", "union_sort"}. Both forms give the same answers
+    (property-tested), so the choice changes only the plan; direction
+    and tolerance stay explicit parameters of :func:`as_of_join`.
     """
-    n_keys, worst = _probe_right_stats(right, list(on), max_keys)
-    if n_keys <= max_keys and worst <= max_ticks_per_key:
-        out = as_of_join_broadcast(
-            left, right, on, left_ts, right_ts, value_cols,
-            right_order=right_order, suffix=suffix,
-            max_keys=max_keys, max_ticks_per_key=max_ticks_per_key,
-            precomputed_stats=(n_keys, worst),
-        )
+    n_keys, worst = _probe_right_stats(right, list(on))
+    if n_keys <= MAX_KEYS and worst <= MAX_TICKS_PER_KEY:
+        out = _broadcast_pick(left, right, on, left_ts, right_ts, value_cols, right_order, suffix)
         return out, "broadcast"
-    if n_keys >= hot_key_parallelism_floor:
-        out = as_of_join(
-            left, right, on, left_ts, right_ts, value_cols,
-            right_order=right_order, suffix=suffix,
-        )
-        return out, "union_sort"
-    out = as_of_join_bucketed(
-        left, right, on, left_ts, right_ts, value_cols,
-        bucket_seconds=bucket_seconds, right_order=right_order, suffix=suffix,
+    out = as_of_join(
+        left, right, on, left_ts, right_ts, value_cols, right_order=right_order, suffix=suffix
     )
-    return out, "bucketed"
+    return out, "union_sort"

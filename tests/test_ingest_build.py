@@ -7,10 +7,11 @@ as-of join build, and what building it costs on the driver.
   ``height`` skip path, an unparseable ``at`` and missing
   ``loan-close``/``close`` flags.
 - ``test_as_of_join_edges_pinned``: ``as_of_join`` (every direction, with
-  and without tolerance) and ``as_of_join_bucketed`` over a left frame
-  with array, map, struct and ``decimal(38,18)`` columns; the null-fill
-  of the nested left columns on the right side of the union is in the
-  pinned nullability.
+  and without tolerance) over a left frame with array, map, struct and
+  ``decimal(38,18)`` columns; the null-fill of the nested left columns on
+  the right side of the union is in the pinned nullability.
+- ``test_as_of_join_null_keys_and_times``: both as-of forms answer rows
+  and ticks with a NULL key or timestamp as LATERAL does.
 - The construction-cost guards count py4j gateway commands sent by the
   building thread: ``as_of_join`` costs the same over a 3-column and a
   63-column left frame, and ``dispatch`` stays within a fixed budget.
@@ -42,7 +43,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from extract_transform_load_spark.operators.asof import as_of_join, as_of_join_bucketed
+from extract_transform_load_spark.operators.asof import as_of_join, as_of_join_broadcast
 from extract_transform_load_spark.pipeline.parsers import dispatch
 from extract_transform_load_spark.schemas import BRONZE_EVENT
 
@@ -519,23 +520,6 @@ EXPECTED_ASOF: dict[str, list[tuple]] = {
         (9, 'C', datetime.datetime(2024, 1, 1, 1, 0), ['c'], {'c': 9}, Row(a=9, b='nine'), Decimal('9.000000000000000000'), None, None),
     ],
 }
-# The bucketed form fills each value column on its own, so a tick whose
-# `v` is NULL (A at 03:00) lets `v` fall back to the older tick while `w`
-# comes from the newer one (row 4); `as_of_join` returns the whole
-# latest row. Pinned as the current behaviour.
-EXPECTED_ASOF_BUCKETED = [
-    (1, 'A', datetime.datetime(2024, 1, 1, 0, 30), ['x', None], {'p': 1}, Row(a=1, b='one'), Decimal('1.500000000000000000'), Decimal('1.000000000000000001'), 'a0'),
-    (10, None, datetime.datetime(2024, 1, 1, 1, 0), ['n'], {'n': 10}, Row(a=10, b='ten'), Decimal('10.000000000000000000'), None, None),
-    (2, 'A', datetime.datetime(2024, 1, 1, 1, 0), [], {'q': None}, None, None, Decimal('3.000000000000000000'), 'a1-hi'),
-    (3, 'A', datetime.datetime(2024, 1, 1, 2, 0), None, {}, Row(a=3, b=None), Decimal('-1E-18'), Decimal('3.000000000000000000'), 'a1-hi'),
-    (4, 'A', datetime.datetime(2024, 1, 1, 3, 30), ['z'], {'r': 4}, Row(a=4, b='four'), Decimal('12345678901234567890.123456789012345678'), Decimal('3.000000000000000000'), 'a3-null-v'),
-    (5, 'A', datetime.datetime(2023, 12, 31, 23, 0), ['early'], {'s': 5}, Row(a=5, b='five'), Decimal('0E-18'), None, None),
-    (6, 'B', datetime.datetime(2024, 1, 1, 1, 59), ['b'], {'b': 6}, Row(a=6, b='six'), Decimal('6.000000000000000000'), None, None),
-    (7, 'B', datetime.datetime(2024, 1, 1, 2, 0), ['b', 'b'], {'b': 7}, Row(a=7, b='seven'), Decimal('7.000000000000000000'), Decimal('20.500000000000000000'), None),
-    (8, 'B', datetime.datetime(2024, 1, 1, 5, 0), None, {'b': 8}, None, Decimal('8.000000000000000000'), Decimal('20.500000000000000000'), None),
-    (9, 'C', datetime.datetime(2024, 1, 1, 1, 0), ['c'], {'c': 9}, Row(a=9, b='nine'), Decimal('9.000000000000000000'), None, None),
-]
-
 
 @pytest.fixture(scope="module")
 def asof_sides(spark):
@@ -567,13 +551,44 @@ def test_as_of_join_two_keys(asof_sides):
     rows = sorted(repr(tuple(r)) for r in out.drop("k2").collect())
     assert rows == _pinned(EXPECTED_ASOF_SCHEMA, EXPECTED_ASOF["backward"])[1]
 
-def test_as_of_join_bucketed_edges_pinned(asof_sides):
-    left, right = asof_sides
-    out = as_of_join_bucketed(
-        left, right, on=["k"], left_ts="t", right_ts="pt", value_cols=["v", "w"],
-        bucket_seconds=3600, right_order="ord",
-    )
-    assert _snapshot(out) == _pinned(EXPECTED_ASOF_SCHEMA, EXPECTED_ASOF_BUCKETED)
+
+# LATERAL's `p.k = e.k AND p.ts <= e.ts` is never true for a NULL key or
+# timestamp on either side: such ticks match nothing, and such left rows
+# get NULL values, in every direction and in both physical forms.
+NULL_LEFT_ROWS = [
+    (1, "A", _t("2024-01-01 01:30:00")),
+    (2, None, _t("2024-01-01 01:30:00")),
+    (3, "A", None),
+    (4, None, None),
+    (5, "A", _t("2024-01-01 00:30:00")),
+]
+NULL_RIGHT_ROWS = [
+    ("A", _t("2024-01-01 01:00:00"), 1.0, "a1", 1),
+    ("A", _t("2024-01-01 02:00:00"), 2.0, "a2", 1),
+    (None, _t("2024-01-01 01:00:00"), 9.0, "null-key", 1),
+    ("A", None, 8.0, "null-ts", 1),
+]
+A1, A2, NONE = (1.0, "a1"), (2.0, "a2"), (None, None)
+EXPECTED_NULL_ASOF = {
+    "backward": {1: A1, 5: NONE},
+    "forward": {1: A2, 5: A1},
+    "nearest": {1: A1, 5: A1},
+    "broadcast": {1: A1, 5: NONE},
+}
+
+
+@pytest.mark.parametrize("case", [*ASOF_CASES, "broadcast"])
+def test_as_of_join_null_keys_and_times(spark, case):
+    left = spark.createDataFrame(NULL_LEFT_ROWS, "id int, k string, t timestamp")
+    right = spark.createDataFrame(NULL_RIGHT_ROWS, "k string, pt timestamp, v double, w string, ord long")
+    args = dict(on=["k"], left_ts="t", right_ts="pt", value_cols=["v", "w"], right_order="ord")
+    if case == "broadcast":
+        out = as_of_join_broadcast(left, right, **args)
+    else:
+        out = as_of_join(left, right, **args, **ASOF_CASES[case])
+    got = {r["id"]: (r["v_asof"], r["w_asof"]) for r in out.collect()}
+    want = {i: NONE for i in (2, 3, 4)} | EXPECTED_NULL_ASOF[case.removesuffix("_tol")]
+    assert got == want
 
 
 # ---------------------------------------------------------------------------

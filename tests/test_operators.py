@@ -982,13 +982,14 @@ def test_bloom_benchmark_size_guard(spark):
         bloom_prefilter_contains(corpus, big, max_benchmark_grams=10)
 
 
-def test_asof_broadcast_dimension_scale_guard(spark):
+def test_asof_broadcast_dimension_scale_guard(spark, monkeypatch):
     """as_of_join_broadcast's precondition is enforced, not trusted: a
     right side beyond dimension scale (too many keys, or a too-deep
     tick series on one key) must raise with a pointer to the shapes
     that do scale — a misuse at 100 TB would otherwise be a hung job
     (the per-left-row pick is O(|ticks|), PERFORMANCE.md's 2M x 100k
     never-finishes shape), not an error."""
+    from extract_transform_load_spark.operators import asof
     from extract_transform_load_spark.operators.asof import as_of_join_broadcast
 
     left = spark.createDataFrame(
@@ -998,10 +999,11 @@ def test_asof_broadcast_dimension_scale_guard(spark):
     many_keys = spark.range(50).selectExpr(
         "id AS k", "TIMESTAMP'2024-01-01 00:00:00' AS pt", "CAST(id AS DOUBLE) AS v"
     )
-    with pytest.raises(ValueError, match="as_of_join_bucketed"):
+    monkeypatch.setattr(asof, "MAX_KEYS", 10)
+    with pytest.raises(ValueError, match="as_of_join_auto"):
         as_of_join_broadcast(
             left, many_keys, on=["k"], left_ts="t", right_ts="pt",
-            value_cols=["v"], max_keys=10,
+            value_cols=["v"],
         )
 
     deep_series = spark.range(50).selectExpr(
@@ -1009,10 +1011,11 @@ def test_asof_broadcast_dimension_scale_guard(spark):
         "TIMESTAMP'2024-01-01 00:00:00' + make_interval(0,0,0,0,0,0,id) AS pt",
         "CAST(id AS DOUBLE) AS v",
     )
+    monkeypatch.setattr(asof, "MAX_TICKS_PER_KEY", 10)
     with pytest.raises(ValueError, match="O\\(\\|ticks\\|\\)"):
         as_of_join_broadcast(
             left, deep_series, on=["k"], left_ts="t", right_ts="pt",
-            value_cols=["v"], max_ticks_per_key=10,
+            value_cols=["v"],
         )
 
     # in-bounds shapes still work (both caps at their boundary)
@@ -1020,18 +1023,18 @@ def test_asof_broadcast_dimension_scale_guard(spark):
         "id % 10 AS k", "TIMESTAMP'2024-01-01 00:00:00' AS pt",
         "CAST(id AS DOUBLE) AS v",
     )
+    monkeypatch.setattr(asof, "MAX_TICKS_PER_KEY", 1)
     out = as_of_join_broadcast(
         left, ok, on=["k"], left_ts="t", right_ts="pt", value_cols=["v"],
-        max_keys=10, max_ticks_per_key=1,
     ).collect()
     assert out[0]["v_asof"] == 1.0
 
 
-def test_asof_auto_dispatch(spark):
+def test_asof_auto_dispatch(spark, monkeypatch):
     """as_of_join_auto picks the physical form from the measured right
-    shape and every form returns identical answers (the property suite
+    shape and both forms return identical answers (the property suite
     pins the equivalence; this pins the dispatch)."""
-    from extract_transform_load_spark.operators.asof import as_of_join_auto
+    from extract_transform_load_spark.operators import asof
 
     left = spark.createDataFrame(
         [(1, 0, ts("2024-01-01 01:00:00")), (2, 1, ts("2024-01-01 02:00:00"))],
@@ -1041,37 +1044,32 @@ def test_asof_auto_dispatch(spark):
         "id % 2 AS k", "TIMESTAMP'2024-01-01 00:00:00' + make_interval(0,0,0,0,id,0,0) AS pt",
         "CAST(id AS DOUBLE) AS v",
     )
-    out, form = as_of_join_auto(left, dim, ["k"], "t", "pt", ["v"])
+    out, form = asof.as_of_join_auto(left, dim, ["k"], "t", "pt", ["v"])
     assert form == "broadcast"
     got = {r["eid"]: r["v_asof"] for r in out.collect()}
 
-    # same data, caps forced low + many keys -> union-sort
-    out2, form2 = as_of_join_auto(
-        left, dim, ["k"], "t", "pt", ["v"], max_ticks_per_key=2,
-        hot_key_parallelism_floor=2,
-    )
+    # same data beyond the tick cap -> union-sort
+    monkeypatch.setattr(asof, "MAX_TICKS_PER_KEY", 2)
+    out2, form2 = asof.as_of_join_auto(left, dim, ["k"], "t", "pt", ["v"])
     assert form2 == "union_sort"
     assert {r["eid"]: r["v_asof"] for r in out2.collect()} == got
 
-    # few hot keys beyond dimension scale -> bucketed
-    out3, form3 = as_of_join_auto(
-        left, dim, ["k"], "t", "pt", ["v"], max_ticks_per_key=2,
-        hot_key_parallelism_floor=32,
-    )
-    assert form3 == "bucketed"
+    # and beyond the key cap -> union-sort
+    monkeypatch.undo()
+    monkeypatch.setattr(asof, "MAX_KEYS", 1)
+    out3, form3 = asof.as_of_join_auto(left, dim, ["k"], "t", "pt", ["v"])
+    assert form3 == "union_sort"
     assert {r["eid"]: r["v_asof"] for r in out3.collect()} == got
 
 
-def test_asof_probe_memo_and_precomputed_stats(spark):
-    """Round-7 guard economics (VERDICT r06 ranked task 3 + ADVICE):
+def test_asof_probe_memo_and_single_probe(spark):
+    """The dimension-scale probe's economics:
 
-    1. the dimension-scale probe is memoized per logical plan, so a
-       pipeline that re-enriches against the same validated series pays
-       the probe job once per session;
-    2. as_of_join_auto hands its measured stats to the broadcast form
-       (one probe scan total, as the docstring claims);
-    3. ``precomputed_stats`` skips only the probe JOB — the cap checks
-       still run against the provided numbers, so misuse stays loud.
+    1. the probe is memoized per logical plan, so a pipeline that
+       re-enriches against the same validated series pays the probe job
+       once per session, and an entry older than the TTL is re-probed;
+    2. as_of_join_auto probes once: the dispatch decision and the
+       broadcast guard share it.
     """
     from extract_transform_load_spark.operators import asof
 
@@ -1087,17 +1085,16 @@ def test_asof_probe_memo_and_precomputed_stats(spark):
     # (1) memoization: second probe of the same plan is served from the
     # memo — prove it by planting a sentinel and reading it back.
     asof.clear_probe_memo()
-    stats = asof._probe_right_stats(dim, ["k"], 100_000)
+    stats = asof._probe_right_stats(dim, ["k"])
     assert stats == (2, 3)
     (key,) = asof._PROBE_MEMO.keys()
     born, _ = asof._PROBE_MEMO[key]
     asof._PROBE_MEMO[key] = (born, (7, 7))
-    assert asof._probe_right_stats(dim, ["k"], 100_000) == (7, 7)
-    # TTL backstop (round-8 verdict task 3): an entry older than the TTL
-    # is re-probed, so an out-of-session writer can stale the guard by
-    # at most one TTL window
+    assert asof._probe_right_stats(dim, ["k"]) == (7, 7)
+    # TTL backstop: an entry older than the TTL is re-probed, so an
+    # out-of-session writer can stale the guard by at most one TTL
     asof._PROBE_MEMO[key] = (born - asof._PROBE_MEMO_TTL - 1, (7, 7))
-    assert asof._probe_right_stats(dim, ["k"], 100_000) == (2, 3)
+    assert asof._probe_right_stats(dim, ["k"]) == (2, 3)
     asof.clear_probe_memo()
     assert asof._PROBE_MEMO == {}
 
@@ -1105,9 +1102,9 @@ def test_asof_probe_memo_and_precomputed_stats(spark):
     calls = []
     real = asof._probe_right_stats
 
-    def counting(right, on, max_keys):
+    def counting(right, on):
         calls.append(1)
-        return real(right, on, max_keys)
+        return real(right, on)
 
     asof._probe_right_stats = counting
     try:
@@ -1119,22 +1116,10 @@ def test_asof_probe_memo_and_precomputed_stats(spark):
         asof._probe_right_stats = real
         asof.clear_probe_memo()
 
-    # (3) precomputed stats skip the job but not the guard
-    with pytest.raises(ValueError, match="as_of_join_bucketed"):
-        asof.as_of_join_broadcast(
-            left, dim, on=["k"], left_ts="t", right_ts="pt",
-            value_cols=["v"], precomputed_stats=(200_001, 3),
-        )
-    with pytest.raises(ValueError, match="O\\(\\|ticks\\|\\)"):
-        asof.as_of_join_broadcast(
-            left, dim, on=["k"], left_ts="t", right_ts="pt",
-            value_cols=["v"], precomputed_stats=(2, 50_000),
-        )
 
-
-def test_asof_probe_memo_invalidated_by_table_mutation(spark, tmp_path):
-    """Round-8 verdict task 3: the memo-staleness mitigation must live
-    in CODE, not prose. A session that (1) enriches against a parquet
+def test_asof_probe_memo_invalidated_by_table_mutation(spark, tmp_path, monkeypatch):
+    """The memo-staleness mitigation lives in code. A session that
+    (1) enriches against a parquet
     price series under the cap (memo now warm), then (2) grows the
     series past the cap through the in-repo upsert path, must (3) get
     the loud cap error on the next enrichment — merge_parquet clears the
@@ -1155,10 +1140,10 @@ def test_asof_probe_memo_invalidated_by_table_mutation(spark, tmp_path):
     )
 
     asof.clear_probe_memo()
+    monkeypatch.setattr(asof, "MAX_TICKS_PER_KEY", 8)
     ticks = spark.read.parquet(path)
     out = asof.as_of_join_broadcast(
-        left, ticks, on=["k"], left_ts="t", right_ts="pt",
-        value_cols=["v"], max_ticks_per_key=8,
+        left, ticks, on=["k"], left_ts="t", right_ts="pt", value_cols=["v"],
     )
     assert out.collect()[0]["v_asof"] == 3.0
     assert len(asof._PROBE_MEMO) == 1  # memo warm
@@ -1176,8 +1161,7 @@ def test_asof_probe_memo_invalidated_by_table_mutation(spark, tmp_path):
     grown = spark.read.parquet(path)
     with pytest.raises(ValueError, match=r"O\(\|ticks\|\)"):
         asof.as_of_join_broadcast(
-            left, grown, on=["k"], left_ts="t", right_ts="pt",
-            value_cols=["v"], max_ticks_per_key=8,
+            left, grown, on=["k"], left_ts="t", right_ts="pt", value_cols=["v"],
         ).collect()
     asof.clear_probe_memo()
 

@@ -106,62 +106,60 @@ def test_latest_per_key_property(spark, rows):
     assert got == {k: v[2] for k, v in want.items()}
 
 
-@given(events=events_strategy, prices=prices_strategy)
-@SETTINGS
-def test_asof_bucketed_equivalence(spark, events, prices):
-    from extract_transform_load_spark.operators.asof import as_of_join_bucketed
-
-    ev = spark.createDataFrame(
-        [(i, k, BASE + timedelta(minutes=m)) for i, (k, m) in enumerate(events)],
-        "eid long, k long, t timestamp",
-    )
-    pr = spark.createDataFrame(
-        [(k, BASE + timedelta(minutes=m), v, i) for i, (k, m, v) in enumerate(prices)],
-        "k long, pt timestamp, v double, idx long",
-    )
-    plain = {
-        r["eid"]: r["v_asof"]
-        for r in as_of_join(ev, pr, on=["k"], left_ts="t", right_ts="pt",
-                            value_cols=["v"], right_order="idx").collect()
-    }
-    # 600 s buckets force multi-bucket carries across the 100-minute span
-    bucketed = {
-        r["eid"]: r["v_asof"]
-        for r in as_of_join_bucketed(ev, pr, on=["k"], left_ts="t", right_ts="pt",
-                                     value_cols=["v"], bucket_seconds=600,
-                                     right_order="idx").collect()
-    }
-    assert bucketed == plain
+nullable_events = st.lists(
+    st.tuples(
+        st.none() | st.integers(min_value=0, max_value=3),    # key
+        st.none() | st.integers(min_value=0, max_value=100),  # minutes offset
+    ),
+    min_size=1,
+    max_size=25,
+)
+nullable_prices = st.lists(
+    st.tuples(
+        st.none() | st.integers(min_value=0, max_value=3),
+        st.none() | st.integers(min_value=0, max_value=100),
+        st.none() | st.floats(min_value=0.1, max_value=100, allow_nan=False),
+        st.none() | st.sampled_from(["x", "y", "z"]),
+    ),
+    min_size=0,
+    max_size=25,
+)
 
 
-@given(events=events_strategy, prices=prices_strategy)
+@given(events=nullable_events, prices=nullable_prices)
 @SETTINGS
 def test_asof_broadcast_equivalence(spark, events, prices):
-    """The dimension-scale fast path (zero shuffle, sorted-tick arrays
-    behind a broadcast join) must match the union-sort form exactly,
-    including the (ts DESC, right_order DESC) tie rule and no-tick
-    nulls."""
+    """Both physical forms — union-sort and the dimension-scale broadcast
+    form (zero shuffle, sorted-tick arrays behind a broadcast join) —
+    answer as LATERAL does: the latest tick by (ts, right_order) is
+    picked whole, NULL fields included; a NULL key or timestamp on
+    either side matches nothing. So as_of_join_auto's choice between
+    them cannot change an answer."""
     from extract_transform_load_spark.operators.asof import as_of_join_broadcast
 
+    def at(m):
+        return None if m is None else BASE + timedelta(minutes=m)
+
     ev = spark.createDataFrame(
-        [(i, k, BASE + timedelta(minutes=m)) for i, (k, m) in enumerate(events)],
+        [(i, k, at(m)) for i, (k, m) in enumerate(events)],
         "eid long, k long, t timestamp",
     )
     pr = spark.createDataFrame(
-        [(k, BASE + timedelta(minutes=m), v, i) for i, (k, m, v) in enumerate(prices)],
-        "k long, pt timestamp, v double, idx long",
+        [(k, at(m), v, w, i) for i, (k, m, v, w) in enumerate(prices)],
+        "k long, pt timestamp, v double, w string, idx long",
     )
-    plain = {
-        r["eid"]: r["v_asof"]
-        for r in as_of_join(ev, pr, on=["k"], left_ts="t", right_ts="pt",
-                            value_cols=["v"], right_order="idx").collect()
-    }
-    bcast = {
-        r["eid"]: r["v_asof"]
-        for r in as_of_join_broadcast(ev, pr, on=["k"], left_ts="t", right_ts="pt",
-                                      value_cols=["v"], right_order="idx").collect()
-    }
-    assert bcast == plain
+    args = dict(on=["k"], left_ts="t", right_ts="pt", value_cols=["v", "w"], right_order="idx")
+    want = {}
+    for i, (k, m) in enumerate(events):
+        cands = [
+            (pm, idx, v, w)
+            for idx, (pk, pm, v, w) in enumerate(prices)
+            if None not in (k, m, pk, pm) and pk == k and pm <= m
+        ]
+        want[i] = max(cands)[2:] if cands else (None, None)
+    for form in (as_of_join, as_of_join_broadcast):
+        got = {r["eid"]: (r["v_asof"], r["w_asof"]) for r in form(ev, pr, **args).collect()}
+        assert got == want, form.__name__
 
 
 edges_strategy = st.lists(
