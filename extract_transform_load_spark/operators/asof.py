@@ -17,16 +17,20 @@ One semantics, two physical forms:
   key — no range-explosion, no per-row probes, no broadcast
   requirement; skewed keys can be AQE-split.
 - :func:`as_of_join_broadcast` (dimension-scale right side, zero
-  shuffle): one sorted tick array per key, broadcast onto the left,
-  picked scan-locally.
+  shuffle): one sorted tick array per key, packed in a single task
+  (the right side coalesced to one partition, so the packing needs no
+  exchange), broadcast onto the left and picked scan-locally. The
+  output keeps the left frame's column order, as union-sort does.
 
 :func:`as_of_join_auto` chooses between them from one probe of the
-right side's shape. Both forms answer as LATERAL does: the latest tick
-is returned whole, NULL fields included; a tick with a NULL key or
-timestamp matches nothing; a left row with a NULL key or timestamp gets
-NULL values. Among right rows sharing a timestamp the one with the
-greatest ``right_order`` column wins (the reference's ``ORDER BY ts
-DESC, idx DESC LIMIT 1``).
+right side's shape; the ingest enrichment (``pipeline/enrich.py``)
+goes through it, so a price series at dimension scale is priced by
+broadcast and a deeper one by union-sort. Both forms answer as LATERAL
+does: the latest tick is returned whole, NULL fields included; a tick
+with a NULL key or timestamp matches nothing; a left row with a NULL
+key or timestamp gets NULL values. Among right rows sharing a timestamp
+the one with the greatest ``right_order`` column wins (the reference's
+``ORDER BY ts DESC, idx DESC LIMIT 1``).
 """
 
 from __future__ import annotations
@@ -36,26 +40,30 @@ from collections.abc import Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
-from pyspark.sql.types import ArrayType
 
-# Dimension scale for the broadcast form: beyond either cap the per-left-
-# row O(|ticks|) pick and the driver-side broadcast stop paying off.
+# Dimension scale for the broadcast form: beyond either cap the packed
+# tick table (built in one task, collected to the driver and broadcast
+# whole, its key's array carried by every joined left row) stops paying
+# off.
 MAX_KEYS = 100_000
 MAX_TICKS_PER_KEY = 20_000
 
-# Session-scoped memo for the dimension-scale probe, keyed on (plan
-# semanticHash, join keys, probe limit), so a pipeline that re-enriches
-# against an already validated series pays the probe job once. The memo
-# feeds only the guard and the dispatch decision, never answers: the
-# join always reads the actual data. A memo hit on a plan whose source
-# has since GROWN could skip the cap error, so:
+# Session-scoped memo for the dimension-scale probe, keyed on (semantic
+# hash of the right side's key columns, probe limit), so a pipeline that
+# re-enriches against an already validated series pays the probe job
+# once. The key is the canonical plan of ``right.select(*on)``: the
+# probe reads nothing else, and canonicalization drops alias names, so
+# views of one series that name its key differently share one entry.
+# The memo feeds only the guard and the dispatch decision, never
+# answers: the join always reads the actual data. A memo hit on a plan
+# whose source has since GROWN could skip the cap error, so:
 #
 # 1. every in-repo path that mutates a parquet table
 #    (``sources.merge.merge_parquet``, ``replace_dir``) must call
 #    :func:`clear_probe_memo` after the mutation lands;
 # 2. entries expire after ``_PROBE_MEMO_TTL`` seconds (monotonic clock),
 #    which bounds the lag behind an out-of-session writer to one TTL.
-_PROBE_MEMO: dict[tuple[int, tuple[str, ...], int], tuple[float, tuple[int, int]]] = {}
+_PROBE_MEMO: dict[tuple[int, int], tuple[float, tuple[int, int]]] = {}
 _PROBE_MEMO_CAP = 256
 _PROBE_MEMO_TTL = 300.0
 
@@ -72,11 +80,13 @@ def _probe_right_stats(right: DataFrame, on: Sequence[str]) -> tuple[int, int]:
     """(n_keys, max_ticks_per_key) of ``right`` grouped by ``on``, via a
     guarded ``limit(MAX_KEYS + 1)`` count — the similarity.py probe
     pattern. n_keys saturates at MAX_KEYS + 1 (enough to fail the cap
-    check); memoized per logical plan within the session."""
+    check); memoized per canonical plan of the key columns within the
+    session."""
     max_keys = MAX_KEYS
+    keys = right.select(*on)
     key = None
     try:
-        key = (right.semanticHash(), tuple(on), max_keys)
+        key = (keys.semanticHash(), max_keys)
     except Exception:  # pragma: no cover - semanticHash unavailable
         pass
     now = time.monotonic()
@@ -88,7 +98,7 @@ def _probe_right_stats(right: DataFrame, on: Sequence[str]) -> tuple[int, int]:
         # enrichment threads can both see the entry expired, and the
         # second del would raise KeyError out of the join.
         _PROBE_MEMO.pop(key, None)
-    counts = right.groupBy(*list(on)).count().limit(max_keys + 1).collect()
+    counts = keys.groupBy(*on).count().limit(max_keys + 1).collect()
     stats = (len(counts), max((r["count"] for r in counts), default=0))
     if key is not None:
         if len(_PROBE_MEMO) >= _PROBE_MEMO_CAP:
@@ -246,41 +256,45 @@ def as_of_join_broadcast(
        field-order, so ts leads the sort);
     2. broadcast-hash-join that per-key row onto the left (|keys| rows
        — always under the broadcast threshold by precondition);
-    3. pick the latest tick ``<= left_ts`` scan-locally.
+    3. pick the latest tick ``<= left_ts`` scan-locally, by binary
+       search over the sorted array.
 
     The left side never moves: the plan is scan -> broadcast join ->
-    project. Cost per row is O(|ticks of its key|) comparisons inside
-    codegen — the right tradeoff while |ticks| is dimension-scale; a big
-    right side belongs in :func:`as_of_join` (one shuffle, any size).
+    project. Per row, the joined row carries its key's tick array and
+    the pick makes O(log |ticks of its key|) comparisons — the right
+    tradeoff while |ticks| is dimension-scale; a big right side belongs
+    in :func:`as_of_join` (one shuffle, any size).
     Answers match :func:`as_of_join` with ``direction="backward"``
     (property-tested in tests/test_properties.py).
 
     The dimension-scale precondition is ENFORCED, not trusted: a guarded
     probe (``MAX_KEYS`` + 1 rows of one ``groupBy(on).count()``,
-    memoized per logical plan, see :func:`clear_probe_memo`) checks that
+    memoized per canonical plan of the key columns, see
+    :func:`clear_probe_memo`) checks that
     the right side has at most ``MAX_KEYS`` keys and ``MAX_TICKS_PER_KEY``
     ticks on its densest key before anything is packed or broadcast, and
-    fails loudly beyond either cap instead of hanging the job (a 2M-left
-    x 100k-tick misuse never finishes — PERFORMANCE.md).
+    fails loudly beyond either cap instead of packing and broadcasting
+    an oversized table.
 
     ``pick_when`` gates the pick per row: rows where it is false skip
-    the O(|ticks|) fold (Spark's If is lazy in codegen) and get NULL;
-    rows where it is true get exactly the ungated answer.
+    the search (Spark's If is lazy) and get NULL; rows where it is true
+    get exactly the ungated answer.
     """
     n_keys, worst = _probe_right_stats(right, list(on))
     if n_keys > MAX_KEYS:
         raise ValueError(
             f"as_of_join_broadcast: right side has more than {MAX_KEYS} "
             f"distinct keys on {list(on)} — the packed per-key tick table is "
-            "broadcast and the pick is a linear fold per left row, so "
-            "this shape belongs in as_of_join (one shuffle, any size), "
-            "or let as_of_join_auto choose"
+            "collected to the driver and broadcast whole, so this shape "
+            "belongs in as_of_join (one shuffle, any size), or let "
+            "as_of_join_auto choose"
         )
     if worst > MAX_TICKS_PER_KEY:
         raise ValueError(
             f"as_of_join_broadcast: densest right key carries {worst} "
-            f"ticks (> {MAX_TICKS_PER_KEY}) — the per-left-row pick is "
-            "O(|ticks|) inside codegen, so a deep series makes every "
+            f"ticks (> {MAX_TICKS_PER_KEY}) — one task packs each key's "
+            "ticks into an array that every joined left row of the key "
+            "carries, O(|ticks|) per row, so a deep series makes every "
             "left row pay for it; use as_of_join (one shuffle, sorted "
             "window), or let as_of_join_auto choose"
         )
@@ -302,35 +316,53 @@ def _broadcast_pick(
 ) -> DataFrame:
     """The broadcast form's plan, with the dimension-scale check already
     made by the caller."""
+    q = quote_ident
     on = list(on)
-    rord = [F.col(right_order).alias("__rord")] if right_order else []
-    tick = F.struct(
-        F.col(right_ts).alias("__ts"), *rord, *[F.col(c) for c in value_cols]
-    )
+    rkeys = [f"__k{i}" for i in range(len(on))]
+    rord = [f"{q(right_order)} AS __rord"] if right_order else []
+    tick = ", ".join([f"{q(right_ts)} AS __ts", *rord, *map(q, value_cols)])
+    # A tick with a NULL key or timestamp matches nothing, so it is not
+    # packed. One partition already satisfies the aggregate's
+    # distribution, so the packed table is built inside the broadcast's
+    # own job, with no shuffle-map job before it; the whole table is
+    # collected to the driver for the broadcast anyway. The right keys
+    # get private names and the join is an explicit equi-join, so the
+    # output keeps the left frame's column order (a USING join would move
+    # the keys to the front), and lookups into one series by differently
+    # named keys pack the same plan, which the later ones reuse.
     packed = (
-        right.groupBy(*on)
-        .agg(F.sort_array(F.collect_list(tick)).alias("__ticks"))
+        right.filter(" AND ".join(f"{c} IS NOT NULL" for c in map(q, [*on, right_ts])))
+        .selectExpr(*[f"{q(k)} AS {r}" for k, r in zip(on, rkeys)], f"struct({tick}) AS __tick")
+        .coalesce(1)
+        .groupBy(*rkeys)
+        .agg(F.expr("sort_array(collect_list(__tick))").alias("__ticks"))
     )
-    joined = left.join(F.broadcast(packed), on, "left")
-    # Latest tick <= left_ts via a fold over the sorted array: later
-    # qualifying elements overwrite earlier ones, preserving the
-    # ORDER BY ts DESC, right_order DESC LIMIT 1 tie rule, and the whole
-    # tick struct is carried, so the matched row is returned whole. The
-    # fold carries one struct instead of allocating a filtered copy of
-    # the array per left row. A NULL tick timestamp or a NULL left_ts
-    # never qualifies, and a NULL key finds no packed row.
-    tick_type = packed.schema["__ticks"].dataType.elementType
-    latest = F.aggregate(
-        F.coalesce(F.col("__ticks"), F.array().cast(ArrayType(tick_type))),
-        F.lit(None).cast(tick_type),
-        lambda acc, t: F.when(t["__ts"] <= F.col(left_ts), t).otherwise(acc),
+    cond = " AND ".join(f"{q(k)} = {r}" for k, r in zip(on, rkeys))
+    joined = left.join(F.broadcast(packed), F.expr(cond), "left")
+    # The array is sorted on (ts, right_order, values), so the ticks at
+    # or before left_ts are a prefix of it and the latest one is the
+    # prefix's last element, which keeps the ORDER BY ts DESC,
+    # right_order DESC LIMIT 1 tie rule. The prefix length is found by
+    # binary search: 31 halvings cover any array (fewer than 2^31
+    # elements), and a step after convergence returns its state, so a
+    # left row costs O(log |ticks|), not a scan of its key's ticks.
+    # ``get`` answers NULL for index -1 (no tick qualifies, or left_ts is
+    # NULL and every comparison fails) and for a NULL array (a key with
+    # no packed row).
+    mid = "shiftright(__s.lo + __s.hi, 1)"
+    latest = F.expr(
+        f"get(__ticks, aggregate(sequence(1, 31), named_struct('lo', 0, 'hi', size(__ticks)), "
+        f"(__s, __i) -> IF(__s.lo < __s.hi, IF(__ticks[{mid}].__ts <= {q(left_ts)}, "
+        f"named_struct('lo', {mid} + 1, 'hi', __s.hi), named_struct('lo', __s.lo, 'hi', {mid})), "
+        f"__s)).lo - 1)"
     )
     if pick_when is not None:
-        latest = F.when(pick_when, latest).otherwise(F.lit(None).cast(tick_type))
-    out = joined
-    for c in value_cols:
-        out = out.withColumn(f"{c}{suffix}", latest[c])
-    return out.drop("__ticks")
+        latest = F.when(pick_when, latest)
+    return (
+        joined.withColumn("__tick", latest)
+        .selectExpr("*", *[f"__tick.{q(c)} AS {q(c + suffix)}" for c in value_cols])
+        .drop("__ticks", "__tick", *rkeys)
+    )
 
 
 def as_of_join_auto(
@@ -346,8 +378,8 @@ def as_of_join_auto(
     """Pick the physical as-of form from the right side's MEASURED
     shape — the operator-level analogue of Catalyst choosing a join
     strategy from statistics. One probe (the broadcast guard's, so the
-    broadcast path pays one probe job in all, memoized per logical plan)
-    decides:
+    broadcast path pays one probe job in all, memoized per canonical
+    plan of the key columns) decides:
 
     - right side within (``MAX_KEYS``, ``MAX_TICKS_PER_KEY``) → the
       broadcast form — zero shuffle, the left never moves;

@@ -5,9 +5,11 @@ do the as-of price lookups ONCE at write time and persist the derived
 columns (`LS_loan_amnt_stable`, `LS_opening_price`,
 `LS_liquidation_price_at_open`), so the ~45 read queries never pay a
 lateral join. The reference does per-event Postgres lookups
-(`handler/wasm_ls_open.rs:63-97`, `configuration.rs:564-628`); here the
-whole batch enriches in one distributed as-of join per (symbol) key —
-O(batch) instead of O(events) round trips.
+against a price series it keeps in an in-memory cache
+(`handler/wasm_ls_open.rs:63-97`, `configuration.rs:543-628`); here
+each lookup is one as-of join over the whole batch — O(batch) instead
+of O(events) round trips — and a dimension-scale price series is
+broadcast to the batch, which never shuffles for pricing.
 """
 
 from __future__ import annotations
@@ -15,7 +17,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
-from ..operators.asof import as_of_join, quote_ident
+from ..operators.asof import as_of_join_auto, quote_ident
 from ..schemas import AMOUNT, PRICE
 
 
@@ -29,9 +31,16 @@ def attach_asof_price(
     price_ts_col: str = "MP_asset_timestamp",
     price_col: str = "MP_price_in_stable",
 ) -> DataFrame:
-    """Latest price with price_ts <= event ts for the row's symbol.
+    """Latest price with price_ts <= event ts for the row's symbol,
+    appended as ``out_col`` after ``df``'s columns.
 
-    One shuffle on symbol (union-sort as-of join, operators/asof.py). The
+    ``operators.asof.as_of_join_auto`` picks the form from one memoized
+    probe of the series: within ``MAX_KEYS``/``MAX_TICKS_PER_KEY`` the
+    per-symbol tick table is packed in one task and broadcast, so ``df``
+    never shuffles; a deeper series takes union-sort (one shuffle on
+    symbol). The packed table does not depend on ``symbol_col``, so
+    several lookups into one series within a plan share one broadcast
+    (the later ones plan as ``ReusedExchange``) and one probe. The
     reference's per-row `LEFT JOIN LATERAL ... LIMIT 1`
     (`dao/postgre/mp_asset.rs:125-187`) is the Postgres formulation of
     the same semantics.
@@ -41,7 +50,7 @@ def attach_asof_price(
         f"{quote_ident(price_ts_col)} AS __price_ts",
         f"{quote_ident(price_col)} AS __price",
     )
-    joined = as_of_join(
+    joined, _ = as_of_join_auto(
         df,
         p,
         on=[symbol_col],

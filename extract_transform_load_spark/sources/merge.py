@@ -32,11 +32,16 @@ boundary instead of pretending to cross it.
 
 from __future__ import annotations
 
+import json
 import uuid
 from collections.abc import Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+# the footer key under which Spark's parquet writer stores the row schema
+SPARK_ROW_METADATA = "org.apache.spark.sql.parquet.row.metadata"
 
 
 def merge_plan(
@@ -192,7 +197,7 @@ def merge_parquet(
     """
     pk = list(pk)
     if partition_col is None:
-        existing = spark.read.parquet(target_path)
+        existing = read_target(spark, target_path)
         merged = merge_plan(existing, updates, pk, deletes, order_col)
         staging = f"{target_path.rstrip('/')}__staging_{uuid.uuid4().hex}"
         merged.write.mode("overwrite").parquet(staging)
@@ -212,7 +217,7 @@ def merge_parquet(
     if not touched:
         return []
 
-    existing = spark.read.parquet(target_path).filter(
+    existing = read_target(spark, target_path).filter(
         F.col(partition_col).isin(touched)
     )
     merged = merge_plan(existing, updates, pk, deletes, order_col)
@@ -233,6 +238,49 @@ def merge_parquet(
     finally:
         _invalidate_probe_memo()
     return swapped
+
+
+def read_target(spark: SparkSession, path: str) -> DataFrame:
+    """``path`` as a parquet table, read with the schema in one data
+    file's footer.
+
+    Spark's schema inference (``mergeSchema`` off) reads the same single
+    footer, but in a Spark job; reading the footer here, on the driver
+    through the Hadoop FS, gives the same columns, types and partition
+    discovery (Spark makes a read schema nullable either way) and fires
+    no job. A directory with no data file, or a file that another writer
+    left without Spark's row schema, is read as before, by inference.
+    """
+    schema = _footer_schema(spark, path)
+    return (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
+
+
+def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The Spark row schema stored in the footer of the first data file
+    under ``path``, or None. Files and directories that Spark's file
+    index skips (``_``/``.`` prefixed, except ``_col=value`` partition
+    directories) are skipped here too."""
+    fs, root, jvm = _hadoop_fs(spark, path)
+    if not fs.exists(root):
+        return None
+    prefix = len(fs.makeQualified(root).toUri().getPath().rstrip("/")) + 1
+    files = fs.listFiles(root, True)
+    while files.hasNext():
+        status = files.next()
+        rel = status.getPath().toUri().getPath()[prefix:]
+        if status.getLen() == 0 or any(
+            part.startswith(".") or (part.startswith("_") and "=" not in part)
+            for part in rel.split("/")
+        ):
+            continue
+        footer = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+            spark.sparkContext._jsc.hadoopConfiguration(),
+            status,
+            jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+        )
+        row = footer.getFileMetaData().getKeyValueMetaData().get(SPARK_ROW_METADATA)
+        return None if row is None else StructType.fromJson(json.loads(row))
+    return None
 
 
 def _invalidate_probe_memo() -> None:

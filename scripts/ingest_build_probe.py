@@ -17,7 +17,8 @@ every number is driver-side analysis and py4j traffic.
 
 With ``--plans DIR`` it also writes each table's optimized plan
 (dispatch -> enrich -> dedup) to ``DIR/<table>.txt``, expression ids
-normalized, for diffing two checkouts.
+normalized (and the identity hashes of folded array literals), for
+diffing two checkouts.
 
     python scripts/ingest_build_probe.py --seed 1 --repeats 5 [--plans DIR]
 """
@@ -69,7 +70,8 @@ class CommandCounter:
 
 def normalized_plan(df) -> str:
     plan = df._jdf.queryExecution().optimizedPlan().toString()
-    return re.sub(r"#\d+L?", "#N", plan)
+    # expression ids, and the identity hash a folded array literal prints
+    return re.sub(r"@[0-9a-f]+\b", "@N", re.sub(r"#\d+L?", "#N", plan))
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -15,6 +15,15 @@ as-of join build, and what building it costs on the driver.
 - The construction-cost guards count py4j gateway commands sent by the
   building thread: ``as_of_join`` costs the same over a 3-column and a
   63-column left frame, and ``dispatch`` stays within a fixed budget.
+- The ingest enrichment (``pipeline/enrich.py``) takes the broadcast
+  as-of form for a dimension-scale price series: its 8 enriched frames
+  equal a union-sort build, ``LS_Opening``'s three lookups share one
+  broadcast, no plan shuffles on a symbol, and differently named views
+  of the series share one probe.
+- ``merge_parquet`` reads its target with the schema of one data file's
+  footer: no job while the merge is planned, the same schema and drift
+  errors as inference, partition discovery kept, and inference again
+  for a directory with no data file.
 
 The pinned literals were captured from the column-by-column builders
 these replaced, so they hold the rewrite to byte-identical output.
@@ -23,12 +32,14 @@ these replaced, so they hold the rewrite to byte-identical output.
 from __future__ import annotations
 
 import datetime
+import re
 import threading
 from decimal import Decimal
 
 import pyspark.sql.functions as F
 import pytest
 from py4j.clientserver import ClientServerConnection
+from pyspark.errors import AnalysisException
 from pyspark.sql import Row
 from pyspark.sql.types import (
     ArrayType,
@@ -43,9 +54,12 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from extract_transform_load_spark.operators import asof
 from extract_transform_load_spark.operators.asof import as_of_join, as_of_join_broadcast
+from extract_transform_load_spark.pipeline import enrich
 from extract_transform_load_spark.pipeline.parsers import dispatch
-from extract_transform_load_spark.schemas import BRONZE_EVENT
+from extract_transform_load_spark.schemas import BRONZE_EVENT, MP_ASSET
+from extract_transform_load_spark.sources.merge import merge_parquet, merge_plan, read_target
 
 
 def _t(s: str) -> datetime.datetime:
@@ -648,3 +662,217 @@ def test_dispatch_cost_within_budget(bronze, gateway_commands):
     dispatch(bronze)
     n = gateway_commands(lambda: dispatch(bronze))
     assert 0 < n <= DISPATCH_COMMAND_BUDGET, n
+
+
+# ---------------------------------------------------------------------------
+# ingest enrichment: the broadcast as-of form over the price series
+# ---------------------------------------------------------------------------
+
+# a tick exactly at an event time (block 5), a NULL-free series whose
+# first OSMO tick comes after the first opening, and one symbol (NLS)
+# priced only after the profit event
+PRICE_ROWS = [
+    ("USDC", _t("2024-03-01 00:00:00"), Decimal("1"), "p1"),
+    ("USDC", _t("2024-03-01 05:00:00"), Decimal("1.01"), "p1"),
+    ("USDC", _t("2024-03-01 10:00:00"), Decimal("0.99"), "p1"),
+    ("OSMO", _t("2024-03-01 01:00:00"), Decimal("0.5"), "p1"),
+    ("OSMO", _t("2024-03-01 02:00:00"), Decimal("0.55"), "p1"),
+    ("ATOM", _t("2024-02-29 23:00:00"), Decimal("10"), "p1"),
+    ("NLS", _t("2024-03-01 22:00:00"), Decimal("0.02"), "p1"),
+    ("NLS", _t("2024-03-01 23:00:00"), Decimal("0.03"), "p1"),
+]
+# table -> (symbol column, event time column), as the ingest batch prices them
+PRICED = {
+    "LS_Repayment": ("LS_payment_symbol", "LS_timestamp"),
+    "LS_Close_Position": ("LS_payment_symbol", "LS_timestamp"),
+    "LS_Liquidation": ("LS_payment_symbol", "LS_timestamp"),
+    "LP_Deposit": ("LP_symbol", "LP_timestamp"),
+    "LP_Withdraw": ("LP_symbol", "LP_timestamp"),
+    "TR_Profit": ("TR_Profit_symbol", "TR_Profit_timestamp"),
+    "TR_Rewards_Distribution": ("TR_Rewards_symbol", "TR_Rewards_timestamp"),
+}
+
+
+@pytest.fixture(scope="module")
+def price_series(spark):
+    return spark.createDataFrame(PRICE_ROWS, MP_ASSET)
+
+
+def _enriched(parsed, prices):
+    out = {"LS_Opening": enrich.enrich_ls_opening(parsed["LS_Opening"], prices)}
+    for t, (sym, ts) in PRICED.items():
+        out[t] = enrich.attach_asof_price(parsed[t], prices, symbol_col=sym, ts_col=ts, out_col="px")
+    return out
+
+
+@pytest.fixture
+def forms(monkeypatch):
+    """The as-of form each enrichment lookup dispatched to."""
+    seen = []
+    auto = enrich.as_of_join_auto
+
+    def recording(*args, **kwargs):
+        out, form = auto(*args, **kwargs)
+        seen.append(form)
+        return out, form
+
+    monkeypatch.setattr(enrich, "as_of_join_auto", recording)
+    return seen
+
+
+def _union_sort_build(monkeypatch, parsed, prices):
+    with monkeypatch.context() as m:
+        m.setattr(enrich, "as_of_join_auto", lambda *a, **k: (as_of_join(*a, **k), "union_sort"))
+        return _enriched(parsed, prices)
+
+
+def _final_plan(df) -> str:
+    """The executed physical plan (AQE's final plan) after one run."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
+def test_enrichment_matches_union_sort(bronze, price_series, forms, monkeypatch):
+    """The 8 enriched frames hold the columns (names, order, types) and
+    the rows of a union-sort build. Nullability differs in one way only:
+    union-sort's union with the right side's typed nulls marks every left
+    column nullable, and the broadcast form keeps the left frame's NOT
+    NULL columns (``LS_loan_close``, ``event_index``, ...) NOT NULL."""
+    parsed = dispatch(bronze)
+    got = _enriched(parsed, price_series)
+    assert forms == ["broadcast"] * 10
+    want = _union_sort_build(monkeypatch, parsed, price_series)
+    assert list(got) == list(want)
+    for t in want:
+        (g, g_rows), (w, w_rows) = _snapshot(got[t]), _snapshot(want[t])
+        assert g_rows == w_rows, t
+        assert [(f.name, f.dataType) for f in g] == [(f.name, f.dataType) for f in w], t
+        left = {f.name: f.nullable for f in parsed[t].schema}
+        assert [f.nullable for f in g] == [
+            f.nullable and left.get(f.name, True) for f in w
+        ], t
+    # a tick exactly at the event time prices the event
+    rows = {r["LS_repayment_height"]: r["px"] for r in got["LS_Repayment"].collect()}
+    assert rows == {4: Decimal("1.000000000000000000"), 5: Decimal("1.010000000000000000")}
+
+
+def test_enrichment_plans_share_one_broadcast(bronze, price_series, forms):
+    """LS_Opening's three lookups read one BroadcastExchange over
+    MP_Asset (the 2nd and 3rd plan as ReusedExchange), and no enriched
+    frame hash-partitions on a symbol column: the events never shuffle
+    for pricing."""
+    enriched = _enriched(dispatch(bronze), price_series)
+    assert forms == ["broadcast"] * 10
+    plans = {t: _final_plan(df) for t, df in enriched.items()}
+    opening = plans["LS_Opening"]
+    # a reused exchange prints as "ReusedExchange [...], BroadcastExchange ..."
+    assert opening.count("- BroadcastExchange") == 1, opening
+    assert opening.count("- ReusedExchange") == 2, opening
+    assert "MP_asset_symbol" in opening.split("- BroadcastExchange")[1]
+    for t, plan in plans.items():
+        assert not re.search(r"hashpartitioning\([^)]*symbol", plan), (t, plan)
+        assert "Window" not in plan, t
+
+
+def test_renamed_views_share_one_probe(spark, bronze, price_series):
+    """Two lookups into one series under different key names probe it
+    once: the memo key is the canonical plan of the key columns, which
+    drops alias names."""
+    sc = spark.sparkContext
+    left = dispatch(bronze)["LS_Opening"]
+    asof.clear_probe_memo()
+    try:
+        enrich.attach_asof_price(left, price_series, "LS_asset_symbol", "LS_timestamp", "p1")
+        assert len(asof._PROBE_MEMO) == 1
+        sc.setJobGroup("renamed-view-probe", "renamed-view-probe")
+        try:
+            enrich.attach_asof_price(left, price_series, "LS_cltr_symbol", "LS_timestamp", "p2")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup("renamed-view-probe")) == []
+        assert len(asof._PROBE_MEMO) == 1
+    finally:
+        asof.clear_probe_memo()
+
+
+# ---------------------------------------------------------------------------
+# merge targets read by their footer schema
+# ---------------------------------------------------------------------------
+
+def _target(spark, path, partition_col=None):
+    df = spark.createDataFrame(
+        [(1, 0, "a", [1, None], {"k": 1}, (1, None)), (2, 1, "b", [], {}, None)],
+        "id bigint not null, day int, v string, arr array<int>, m map<string,int>, "
+        "s struct<x: int not null, y: string>",
+    )
+    w = df.write.partitionBy(partition_col) if partition_col else df.write
+    w.parquet(path)
+
+
+def _jobs(sc, group, build):
+    sc.setJobGroup(group, group)
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("partition_col", [None, "day"])
+def test_read_target_footer_schema(spark, tmp_path, partition_col):
+    """The footer read answers as inference does, partition column
+    included, and building ``existing`` and the merge plan on it fires
+    no job (inference fires one)."""
+    sc = spark.sparkContext
+    path = str(tmp_path / "t")
+    _target(spark, path, partition_col)
+    updates = spark.createDataFrame(
+        [(1, 0, "a2", [2], {"k": 2}, (2, "y"))],
+        "id bigint, day int, v string, arr array<int>, m map<string,int>, "
+        "s struct<x: int, y: string>",
+    )
+
+    def build():
+        existing = read_target(spark, path)
+        merge_plan(existing, updates, ["id"])
+        return existing
+
+    existing, jobs = _jobs(sc, f"footer-{partition_col}", build)
+    assert jobs == []
+    inferred = spark.read.parquet(path)
+    assert existing.schema == inferred.schema
+    assert existing.columns[-1] == ("day" if partition_col else "s")
+    assert sorted(map(repr, existing.collect())) == sorted(map(repr, inferred.collect()))
+
+
+def test_merge_parquet_drift_unchanged(spark, tmp_path):
+    """Schema drift stays loud: updates that lack a target column raise,
+    and a column the target lacks is dropped, as with inference."""
+    path = str(tmp_path / "t")
+    _target(spark, path)
+    short = spark.createDataFrame([(3, 0)], "id bigint, day int")
+    with pytest.raises(AnalysisException):
+        merge_parquet(spark, path, short, ["id"])
+    wide = spark.createDataFrame(
+        [(3, 0, "c", None, None, None, "extra")],
+        "id bigint, day int, v string, arr array<int>, m map<string,int>, "
+        "s struct<x: int, y: string>, extra string",
+    )
+    merge_parquet(spark, path, wide, ["id"])
+    out = spark.read.parquet(path)
+    assert "extra" not in out.columns
+    assert sorted(r["id"] for r in out.collect()) == [1, 2, 3]
+
+
+def test_read_target_without_data_file_infers(spark, tmp_path):
+    """A directory with no data file (only a marker) is read as before,
+    by inference, which raises on it the same way."""
+    path = tmp_path / "empty"
+    path.mkdir()
+    (path / "_SUCCESS").write_text("")
+    with pytest.raises(AnalysisException) as footer:
+        read_target(spark, str(path))
+    with pytest.raises(AnalysisException) as inferred:
+        spark.read.parquet(str(path))
+    assert footer.value.getCondition() == inferred.value.getCondition()

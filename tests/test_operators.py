@@ -1166,6 +1166,33 @@ def test_asof_probe_memo_invalidated_by_table_mutation(spark, tmp_path, monkeypa
     asof.clear_probe_memo()
 
 
+def test_asof_broadcast_deep_series_matches_union_sort(spark):
+    """The broadcast pick binary-searches each key's sorted ticks: on a
+    series thousands of ticks deep, with gaps, repeated timestamps
+    (broken by right_order) and events before, between, on and after
+    the ticks, it returns union-sort's rows."""
+    from extract_transform_load_spark.operators.asof import as_of_join_broadcast
+
+    right = spark.range(9000).selectExpr(
+        "id % 3 AS k",
+        # 3 ticks per second per key, two of them sharing a timestamp
+        "TIMESTAMP'2024-01-01 00:00:00' + make_interval(0,0,0,0,0,0, CAST(id / 6 AS INT) * 2) AS pt",
+        "CAST(id AS DOUBLE) AS v",
+        "id % 5 AS ord",
+    ).filter("NOT (id % 97 = 0)")
+    left = spark.range(2000).selectExpr(
+        "id % 4 AS k",  # key 3 has no ticks
+        "TIMESTAMP'2023-12-31 23:59:00' + make_interval(0,0,0,0,0,0, id * 2) AS t",
+        "id AS eid",
+    )
+    args = dict(on=["k"], left_ts="t", right_ts="pt", value_cols=["v"], right_order="ord")
+    got = as_of_join_broadcast(left, right, **args)
+    want = as_of_join(left, right, **args)
+    assert got.columns == want.columns
+    assert sorted(got.collect()) == sorted(want.collect())
+    assert got.filter("v_asof IS NOT NULL").count() > 1000
+
+
 def test_asof_broadcast_pick_when_gate(spark):
     """pick_when pushes a row-level predicate into the broadcast pick:
     gated-out rows get NULL (skipping the O(|ticks|) fold in codegen),

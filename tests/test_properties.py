@@ -133,8 +133,9 @@ def test_asof_broadcast_equivalence(spark, events, prices):
     form (zero shuffle, sorted-tick arrays behind a broadcast join) —
     answer as LATERAL does: the latest tick by (ts, right_order) is
     picked whole, NULL fields included; a NULL key or timestamp on
-    either side matches nothing. So as_of_join_auto's choice between
-    them cannot change an answer."""
+    either side matches nothing. Both return the left frame's columns in
+    order followed by the values. So as_of_join_auto's choice between
+    them cannot change an answer or a column order."""
     from extract_transform_load_spark.operators.asof import as_of_join_broadcast
 
     def at(m):
@@ -157,9 +158,14 @@ def test_asof_broadcast_equivalence(spark, events, prices):
             if None not in (k, m, pk, pm) and pk == k and pm <= m
         ]
         want[i] = max(cands)[2:] if cands else (None, None)
+    columns = []
     for form in (as_of_join, as_of_join_broadcast):
-        got = {r["eid"]: (r["v_asof"], r["w_asof"]) for r in form(ev, pr, **args).collect()}
+        out = form(ev, pr, **args)
+        columns.append(out.columns)
+        got = {r["eid"]: (r["v_asof"], r["w_asof"]) for r in out.collect()}
         assert got == want, form.__name__
+    # both keep the left frame's column order and append the values
+    assert columns == [["eid", "k", "t", "v_asof", "w_asof"]] * 2
 
 
 edges_strategy = st.lists(
