@@ -4,13 +4,10 @@ Pervasive in the reference (SURVEY.md §2.B B22/B25: latest state snapshot
 per lease, latest price per symbol, latest lender state — e.g.
 `dao/postgre/ls_state.rs:467-471`, `lp_lender_state.rs:176-182`).
 
-Spark-first: ``row_number() OVER (PARTITION BY key ORDER BY ts DESC,
-tiebreak DESC) = 1``. One shuffle by key; AQE handles skew. For very hot
-keys at 100 TB prefer a two-phase reduce: partial ``max_by`` per map
-partition then final — Catalyst already compiles ``max_by`` to a
-TypedImperativeAggregate with map-side partials, so the ``max_by`` variant
-(``deterministic=True`` path below) is shuffle-light: it moves one row per
-key per map task instead of all rows.
+Spark-first: ``max_by`` over a struct ordering. Catalyst compiles
+``max_by`` to a TypedImperativeAggregate with map-side partials, so the
+plan is shuffle-light: it moves one row per key per map task instead of
+all rows, which also tames very hot keys at 100 TB.
 """
 
 from __future__ import annotations
@@ -18,7 +15,7 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
 
 def latest_per_key(
@@ -26,27 +23,16 @@ def latest_per_key(
     keys: Sequence[str],
     order_by: str,
     tiebreak: Sequence[str] = (),
-    use_window: bool = False,
 ) -> DataFrame:
     """Return one row per key combination — the one with the greatest
     ``(order_by, *tiebreak)`` tuple.
 
-    Default implementation is aggregation-based (``max_by`` over a struct
-    ordering), which gets map-side partial aggregation and therefore
-    shuffles O(keys) rows, not O(input) rows — the right plan at scale.
-    ``use_window=True`` switches to the row_number formulation (useful
-    when you need the rank itself).
+    Aggregation-based (``max_by`` over a struct ordering), which gets
+    map-side partial aggregation and therefore shuffles O(keys) rows,
+    not O(input) rows — the right plan at scale.
     """
     keys = list(keys)
-    tiebreak = list(tiebreak)
     order_cols = [order_by, *tiebreak]
-    if use_window:
-        w = Window.partitionBy(*keys).orderBy(*[F.col(c).desc() for c in order_cols])
-        return (
-            df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
     payload = [c for c in df.columns if c not in keys]
     ord_struct = F.struct(*[F.col(c) for c in order_cols])
     agg = [F.max_by(F.struct(*[F.col(c) for c in payload]), ord_struct).alias("__row")]

@@ -35,8 +35,8 @@ canonical multi-pass blocking).
 
 Skew guard: one cheap aggregate audits the largest block BEFORE the
 quadratic join; a block past ``max_block`` fails loudly with the block
-key named (the asof.py cap discipline — a 10M-row block would
-otherwise quietly schedule a 100-trillion-pair task at 100 TB).
+key named (a 10M-row block would otherwise quietly schedule a
+100-trillion-pair task at 100 TB).
 
 Clusters, not pairs: feed the result to
 ``operators.components.connected_components`` for transitive entity

@@ -53,7 +53,7 @@ def compute_loan_closings(
     lookup. Pass ``lpn_prices`` (``lpn_symbol, ts, price``) and carry
     ``lpn_symbol`` on the opening to reproduce that: the price is
     derived HERE by an as-of join of each contract's close_ts against
-    the series (operators/asof.py — one shuffle, no per-row probes).
+    the series (operators/asof.py, no per-row probes).
     A pre-resolved ``lpn_price_at_close`` column on the opening is the
     legacy fallback for callers that already enriched at write time.
     """
@@ -114,24 +114,25 @@ def compute_loan_closings(
         # as-of at the close timestamp — the reference's LATERAL-style
         # pick-latest (`ls_loan_closing.rs:582-664`). The LPN price
         # series is dimension-scale by construction (symbols x poll
-        # ticks — the reference keeps it in an in-memory cache), so the
-        # broadcast as-of applies: the closed-contract frame never
-        # shuffles and no window caps parallelism at |symbols| tasks.
-        from ..operators.asof import as_of_join_broadcast
+        # ticks — the reference keeps it in an in-memory cache), so
+        # as_of_join_auto takes the broadcast form: the closed-contract
+        # frame never shuffles and no window caps parallelism at
+        # |symbols| tasks. A deeper series takes union-sort.
+        from ..operators.asof import as_of_join_auto
 
         if "lpn_price_at_close" in df.columns:
             df = df.drop("lpn_price_at_close")
         # Only Short contracts consume the price (the debt revaluation
-        # below) — gate the O(|ticks|) per-row pick to that cohort so
-        # Long/liquidation rows skip the fold (round 7; the consumer's
-        # `is_short & isNotNull` test reads the resulting NULLs as
-        # "no revaluation", same as before).
+        # below), so the lookup is gated to that cohort: Long and
+        # liquidation rows skip the broadcast pick, and the consumer's
+        # `is_short & isNotNull` test reads their NULLs as "no
+        # revaluation".
         pick = None
         if "LS_position_type" in df.columns:
             pick = (
                 F.coalesce(F.col("LS_position_type"), F.lit("Long")) == "Short"
             )
-        df = as_of_join_broadcast(
+        df, _ = as_of_join_auto(
             df,
             lpn_prices.select("lpn_symbol", "ts", "price"),
             on=["lpn_symbol"],
@@ -140,7 +141,8 @@ def compute_loan_closings(
             value_cols=["price"],
             suffix="_at_close",
             pick_when=pick,
-        ).withColumnRenamed("price_at_close", "lpn_price_at_close")
+        )
+        df = df.withColumnRenamed("price_at_close", "lpn_price_at_close")
 
     z = F.lit(0).cast(AMOUNT)
     repaid = F.coalesce(F.col("repaid_stable"), z)

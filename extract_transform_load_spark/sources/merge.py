@@ -196,48 +196,30 @@ def merge_parquet(
     scale an unpartitioned merge target is itself the design error.
     """
     pk = list(pk)
+    root = target_path.rstrip("/")
     if partition_col is None:
-        existing = read_target(spark, target_path)
-        merged = merge_plan(existing, updates, pk, deletes, order_col)
-        staging = f"{target_path.rstrip('/')}__staging_{uuid.uuid4().hex}"
-        merged.write.mode("overwrite").parquet(staging)
-        # invalidate in a finally: _swap's failure modes include a
-        # half-landed state (rollback rename itself failing), and a
-        # spurious invalidation merely costs one re-probe
-        try:
-            _swap(spark, staging, target_path)
-        finally:
-            _invalidate_probe_memo()
-        return ["<all>"]
+        # one swap of the whole directory
+        existing, subdirs = read_target(spark, target_path), [""]
+    else:
+        change_parts = updates.select(partition_col)
+        if deletes is not None:
+            change_parts = change_parts.unionByName(deletes.select(partition_col))
+        touched = sorted(r[0] for r in change_parts.distinct().collect())
+        if not touched:
+            return []
+        # one swap per touched partition
+        existing = read_target(spark, target_path).filter(F.col(partition_col).isin(touched))
+        subdirs = [f"/{partition_col}={value}" for value in touched]
 
-    change_parts = updates.select(partition_col)
-    if deletes is not None:
-        change_parts = change_parts.unionByName(deletes.select(partition_col))
-    touched = sorted(r[0] for r in change_parts.distinct().collect())
-    if not touched:
-        return []
-
-    existing = read_target(spark, target_path).filter(
-        F.col(partition_col).isin(touched)
-    )
-    merged = merge_plan(existing, updates, pk, deletes, order_col)
-    staging = f"{target_path.rstrip('/')}__staging_{uuid.uuid4().hex}"
-    merged.write.mode("overwrite").partitionBy(partition_col).parquet(staging)
-
-    # invalidate in a finally once ANY partition swap may have landed:
-    # a failure after the first swap leaves the table mutated, and
-    # reaching the memo drop only on full success would preserve the
-    # exact staleness hazard this hook exists to close (review r8)
-    swapped = []
-    try:
-        for value in touched:
-            part_dir = f"{partition_col}={value}"
-            _swap(spark, f"{staging}/{part_dir}", f"{target_path.rstrip('/')}/{part_dir}")
-            swapped.append(part_dir)
-        _delete(spark, staging)
-    finally:
-        _invalidate_probe_memo()
-    return swapped
+    staging = f"{root}__staging_{uuid.uuid4().hex}"
+    writer = merge_plan(existing, updates, pk, deletes, order_col).write.mode("overwrite")
+    if partition_col is not None:
+        writer = writer.partitionBy(partition_col)
+    writer.parquet(staging)
+    for sub in subdirs:
+        _swap(spark, staging + sub, root + sub)
+    _delete(spark, staging)  # what a partition swap leaves behind
+    return ["<all>"] if partition_col is None else [sub[1:] for sub in subdirs]
 
 
 def read_target(spark: SparkSession, path: str) -> DataFrame:
@@ -283,18 +265,6 @@ def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
     return None
 
 
-def _invalidate_probe_memo() -> None:
-    """Drop the as-of dimension-scale probe memo after a table mutation
-    (round-8 verdict task 3): a session that upserts into a price series
-    and re-enriches against it must re-probe, or the broadcast cap guard
-    could judge the grown series by stale stats. The memo is global and
-    cheap to rebuild (one guarded groupBy-count per distinct plan), so
-    dropping it wholesale beats plan-matching the touched path."""
-    from ..operators.asof import clear_probe_memo
-
-    clear_probe_memo()
-
-
 def _hadoop_fs(spark: SparkSession, path: str):
     jvm = spark.sparkContext._jvm
     jsc = spark.sparkContext._jsc
@@ -317,7 +287,6 @@ def replace_dir(spark: SparkSession, staged: str, live: str) -> None:
     the public form of the MERGE writer's swap, for sinks that stage a
     full rewrite (e.g. streaming sketch maintenance)."""
     _swap(spark, staged, live)
-    _invalidate_probe_memo()
 
 
 def _swap(spark: SparkSession, staged: str, live: str) -> None:

@@ -5,20 +5,26 @@ Lands the seeded bronze chain (``perfbench/bronzegen.py``, same block
 counts and late replays), writes the silver tables from the bulk batch
 as the workload's setup does (``Pipeline.prefill``), then runs the timed
 batch (``Pipeline.batch``, tracer off, so every table is one lazy chain
-that its merge's write runs) under one Spark job group and prints:
+that its merge's write runs). The prefill and the batch each run under
+their own Spark job group, and for each the script prints:
 
-- the jobs, stages (skipped ones left out) and tasks the group fired,
-  read from the driver's status store;
-- the Janino classes compiled during the batch (``CodegenMetrics``);
-- the batch's wall time and each table's ``merge_parquet`` wall span,
-  in milliseconds from the start of the batch.
+- the wall time, and the jobs, stages (skipped ones left out) and tasks
+  the group fired, read from the driver's status store;
+- the Janino classes compiled meanwhile (``CodegenMetrics``);
+- for the prefill, the as-of dimension-scale probes: calls, memo misses
+  (each one collects a probe query) and their wall time, summed and
+  longest. The prefill's worker threads share one set of Spark local
+  properties, so the probes' jobs cannot get a job group of their own;
+  they are counted in the prefill's;
+- for the batch, each table's ``merge_parquet`` wall span, in
+  milliseconds from the start of the batch.
 
     python scripts/ingest_census.py --seed 1
 
 The counts repeat run to run for one seed; the times swing with load.
 The benchmark's modules are imported, never written: the per-table
-spans come from wrapping the workload module's ``merge_parquet`` name
-in this process.
+spans and the probe timings come from wrapping the workload module's
+``merge_parquet`` name and the as-of module's probe in this process.
 """
 
 from __future__ import annotations
@@ -38,14 +44,41 @@ import domaingen  # noqa: E402
 import ingest as workload  # noqa: E402
 from spans import Span, Tracer, _span_stats  # noqa: E402
 
+from extract_transform_load_spark.operators import asof  # noqa: E402
 from extract_transform_load_spark.sources.livefeed import land_block  # noqa: E402
 
 GROUP = "ingest-census"
+PREFILL_GROUP = "ingest-census-prefill"
 
 
 def compiles(spark) -> int:
     metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
+def census(spark, group: str, run) -> tuple[float, float, int, dict]:
+    """Run ``run()`` under job group ``group``: (start, wall ms, Janino
+    compiles, the group's job/stage/task stats)."""
+    sc = spark.sparkContext
+    c0 = compiles(spark)
+    sc.setJobGroup(group, group)
+    t0 = time.perf_counter()
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    ms = (time.perf_counter() - t0) * 1000
+    janino = compiles(spark) - c0
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    stats = _span_stats(Span(0, group, None, None, 0.0, 0.0, group), sc.statusTracker(),
+                        jsc.statusStore())
+    return t0, ms, janino, stats
+
+
+def report(label: str, ms: float, janino: int, stats: dict) -> None:
+    print(f"{label}: {ms:.0f} ms, jobs {stats['jobs']}, stages {stats['stages']}, "
+          f"tasks {stats['tasks']}, janino compiles {janino}")
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -55,7 +88,6 @@ def main(argv: list[str] | None = None) -> int:
 
     work = common.WorkDir()
     spark = common.start_session(work)
-    sc = spark.sparkContext
     merge = workload.merge_parquet
     try:
         chain = bronzegen.generate(
@@ -75,7 +107,30 @@ def main(argv: list[str] | None = None) -> int:
         pipe = workload.Pipeline(
             spark, work, spark.read.parquet(prices_path), Tracer(spark, enabled=False)
         )
-        pipe.prefill([f for _, f in prefill])
+        probe, probe_ms, misses = asof._probe_right_stats, [], []
+
+        class Memo(dict):
+            def __setitem__(self, key, stats):  # only a miss stores
+                misses.append(key)
+                super().__setitem__(key, stats)
+
+        def timed_probe(right, on):
+            t = time.perf_counter()
+            try:
+                return probe(right, on)
+            finally:
+                probe_ms.append((time.perf_counter() - t) * 1000)
+
+        asof._PROBE_MEMO = Memo(asof._PROBE_MEMO)
+        asof._probe_right_stats = timed_probe
+        try:
+            _, prefill_ms, prefill_janino, prefill_stats = census(
+                spark, PREFILL_GROUP, lambda: pipe.prefill([f for _, f in prefill])
+            )
+        finally:
+            # the batch finds the entries the prefill left, as in the workload
+            asof._probe_right_stats = probe
+            asof._PROBE_MEMO = dict(asof._PROBE_MEMO)
 
         spans: dict[str, tuple[float, float]] = {}
         lock = threading.Lock()
@@ -89,21 +144,16 @@ def main(argv: list[str] | None = None) -> int:
                     spans[os.path.basename(path)] = (t0, time.perf_counter())
 
         workload.merge_parquet = timed_merge
-        c0 = compiles(spark)
-        sc.setJobGroup(GROUP, GROUP)
-        t0 = time.perf_counter()
-        pipe.batch([f for _, f in batch], "b0")
-        batch_ms = (time.perf_counter() - t0) * 1000
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        janino = compiles(spark) - c0
+        t0, batch_ms, janino, stats = census(
+            spark, GROUP, lambda: pipe.batch([f for _, f in batch], "b0")
+        )
 
-        jsc = sc._jsc.sc()
-        jsc.listenerBus().waitUntilEmpty()
-        stats = _span_stats(Span(0, GROUP, None, None, 0.0, 0.0, GROUP), sc.statusTracker(),
-                            jsc.statusStore())
-        print(f"seed {args.seed}, {len(batch)} deliveries, batch {batch_ms:.0f} ms")
-        print(f"jobs {stats['jobs']}, stages {stats['stages']}, tasks {stats['tasks']}, "
-              f"janino compiles {janino}")
+        print(f"seed {args.seed}, {len(prefill)} prefill and {len(batch)} batch deliveries")
+        report("prefill", prefill_ms, prefill_janino, prefill_stats)
+        print(f"as-of probes: {len(probe_ms)} calls, {len(misses)} memo misses "
+              f"({len(set(misses))} distinct keys), {sum(probe_ms):.0f} ms summed, "
+              f"longest {max(probe_ms, default=0):.0f} ms")
+        report("batch", batch_ms, janino, stats)
         print("merge_parquet spans (ms from batch start):")
         for t, (a, b) in sorted(spans.items(), key=lambda kv: kv[1]):
             print(f"  {t:<24} {(a - t0) * 1000:7.0f} -> {(b - t0) * 1000:7.0f}  "

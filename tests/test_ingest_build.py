@@ -6,10 +6,10 @@ as-of join build, and what building it costs on the driver.
   that exercises all 13 event types, both interest spellings, the
   ``height`` skip path, an unparseable ``at`` and missing
   ``loan-close``/``close`` flags.
-- ``test_as_of_join_edges_pinned``: ``as_of_join`` (every direction, with
-  and without tolerance) over a left frame with array, map, struct and
-  ``decimal(38,18)`` columns; the null-fill of the nested left columns on
-  the right side of the union is in the pinned nullability.
+- ``test_as_of_join_edges_pinned``: ``as_of_join`` over a left frame with
+  array, map, struct and ``decimal(38,18)`` columns; the null-fill of the
+  nested left columns on the right side of the union is in the pinned
+  nullability.
 - ``test_as_of_join_null_keys_and_times``: both as-of forms answer rows
   and ticks with a NULL key or timestamp as LATERAL does.
 - The construction-cost guards count py4j gateway commands sent by the
@@ -55,7 +55,7 @@ from pyspark.sql.types import (
 )
 
 from extract_transform_load_spark.operators import asof
-from extract_transform_load_spark.operators.asof import as_of_join, as_of_join_broadcast
+from extract_transform_load_spark.operators.asof import as_of_join, as_of_join_auto
 from extract_transform_load_spark.pipeline import enrich
 from extract_transform_load_spark.pipeline.parsers import dispatch
 from extract_transform_load_spark.schemas import BRONZE_EVENT, MP_ASSET
@@ -440,15 +440,6 @@ RIGHT_ROWS = [
     ("B", _t("2024-01-01 02:00:00"), Decimal("20.5"), None, 1),
     ("D", _t("2024-01-01 01:00:00"), Decimal("99"), "d", 1),
 ]
-ASOF_CASES = {
-    "backward": dict(direction="backward"),
-    "forward": dict(direction="forward"),
-    "nearest": dict(direction="nearest"),
-    "backward_tol": dict(direction="backward", tolerance_seconds=1800),
-    "forward_tol": dict(direction="forward", tolerance_seconds=1800),
-    "nearest_tol": dict(direction="nearest", tolerance_seconds=1800),
-}
-
 EXPECTED_ASOF_SCHEMA = _schema(
     ('id', I, True),
     ('k', S, True),
@@ -460,8 +451,7 @@ EXPECTED_ASOF_SCHEMA = _schema(
     ('v_asof', PX, True),
     ('w_asof', S, True),
 )
-EXPECTED_ASOF: dict[str, list[tuple]] = {
-    'backward': [
+EXPECTED_ASOF: list[tuple] = [
         (1, 'A', datetime.datetime(2024, 1, 1, 0, 30), ['x', None], {'p': 1}, Row(a=1, b='one'), Decimal('1.500000000000000000'), Decimal('1.000000000000000001'), 'a0'),
         (10, None, datetime.datetime(2024, 1, 1, 1, 0), ['n'], {'n': 10}, Row(a=10, b='ten'), Decimal('10.000000000000000000'), None, None),
         (2, 'A', datetime.datetime(2024, 1, 1, 1, 0), [], {'q': None}, None, None, Decimal('3.000000000000000000'), 'a1-hi'),
@@ -472,68 +462,7 @@ EXPECTED_ASOF: dict[str, list[tuple]] = {
         (7, 'B', datetime.datetime(2024, 1, 1, 2, 0), ['b', 'b'], {'b': 7}, Row(a=7, b='seven'), Decimal('7.000000000000000000'), Decimal('20.500000000000000000'), None),
         (8, 'B', datetime.datetime(2024, 1, 1, 5, 0), None, {'b': 8}, None, Decimal('8.000000000000000000'), Decimal('20.500000000000000000'), None),
         (9, 'C', datetime.datetime(2024, 1, 1, 1, 0), ['c'], {'c': 9}, Row(a=9, b='nine'), Decimal('9.000000000000000000'), None, None),
-    ],
-    'forward': [
-        (1, 'A', datetime.datetime(2024, 1, 1, 0, 30), ['x', None], {'p': 1}, Row(a=1, b='one'), Decimal('1.500000000000000000'), Decimal('2.000000000000000000'), 'a1-lo'),
-        (10, None, datetime.datetime(2024, 1, 1, 1, 0), ['n'], {'n': 10}, Row(a=10, b='ten'), Decimal('10.000000000000000000'), None, None),
-        (2, 'A', datetime.datetime(2024, 1, 1, 1, 0), [], {'q': None}, None, None, Decimal('2.000000000000000000'), 'a1-lo'),
-        (3, 'A', datetime.datetime(2024, 1, 1, 2, 0), None, {}, Row(a=3, b=None), Decimal('-1E-18'), None, 'a3-null-v'),
-        (4, 'A', datetime.datetime(2024, 1, 1, 3, 30), ['z'], {'r': 4}, Row(a=4, b='four'), Decimal('12345678901234567890.123456789012345678'), None, None),
-        (5, 'A', datetime.datetime(2023, 12, 31, 23, 0), ['early'], {'s': 5}, Row(a=5, b='five'), Decimal('0E-18'), Decimal('1.000000000000000001'), 'a0'),
-        (6, 'B', datetime.datetime(2024, 1, 1, 1, 59), ['b'], {'b': 6}, Row(a=6, b='six'), Decimal('6.000000000000000000'), Decimal('20.500000000000000000'), None),
-        (7, 'B', datetime.datetime(2024, 1, 1, 2, 0), ['b', 'b'], {'b': 7}, Row(a=7, b='seven'), Decimal('7.000000000000000000'), Decimal('20.500000000000000000'), None),
-        (8, 'B', datetime.datetime(2024, 1, 1, 5, 0), None, {'b': 8}, None, Decimal('8.000000000000000000'), None, None),
-        (9, 'C', datetime.datetime(2024, 1, 1, 1, 0), ['c'], {'c': 9}, Row(a=9, b='nine'), Decimal('9.000000000000000000'), None, None),
-    ],
-    'nearest': [
-        (1, 'A', datetime.datetime(2024, 1, 1, 0, 30), ['x', None], {'p': 1}, Row(a=1, b='one'), Decimal('1.500000000000000000'), Decimal('1.000000000000000001'), 'a0'),
-        (10, None, datetime.datetime(2024, 1, 1, 1, 0), ['n'], {'n': 10}, Row(a=10, b='ten'), Decimal('10.000000000000000000'), None, None),
-        (2, 'A', datetime.datetime(2024, 1, 1, 1, 0), [], {'q': None}, None, None, Decimal('3.000000000000000000'), 'a1-hi'),
-        (3, 'A', datetime.datetime(2024, 1, 1, 2, 0), None, {}, Row(a=3, b=None), Decimal('-1E-18'), Decimal('3.000000000000000000'), 'a1-hi'),
-        (4, 'A', datetime.datetime(2024, 1, 1, 3, 30), ['z'], {'r': 4}, Row(a=4, b='four'), Decimal('12345678901234567890.123456789012345678'), None, 'a3-null-v'),
-        (5, 'A', datetime.datetime(2023, 12, 31, 23, 0), ['early'], {'s': 5}, Row(a=5, b='five'), Decimal('0E-18'), Decimal('1.000000000000000001'), 'a0'),
-        (6, 'B', datetime.datetime(2024, 1, 1, 1, 59), ['b'], {'b': 6}, Row(a=6, b='six'), Decimal('6.000000000000000000'), Decimal('20.500000000000000000'), None),
-        (7, 'B', datetime.datetime(2024, 1, 1, 2, 0), ['b', 'b'], {'b': 7}, Row(a=7, b='seven'), Decimal('7.000000000000000000'), Decimal('20.500000000000000000'), None),
-        (8, 'B', datetime.datetime(2024, 1, 1, 5, 0), None, {'b': 8}, None, Decimal('8.000000000000000000'), Decimal('20.500000000000000000'), None),
-        (9, 'C', datetime.datetime(2024, 1, 1, 1, 0), ['c'], {'c': 9}, Row(a=9, b='nine'), Decimal('9.000000000000000000'), None, None),
-    ],
-    'backward_tol': [
-        (1, 'A', datetime.datetime(2024, 1, 1, 0, 30), ['x', None], {'p': 1}, Row(a=1, b='one'), Decimal('1.500000000000000000'), Decimal('1.000000000000000001'), 'a0'),
-        (10, None, datetime.datetime(2024, 1, 1, 1, 0), ['n'], {'n': 10}, Row(a=10, b='ten'), Decimal('10.000000000000000000'), None, None),
-        (2, 'A', datetime.datetime(2024, 1, 1, 1, 0), [], {'q': None}, None, None, Decimal('3.000000000000000000'), 'a1-hi'),
-        (3, 'A', datetime.datetime(2024, 1, 1, 2, 0), None, {}, Row(a=3, b=None), Decimal('-1E-18'), None, None),
-        (4, 'A', datetime.datetime(2024, 1, 1, 3, 30), ['z'], {'r': 4}, Row(a=4, b='four'), Decimal('12345678901234567890.123456789012345678'), None, 'a3-null-v'),
-        (5, 'A', datetime.datetime(2023, 12, 31, 23, 0), ['early'], {'s': 5}, Row(a=5, b='five'), Decimal('0E-18'), None, None),
-        (6, 'B', datetime.datetime(2024, 1, 1, 1, 59), ['b'], {'b': 6}, Row(a=6, b='six'), Decimal('6.000000000000000000'), None, None),
-        (7, 'B', datetime.datetime(2024, 1, 1, 2, 0), ['b', 'b'], {'b': 7}, Row(a=7, b='seven'), Decimal('7.000000000000000000'), Decimal('20.500000000000000000'), None),
-        (8, 'B', datetime.datetime(2024, 1, 1, 5, 0), None, {'b': 8}, None, Decimal('8.000000000000000000'), None, None),
-        (9, 'C', datetime.datetime(2024, 1, 1, 1, 0), ['c'], {'c': 9}, Row(a=9, b='nine'), Decimal('9.000000000000000000'), None, None),
-    ],
-    'forward_tol': [
-        (1, 'A', datetime.datetime(2024, 1, 1, 0, 30), ['x', None], {'p': 1}, Row(a=1, b='one'), Decimal('1.500000000000000000'), Decimal('2.000000000000000000'), 'a1-lo'),
-        (10, None, datetime.datetime(2024, 1, 1, 1, 0), ['n'], {'n': 10}, Row(a=10, b='ten'), Decimal('10.000000000000000000'), None, None),
-        (2, 'A', datetime.datetime(2024, 1, 1, 1, 0), [], {'q': None}, None, None, Decimal('2.000000000000000000'), 'a1-lo'),
-        (3, 'A', datetime.datetime(2024, 1, 1, 2, 0), None, {}, Row(a=3, b=None), Decimal('-1E-18'), None, None),
-        (4, 'A', datetime.datetime(2024, 1, 1, 3, 30), ['z'], {'r': 4}, Row(a=4, b='four'), Decimal('12345678901234567890.123456789012345678'), None, None),
-        (5, 'A', datetime.datetime(2023, 12, 31, 23, 0), ['early'], {'s': 5}, Row(a=5, b='five'), Decimal('0E-18'), None, None),
-        (6, 'B', datetime.datetime(2024, 1, 1, 1, 59), ['b'], {'b': 6}, Row(a=6, b='six'), Decimal('6.000000000000000000'), Decimal('20.500000000000000000'), None),
-        (7, 'B', datetime.datetime(2024, 1, 1, 2, 0), ['b', 'b'], {'b': 7}, Row(a=7, b='seven'), Decimal('7.000000000000000000'), Decimal('20.500000000000000000'), None),
-        (8, 'B', datetime.datetime(2024, 1, 1, 5, 0), None, {'b': 8}, None, Decimal('8.000000000000000000'), None, None),
-        (9, 'C', datetime.datetime(2024, 1, 1, 1, 0), ['c'], {'c': 9}, Row(a=9, b='nine'), Decimal('9.000000000000000000'), None, None),
-    ],
-    'nearest_tol': [
-        (1, 'A', datetime.datetime(2024, 1, 1, 0, 30), ['x', None], {'p': 1}, Row(a=1, b='one'), Decimal('1.500000000000000000'), Decimal('1.000000000000000001'), 'a0'),
-        (10, None, datetime.datetime(2024, 1, 1, 1, 0), ['n'], {'n': 10}, Row(a=10, b='ten'), Decimal('10.000000000000000000'), None, None),
-        (2, 'A', datetime.datetime(2024, 1, 1, 1, 0), [], {'q': None}, None, None, Decimal('3.000000000000000000'), 'a1-hi'),
-        (3, 'A', datetime.datetime(2024, 1, 1, 2, 0), None, {}, Row(a=3, b=None), Decimal('-1E-18'), None, None),
-        (4, 'A', datetime.datetime(2024, 1, 1, 3, 30), ['z'], {'r': 4}, Row(a=4, b='four'), Decimal('12345678901234567890.123456789012345678'), None, 'a3-null-v'),
-        (5, 'A', datetime.datetime(2023, 12, 31, 23, 0), ['early'], {'s': 5}, Row(a=5, b='five'), Decimal('0E-18'), None, None),
-        (6, 'B', datetime.datetime(2024, 1, 1, 1, 59), ['b'], {'b': 6}, Row(a=6, b='six'), Decimal('6.000000000000000000'), Decimal('20.500000000000000000'), None),
-        (7, 'B', datetime.datetime(2024, 1, 1, 2, 0), ['b', 'b'], {'b': 7}, Row(a=7, b='seven'), Decimal('7.000000000000000000'), Decimal('20.500000000000000000'), None),
-        (8, 'B', datetime.datetime(2024, 1, 1, 5, 0), None, {'b': 8}, None, Decimal('8.000000000000000000'), None, None),
-        (9, 'C', datetime.datetime(2024, 1, 1, 1, 0), ['c'], {'c': 9}, Row(a=9, b='nine'), Decimal('9.000000000000000000'), None, None),
-    ],
-}
+]
 
 @pytest.fixture(scope="module")
 def asof_sides(spark):
@@ -543,14 +472,13 @@ def asof_sides(spark):
     )
 
 
-@pytest.mark.parametrize("case", list(ASOF_CASES))
-def test_as_of_join_edges_pinned(asof_sides, case):
+def test_as_of_join_edges_pinned(asof_sides):
     left, right = asof_sides
     out = as_of_join(
         left, right, on=["k"], left_ts="t", right_ts="pt", value_cols=["v", "w"],
-        right_order="ord", **ASOF_CASES[case],
+        right_order="ord",
     )
-    assert _snapshot(out) == _pinned(EXPECTED_ASOF_SCHEMA, EXPECTED_ASOF[case])
+    assert _snapshot(out) == _pinned(EXPECTED_ASOF_SCHEMA, EXPECTED_ASOF)
 
 
 def test_as_of_join_two_keys(asof_sides):
@@ -563,12 +491,12 @@ def test_as_of_join_two_keys(asof_sides):
     )
     assert out.columns == [*LEFT_SCHEMA.names, "k2", "v_asof", "w_asof"]
     rows = sorted(repr(tuple(r)) for r in out.drop("k2").collect())
-    assert rows == _pinned(EXPECTED_ASOF_SCHEMA, EXPECTED_ASOF["backward"])[1]
+    assert rows == _pinned(EXPECTED_ASOF_SCHEMA, EXPECTED_ASOF)[1]
 
 
 # LATERAL's `p.k = e.k AND p.ts <= e.ts` is never true for a NULL key or
 # timestamp on either side: such ticks match nothing, and such left rows
-# get NULL values, in every direction and in both physical forms.
+# get NULL values, in both physical forms.
 NULL_LEFT_ROWS = [
     (1, "A", _t("2024-01-01 01:30:00")),
     (2, None, _t("2024-01-01 01:30:00")),
@@ -582,27 +510,23 @@ NULL_RIGHT_ROWS = [
     (None, _t("2024-01-01 01:00:00"), 9.0, "null-key", 1),
     ("A", None, 8.0, "null-ts", 1),
 ]
-A1, A2, NONE = (1.0, "a1"), (2.0, "a2"), (None, None)
-EXPECTED_NULL_ASOF = {
-    "backward": {1: A1, 5: NONE},
-    "forward": {1: A2, 5: A1},
-    "nearest": {1: A1, 5: A1},
-    "broadcast": {1: A1, 5: NONE},
-}
+A1, NONE = (1.0, "a1"), (None, None)
 
 
-@pytest.mark.parametrize("case", [*ASOF_CASES, "broadcast"])
+# "backward" is union-sort (as_of_join), "broadcast" the form
+# as_of_join_auto takes for this dimension-scale series
+@pytest.mark.parametrize("case", ["backward", "broadcast"])
 def test_as_of_join_null_keys_and_times(spark, case):
     left = spark.createDataFrame(NULL_LEFT_ROWS, "id int, k string, t timestamp")
     right = spark.createDataFrame(NULL_RIGHT_ROWS, "k string, pt timestamp, v double, w string, ord long")
     args = dict(on=["k"], left_ts="t", right_ts="pt", value_cols=["v", "w"], right_order="ord")
     if case == "broadcast":
-        out = as_of_join_broadcast(left, right, **args)
+        out, form = as_of_join_auto(left, right, **args)
+        assert form == "broadcast"
     else:
-        out = as_of_join(left, right, **args, **ASOF_CASES[case])
+        out = as_of_join(left, right, **args)
     got = {r["id"]: (r["v_asof"], r["w_asof"]) for r in out.collect()}
-    want = {i: NONE for i in (2, 3, 4)} | EXPECTED_NULL_ASOF[case.removesuffix("_tol")]
-    assert got == want
+    assert got == {i: NONE for i in (2, 3, 4)} | {1: A1, 5: NONE}
 
 
 # ---------------------------------------------------------------------------
@@ -781,7 +705,7 @@ def test_renamed_views_share_one_probe(spark, bronze, price_series):
     drops alias names."""
     sc = spark.sparkContext
     left = dispatch(bronze)["LS_Opening"]
-    asof.clear_probe_memo()
+    asof._PROBE_MEMO.clear()
     try:
         enrich.attach_asof_price(left, price_series, "LS_asset_symbol", "LS_timestamp", "p1")
         assert len(asof._PROBE_MEMO) == 1
@@ -793,7 +717,7 @@ def test_renamed_views_share_one_probe(spark, bronze, price_series):
         assert list(sc.statusTracker().getJobIdsForGroup("renamed-view-probe")) == []
         assert len(asof._PROBE_MEMO) == 1
     finally:
-        asof.clear_probe_memo()
+        asof._PROBE_MEMO.clear()
 
 
 # ---------------------------------------------------------------------------

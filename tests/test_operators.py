@@ -52,7 +52,7 @@ def test_asof_basic(spark, prices):
     assert got == {1: 10.0, 2: 12.0, 3: 12.0, 4: None, 5: None}
 
 
-def test_latest_per_key_agg_and_window_agree(spark):
+def test_latest_per_key_tiebreak(spark):
     df = spark.createDataFrame(
         [
             (1, ts("2024-01-01 00:00:00"), 1, "a"),
@@ -62,10 +62,8 @@ def test_latest_per_key_agg_and_window_agree(spark):
         ],
         "k long, t timestamp, idx int, v string",
     )
-    for use_window in (False, True):
-        out = latest_per_key(df, ["k"], "t", ["idx"], use_window=use_window)
-        got = {r["k"]: r["v"] for r in out.collect()}
-        assert got == {1: "c", 2: "d"}, f"use_window={use_window}"
+    out = latest_per_key(df, ["k"], "t", ["idx"])
+    assert {r["k"]: r["v"] for r in out.collect()} == {1: "c", 2: "d"}
 
 
 def test_gap_detection_variants(spark):
@@ -537,40 +535,6 @@ def test_zorder_layout_clusters_both_dimensions(spark, sf_dir, tmp_path):
     assert z_pk < 0.5, z_pk
 
 
-def test_asof_tolerance_nulls_stale_matches(spark, prices):
-    """tolerance_seconds bounds match staleness: an event 2h after the
-    last tick attaches nothing under a 1h tolerance, but the same event
-    attaches normally without one. Fresh matches are unaffected."""
-    from extract_transform_load_spark.operators.asof import as_of_join
-
-    events = spark.createDataFrame(
-        [
-            ("A", ts("2024-01-01 01:30:00")),  # 30 min after 01:00 tick -> fresh
-            ("A", ts("2024-01-01 03:30:00")),  # 2.5 h after last tick -> stale
-            ("B", ts("2024-01-01 02:15:00")),  # 15 min after tick -> fresh
-        ],
-        "symbol string, ets timestamp",
-    )
-    out = {
-        (r["symbol"], str(r["ets"])): r["price_asof"]
-        for r in as_of_join(
-            events, prices, ["symbol"], "ets", "pts", ["price"],
-            right_order="idx", tolerance_seconds=3600,
-        ).collect()
-    }
-    assert out[("A", "2024-01-01 01:30:00")] == 12.0  # idx tie-break kept
-    assert out[("A", "2024-01-01 03:30:00")] is None
-    assert out[("B", "2024-01-01 02:15:00")] == 99.0
-
-    no_tol = {
-        (r["symbol"], str(r["ets"])): r["price_asof"]
-        for r in as_of_join(
-            events, prices, ["symbol"], "ets", "pts", ["price"], right_order="idx"
-        ).collect()
-    }
-    assert no_tol[("A", "2024-01-01 03:30:00")] == 12.0
-
-
 def test_training_shards_deterministic_and_bounded(spark, tmp_path):
     """Shards are size-capped JSONL and byte-deterministic across runs
     (resumable export); the shuffle decorrelates ingest order."""
@@ -898,9 +862,8 @@ def test_scrub_overlapping_grams_merge(spark):
 def test_asof_null_value_tick_is_the_match(spark):
     """The as-of match is the latest right ROW, NULL fields included —
     per-column fills would skip a legitimately-NULL value back to an
-    older tick, letting a stale value pass the tolerance check computed
-    against the newer tick's timestamp (and mixing fields from
-    different rows in multi-column attaches)."""
+    older tick and mix fields from different rows in multi-column
+    attaches."""
     from extract_transform_load_spark.operators.asof import as_of_join
 
     def ts(s):
@@ -916,19 +879,11 @@ def test_asof_null_value_tick_is_the_match(spark):
     left = spark.createDataFrame(
         [("A", ts("2024-01-01 00:00:03"))], "symbol string, ets timestamp"
     )
-    # tolerance 1.5s: only the ts=2 tick is fresh, and its price is NULL
     row = as_of_join(
-        left, right, ["symbol"], "ets", "pts", ["price", "qty"],
-        tolerance_seconds=1.5,
-    ).collect()[0]
-    assert row["price_asof"] is None  # NOT the stale 5.0 from ts=1
-    assert row["qty_asof"] == 2.0  # both fields from the SAME (latest) row
-
-    # without tolerance the semantics still return the latest ROW
-    row2 = as_of_join(
         left, right, ["symbol"], "ets", "pts", ["price", "qty"]
     ).collect()[0]
-    assert row2["price_asof"] is None and row2["qty_asof"] == 2.0
+    assert row["price_asof"] is None  # NOT the older 5.0 from ts=1
+    assert row["qty_asof"] == 2.0  # both fields from the SAME (latest) row
 
 
 def test_bloom_prefilter_exact_and_no_false_negatives(spark):
@@ -982,54 +937,6 @@ def test_bloom_benchmark_size_guard(spark):
         bloom_prefilter_contains(corpus, big, max_benchmark_grams=10)
 
 
-def test_asof_broadcast_dimension_scale_guard(spark, monkeypatch):
-    """as_of_join_broadcast's precondition is enforced, not trusted: a
-    right side beyond dimension scale (too many keys, or a too-deep
-    tick series on one key) must raise with a pointer to the shapes
-    that do scale — a misuse at 100 TB would otherwise be a hung job
-    (the per-left-row pick is O(|ticks|), PERFORMANCE.md's 2M x 100k
-    never-finishes shape), not an error."""
-    from extract_transform_load_spark.operators import asof
-    from extract_transform_load_spark.operators.asof import as_of_join_broadcast
-
-    left = spark.createDataFrame(
-        [(1, ts("2024-01-01 01:00:00"))], "k long, t timestamp"
-    )
-
-    many_keys = spark.range(50).selectExpr(
-        "id AS k", "TIMESTAMP'2024-01-01 00:00:00' AS pt", "CAST(id AS DOUBLE) AS v"
-    )
-    monkeypatch.setattr(asof, "MAX_KEYS", 10)
-    with pytest.raises(ValueError, match="as_of_join_auto"):
-        as_of_join_broadcast(
-            left, many_keys, on=["k"], left_ts="t", right_ts="pt",
-            value_cols=["v"],
-        )
-
-    deep_series = spark.range(50).selectExpr(
-        "CAST(1 AS LONG) AS k",
-        "TIMESTAMP'2024-01-01 00:00:00' + make_interval(0,0,0,0,0,0,id) AS pt",
-        "CAST(id AS DOUBLE) AS v",
-    )
-    monkeypatch.setattr(asof, "MAX_TICKS_PER_KEY", 10)
-    with pytest.raises(ValueError, match="O\\(\\|ticks\\|\\)"):
-        as_of_join_broadcast(
-            left, deep_series, on=["k"], left_ts="t", right_ts="pt",
-            value_cols=["v"],
-        )
-
-    # in-bounds shapes still work (both caps at their boundary)
-    ok = spark.range(10).selectExpr(
-        "id % 10 AS k", "TIMESTAMP'2024-01-01 00:00:00' AS pt",
-        "CAST(id AS DOUBLE) AS v",
-    )
-    monkeypatch.setattr(asof, "MAX_TICKS_PER_KEY", 1)
-    out = as_of_join_broadcast(
-        left, ok, on=["k"], left_ts="t", right_ts="pt", value_cols=["v"],
-    ).collect()
-    assert out[0]["v_asof"] == 1.0
-
-
 def test_asof_auto_dispatch(spark, monkeypatch):
     """as_of_join_auto picks the physical form from the measured right
     shape and both forms return identical answers (the property suite
@@ -1065,11 +972,10 @@ def test_asof_auto_dispatch(spark, monkeypatch):
 def test_asof_probe_memo_and_single_probe(spark):
     """The dimension-scale probe's economics:
 
-    1. the probe is memoized per logical plan, so a pipeline that
-       re-enriches against the same validated series pays the probe job
-       once per session, and an entry older than the TTL is re-probed;
-    2. as_of_join_auto probes once: the dispatch decision and the
-       broadcast guard share it.
+    1. the probe is memoized per canonical plan and scanned files, so a
+       pipeline that re-enriches against the same series pays the probe
+       job once per session;
+    2. as_of_join_auto probes once per call.
     """
     from extract_transform_load_spark.operators import asof
 
@@ -1084,21 +990,15 @@ def test_asof_probe_memo_and_single_probe(spark):
 
     # (1) memoization: second probe of the same plan is served from the
     # memo — prove it by planting a sentinel and reading it back.
-    asof.clear_probe_memo()
+    asof._PROBE_MEMO.clear()
     stats = asof._probe_right_stats(dim, ["k"])
     assert stats == (2, 3)
     (key,) = asof._PROBE_MEMO.keys()
-    born, _ = asof._PROBE_MEMO[key]
-    asof._PROBE_MEMO[key] = (born, (7, 7))
+    asof._PROBE_MEMO[key] = (7, 7)
     assert asof._probe_right_stats(dim, ["k"]) == (7, 7)
-    # TTL backstop: an entry older than the TTL is re-probed, so an
-    # out-of-session writer can stale the guard by at most one TTL
-    asof._PROBE_MEMO[key] = (born - asof._PROBE_MEMO_TTL - 1, (7, 7))
-    assert asof._probe_right_stats(dim, ["k"]) == (2, 3)
-    asof.clear_probe_memo()
-    assert asof._PROBE_MEMO == {}
+    asof._PROBE_MEMO.clear()
 
-    # (2) auto probes exactly once end-to-end (dispatch + guard share it)
+    # (2) auto probes exactly once end-to-end
     calls = []
     real = asof._probe_right_stats
 
@@ -1114,19 +1014,29 @@ def test_asof_probe_memo_and_single_probe(spark):
         assert len(calls) == 1
     finally:
         asof._probe_right_stats = real
-        asof.clear_probe_memo()
+        asof._PROBE_MEMO.clear()
 
 
-def test_asof_probe_memo_invalidated_by_table_mutation(spark, tmp_path, monkeypatch):
-    """The memo-staleness mitigation lives in code. A session that
-    (1) enriches against a parquet
-    price series under the cap (memo now warm), then (2) grows the
-    series past the cap through the in-repo upsert path, must (3) get
-    the loud cap error on the next enrichment — merge_parquet clears the
-    probe memo, so the guard re-probes the grown table instead of
-    trusting stale stats."""
+def test_asof_probe_memo_misses_rewritten_table(spark, tmp_path, monkeypatch):
+    """The memo needs no invalidation: it is keyed on the files the probe
+    scans, and a rewrite lists new part files. A session that (1) prices
+    against a parquet series under the tick cap (memo warm), then (2)
+    grows the series past the cap with merge_parquet, (3) dispatches a
+    fresh read of it to union-sort with the right rows, while the warm
+    entry is still in the memo. No writer in sources/ knows the memo."""
+    import ast
+    import pathlib
+
+    from extract_transform_load_spark import sources
     from extract_transform_load_spark.operators import asof
     from extract_transform_load_spark.sources.merge import merge_parquet
+
+    for py in pathlib.Path(sources.__file__).parent.glob("*.py"):
+        for node in ast.walk(ast.parse(py.read_text())):
+            if isinstance(node, ast.ImportFrom):
+                assert "operators" not in (node.module or ""), py.name
+            elif isinstance(node, ast.Import):
+                assert not any("operators" in a.name for a in node.names), py.name
 
     path = str(tmp_path / "ticks")
     spark.range(4).selectExpr(
@@ -1138,17 +1048,17 @@ def test_asof_probe_memo_invalidated_by_table_mutation(spark, tmp_path, monkeypa
     left = spark.createDataFrame(
         [(1, 0, ts("2024-01-01 01:00:00"))], "eid long, k long, t timestamp"
     )
+    args = dict(on=["k"], left_ts="t", right_ts="pt", value_cols=["v"], right_order="tick_id")
 
-    asof.clear_probe_memo()
+    asof._PROBE_MEMO.clear()
     monkeypatch.setattr(asof, "MAX_TICKS_PER_KEY", 8)
-    ticks = spark.read.parquet(path)
-    out = asof.as_of_join_broadcast(
-        left, ticks, on=["k"], left_ts="t", right_ts="pt", value_cols=["v"],
-    )
+    out, form = asof.as_of_join_auto(left, spark.read.parquet(path), **args)
+    assert form == "broadcast"
     assert out.collect()[0]["v_asof"] == 3.0
-    assert len(asof._PROBE_MEMO) == 1  # memo warm
+    warm = dict(asof._PROBE_MEMO)
+    assert len(warm) == 1
 
-    # grow the series past the cap through the in-repo mutation path
+    # grow the series past the cap through the in-repo upsert path
     updates = spark.range(20).selectExpr(
         "0L AS k",
         "TIMESTAMP'2024-01-01 00:10:00' + make_interval(0,0,0,0,0,0,id) AS pt",
@@ -1156,14 +1066,16 @@ def test_asof_probe_memo_invalidated_by_table_mutation(spark, tmp_path, monkeypa
         "1000 + id AS tick_id",
     )
     merge_parquet(spark, path, updates, pk=["tick_id"])
-    assert asof._PROBE_MEMO == {}  # mutation cleared the memo
+    assert asof._PROBE_MEMO == warm  # the write did not touch the memo
 
     grown = spark.read.parquet(path)
-    with pytest.raises(ValueError, match=r"O\(\|ticks\|\)"):
-        asof.as_of_join_broadcast(
-            left, grown, on=["k"], left_ts="t", right_ts="pt", value_cols=["v"],
-        ).collect()
-    asof.clear_probe_memo()
+    out, form = asof.as_of_join_auto(left, grown, **args)
+    assert form == "union_sort"
+    assert out.collect()[0]["v_asof"] == 119.0  # the latest grown tick <= 01:00
+    want = as_of_join(left, grown, **args).collect()
+    assert out.collect() == want
+    assert len(asof._PROBE_MEMO) == 2 and warm.items() <= asof._PROBE_MEMO.items()
+    asof._PROBE_MEMO.clear()
 
 
 def test_asof_broadcast_deep_series_matches_union_sort(spark):
@@ -1171,7 +1083,7 @@ def test_asof_broadcast_deep_series_matches_union_sort(spark):
     series thousands of ticks deep, with gaps, repeated timestamps
     (broken by right_order) and events before, between, on and after
     the ticks, it returns union-sort's rows."""
-    from extract_transform_load_spark.operators.asof import as_of_join_broadcast
+    from extract_transform_load_spark.operators.asof import as_of_join_auto
 
     right = spark.range(9000).selectExpr(
         "id % 3 AS k",
@@ -1186,18 +1098,19 @@ def test_asof_broadcast_deep_series_matches_union_sort(spark):
         "id AS eid",
     )
     args = dict(on=["k"], left_ts="t", right_ts="pt", value_cols=["v"], right_order="ord")
-    got = as_of_join_broadcast(left, right, **args)
+    got, form = as_of_join_auto(left, right, **args)
+    assert form == "broadcast"
     want = as_of_join(left, right, **args)
     assert got.columns == want.columns
     assert sorted(got.collect()) == sorted(want.collect())
     assert got.filter("v_asof IS NOT NULL").count() > 1000
 
 
-def test_asof_broadcast_pick_when_gate(spark):
-    """pick_when pushes a row-level predicate into the broadcast pick:
-    gated-out rows get NULL (skipping the O(|ticks|) fold in codegen),
-    gated-in rows match the ungated form bit-for-bit."""
-    from extract_transform_load_spark.operators.asof import as_of_join_broadcast
+def test_asof_broadcast_pick_when_gate(spark, monkeypatch):
+    """pick_when gates the lookup per row on both of as_of_join_auto's
+    branches: gated-out rows get NULL (the broadcast form skips the
+    search), gated-in rows equal the ungated answer."""
+    from extract_transform_load_spark.operators import asof
 
     left = spark.createDataFrame(
         [(i, i % 2, ts("2024-01-01 03:30:00")) for i in range(6)],
@@ -1208,24 +1121,19 @@ def test_asof_broadcast_pick_when_gate(spark):
         "TIMESTAMP'2024-01-01 00:00:00' + make_interval(0,0,0,0,id,0,0) AS pt",
         "CAST(id AS DOUBLE) AS v",
     )
-    import pyspark.sql.functions as F
-
-    full = {
-        r["eid"]: r["v_asof"]
-        for r in as_of_join_broadcast(
-            left, dim, on=["k"], left_ts="t", right_ts="pt", value_cols=["v"]
-        ).collect()
-    }
-    gated = {
-        r["eid"]: r["v_asof"]
-        for r in as_of_join_broadcast(
-            left, dim, on=["k"], left_ts="t", right_ts="pt", value_cols=["v"],
-            pick_when=F.col("eid") % 3 == 0,
-        ).collect()
-    }
-    assert set(full) == set(gated) == set(range(6))
-    for eid in range(6):
-        if eid % 3 == 0:
-            assert gated[eid] == full[eid] and gated[eid] is not None
-        else:
-            assert gated[eid] is None
+    args = dict(on=["k"], left_ts="t", right_ts="pt", value_cols=["v"])
+    for cap, form in [(asof.MAX_TICKS_PER_KEY, "broadcast"), (1, "union_sort")]:
+        monkeypatch.setattr(asof, "MAX_TICKS_PER_KEY", cap)
+        full, full_form = asof.as_of_join_auto(left, dim, **args)
+        gated, gated_form = asof.as_of_join_auto(
+            left, dim, **args, pick_when=F.col("eid") % 3 == 0
+        )
+        assert full_form == gated_form == form
+        full = {r["eid"]: r["v_asof"] for r in full.collect()}
+        gated = {r["eid"]: r["v_asof"] for r in gated.collect()}
+        assert set(full) == set(gated) == set(range(6)), form
+        for eid in range(6):
+            if eid % 3 == 0:
+                assert gated[eid] == full[eid] and gated[eid] is not None, form
+            else:
+                assert gated[eid] is None, form

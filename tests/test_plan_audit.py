@@ -402,8 +402,8 @@ def test_pipeline_queries_no_window_no_single_partition(spark, sf_dir, name):
     operator serializing per-key history through one task, and no
     single-partition exchange anywhere in the plan. q112's round-5 as-of
     LPN price lookup specifically must be the BROADCAST form
-    (operators/asof.py::as_of_join_broadcast — sorted-tick arrays behind
-    a broadcast join; the price series is dimension-scale), NOT the
+    (operators/asof.py::as_of_join_auto picks it for the dimension-scale
+    price series — sorted-tick arrays behind a broadcast join), NOT the
     union-sort window, whose |symbols|-way partitioning would cap the
     closed-contract frame's parallelism at 7 tasks."""
     plan = plan_of(spark, sf_dir, name)

@@ -136,7 +136,7 @@ def test_asof_broadcast_equivalence(spark, events, prices):
     either side matches nothing. Both return the left frame's columns in
     order followed by the values. So as_of_join_auto's choice between
     them cannot change an answer or a column order."""
-    from extract_transform_load_spark.operators.asof import as_of_join_broadcast
+    from extract_transform_load_spark.operators.asof import as_of_join_auto
 
     def at(m):
         return None if m is None else BASE + timedelta(minutes=m)
@@ -158,12 +158,13 @@ def test_asof_broadcast_equivalence(spark, events, prices):
             if None not in (k, m, pk, pm) and pk == k and pm <= m
         ]
         want[i] = max(cands)[2:] if cands else (None, None)
+    broadcast, form = as_of_join_auto(ev, pr, **args)
+    assert form == "broadcast"
     columns = []
-    for form in (as_of_join, as_of_join_broadcast):
-        out = form(ev, pr, **args)
+    for name, out in (("union_sort", as_of_join(ev, pr, **args)), ("broadcast", broadcast)):
         columns.append(out.columns)
         got = {r["eid"]: (r["v_asof"], r["w_asof"]) for r in out.collect()}
-        assert got == want, form.__name__
+        assert got == want, name
     # both keep the left frame's column order and append the values
     assert columns == [["eid", "k", "t", "v_asof", "w_asof"]] * 2
 
@@ -371,11 +372,11 @@ def test_bpe_encode_lossless_property(spark, texts):
 
 @given(events=events_strategy, prices=prices_strategy)
 @SETTINGS
-def test_asof_directions_match_pandas(spark, events, prices):
-    """forward/nearest directions must agree with pandas merge_asof
-    (the de-facto semantics reference) on arbitrary inputs; right
-    timestamps are deduped per key first (equal-ts tie order between
-    duplicate right rows is unspecified in both engines)."""
+def test_asof_backward_matches_pandas(spark, events, prices):
+    """as_of_join must agree with pandas merge_asof (backward, the
+    de-facto semantics reference) on arbitrary inputs; right timestamps
+    are deduped per key first (equal-ts tie order between duplicate
+    right rows is unspecified in both engines)."""
     import pandas as pd
 
     from extract_transform_load_spark.operators.asof import as_of_join
@@ -395,25 +396,21 @@ def test_asof_directions_match_pandas(spark, events, prices):
          "price": [r[2] for r in tick_rows]}
     ).sort_values(["pts", "k"], kind="stable").reset_index(drop=True)
 
-    for direction in ("backward", "forward", "nearest"):
-        got = {
-            (r["k"], r["ts"]): r["price_asof"]
-            for r in as_of_join(
-                ev, ticks, on=["k"], left_ts="ts", right_ts="pts",
-                value_cols=["price"], direction=direction,
-            ).collect()
+    got = {
+        (r["k"], r["ts"]): r["price_asof"]
+        for r in as_of_join(
+            ev, ticks, on=["k"], left_ts="ts", right_ts="pts", value_cols=["price"]
+        ).collect()
+    }
+    if rpdf.empty:
+        want_pairs = {(k, t): None for k, t in zip(lpdf["k"], lpdf["ts"])}
+    else:
+        m = pd.merge_asof(lpdf, rpdf, left_on="ts", right_on="pts", by="k", direction="backward")
+        want_pairs = {
+            (k, t): (None if pd.isna(p) else p)
+            for k, t, p in zip(m["k"], m["ts"], m["price"])
         }
-        if rpdf.empty:
-            want_pairs = {(k, t): None for k, t in zip(lpdf["k"], lpdf["ts"])}
-        else:
-            m = pd.merge_asof(
-                lpdf, rpdf, left_on="ts", right_on="pts", by="k", direction=direction
-            )
-            want_pairs = {
-                (k, t): (None if pd.isna(p) else p)
-                for k, t, p in zip(m["k"], m["ts"], m["price"])
-            }
-        assert got == want_pairs, direction
+    assert got == want_pairs
 
 
 funnel_events = st.lists(
